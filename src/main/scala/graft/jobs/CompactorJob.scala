@@ -13,10 +13,17 @@ import graft.state.JdbcStateStore
   *   normalization, WITA, partition keys) → partitioned parquet append →
   *   ack (or release on failure).
   *
-  * One source pass per batch (the reference reads twice — count then
-  * COPY; see SilverWriter). File-level exactly-once comes from the
-  * claim pattern, which also makes re-runs after a crash no-ops for
-  * acked keys and retries for released ones.
+  * File-level exactly-once comes from the claim pattern, which also
+  * makes re-runs after a crash no-ops for acked keys and retries for
+  * released ones. The claim table is the batch path's commit log, so
+  * the sink is never probed to find out whether a batch is new: when
+  * [[JdbcStateStore.firstClaim]] holds, the batch is one Spark job after
+  * the drift watchdog — decode, quarantine count (an `Observation`) and
+  * partitioned append together (the reference reads twice — count then
+  * COPY; see SilverWriter). Every other claim (resumed, released,
+  * reaped or drift-re-queued keys) caches the batch and goes through
+  * [[SilverWriter.writeIdempotent]], which replaces rows an earlier
+  * attempt wrote instead of duplicating them.
   */
 object CompactorJob {
 
@@ -45,6 +52,8 @@ object CompactorJob {
     if (keys.isEmpty) return Result(runId, 0, 0L, 0L) // zero-work gate
 
     try {
+      val firstAttempt = store.firstClaim(runId)
+
       // Steady-state path: read with the registry's merged schema — no
       // full inference pass. Schema-reads silently IGNORE unknown JSON
       // fields, so drift arriving after registration would be dropped;
@@ -86,22 +95,32 @@ object CompactorJob {
           requeued = prevLearn.map(store.requeueSuccessSince).getOrElse(0)
         inferred
       }
-      val bronze = (store.loadSchema(SchemaDataset) match {
+      val bronze = store.loadSchema(SchemaDataset) match {
         case Some(schema) if !relearnSchema =>
           val known = schema.fieldNames.toSet + BronzeReader.CorruptCol + "source_file"
           val sampled = BronzeReader.read(spark, Seq(keys.head)).schema.fieldNames
           if (sampled.exists(!known.contains(_))) inferAndRegister()
           else BronzeReader.read(spark, keys, BronzeReader.withCorruptColumn(schema))
         case _ => inferAndRegister()
-      }).cache()
-      try {
-        val (clean, corrupt) = BronzeReader.quarantine(bronze)
-        val nCorrupt = corrupt.count()
-        val enriched = SilverWriter.enrich(clean, district)
-        val rows = SilverWriter.writeIdempotent(spark, enriched, target)
-        store.ack(runId)
-        Result(runId, keys.size, rows, nCorrupt, newFields, requeued)
-      } finally bronze.unpersist()
+      }
+      val (rows, nCorrupt) =
+        if (firstAttempt) {
+          // No earlier attempt can have written these files: one job
+          // decodes, counts the quarantined lines and appends.
+          val (clean, corrupt) = BronzeReader.quarantineObserved(bronze)
+          (SilverWriter.write(SilverWriter.enrich(clean, district), target), corrupt())
+        } else {
+          // A retry: replace whatever an earlier attempt wrote. The
+          // replay probe re-reads the batch, so it is cached.
+          val cached = bronze.cache()
+          try {
+            val (clean, corrupt) = BronzeReader.quarantine(cached)
+            val nCorrupt = corrupt.count()
+            (SilverWriter.writeIdempotent(spark, SilverWriter.enrich(clean, district), target), nCorrupt)
+          } finally cached.unpersist()
+        }
+      store.ack(runId)
+      Result(runId, keys.size, rows, nCorrupt, newFields, requeued)
     } catch {
       case e: Throwable =>
         store.release(runId) // keys become claimable again

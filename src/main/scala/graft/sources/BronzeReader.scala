@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -51,12 +51,35 @@ object BronzeReader {
 
   /** Split a bronze batch into (clean, quarantined) rows. The frame must
     * be cached by the caller if both halves are consumed — Spark refuses
-    * to filter on the corrupt column alone over a fresh JSON scan. */
+    * to filter on the corrupt column alone over a fresh JSON scan. A
+    * caller that only needs the quarantined COUNT uses
+    * [[quarantineObserved]] instead and needs no cache. */
   def quarantine(df: DataFrame): (DataFrame, DataFrame) =
     if (!df.columns.contains(CorruptCol)) (df, df.limit(0))
     else (
       df.where(col(CorruptCol).isNull).drop(CorruptCol),
       df.where(col(CorruptCol).isNotNull))
+
+  /** Single-pass [[quarantine]]: the clean rows, and the number of
+    * quarantined rows as counted by an [[Observation]] that rides the
+    * job consuming the clean frame. Call the count only after that
+    * job's action has returned.
+    *
+    * When no clean row reaches a shuffle, adaptive execution replaces
+    * the empty stage and its observed metrics are lost; only then does
+    * the count take a pass of its own, over the cached batch. */
+  def quarantineObserved(df: DataFrame): (DataFrame, () => Long) =
+    if (!df.columns.contains(CorruptCol)) (df, () => 0L)
+    else {
+      val obs = Observation()
+      val clean = df.observe(obs, count_if(col(CorruptCol).isNotNull).as("corrupt"))
+        .where(col(CorruptCol).isNull).drop(CorruptCol)
+      def recount(): Long = {
+        val cached = df.cache()
+        try quarantine(cached)._2.count() finally { cached.unpersist(); () }
+      }
+      (clean, () => obs.get.get("corrupt").fold(recount())(_.asInstanceOf[Long]))
+    }
 
   /** Drift-tolerant union of pre-read batches (reference §2.9:
     * `union_by_name=true` across batches). */

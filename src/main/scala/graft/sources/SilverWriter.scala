@@ -38,7 +38,9 @@ object SilverWriter {
 
   /** Append a batch as partitioned parquet; returns rows written.
     * Zero-row batches write nothing but the directory skeleton —
-    * the reference's gate (`gzip-to-parquet-etl.py:252-257`). */
+    * the reference's gate (`gzip-to-parquet-etl.py:252-257`). On a
+    * zero-row batch adaptive execution replaces the empty shuffle stage
+    * and the observed count with it, so a missing count is 0. */
   def write(df: DataFrame, target: String): Long = {
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("rows"))
@@ -48,34 +50,40 @@ object SilverWriter {
       .option("compression", "snappy")
       .partitionBy(PartitionCols: _*)
       .parquet(target)
-    obs.get("rows").asInstanceOf[Long]
+    obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
   }
 
   /** Idempotent per-source-file write: any silver rows that came from
     * this batch's files on an EARLIER attempt are replaced, not
     * duplicated. This is what makes a compactor retry (crash after
-    * write, before ack) and a drift re-queue (same file deliberately
-    * re-ingested with a fuller schema) both safe — plain `append` is
-    * neither.
+    * write, before ack), a drift re-queue (same file deliberately
+    * re-ingested with a fuller schema) and a streaming micro-batch
+    * replay all safe — plain `append` is none of them. A batch whose
+    * claim proves it a first attempt skips this and calls [[write]]
+    * (CompactorJob).
     *
-    * Steady state costs one extra pruned read: the batch's partitions
-    * (typically the current day × one district) are scanned for
-    * `source_file` overlap, and when none exists — every first attempt —
-    * the write degenerates to the plain append above. Only an actual
-    * replay pays the rewrite, which is scoped to the affected partitions
-    * and published through [[PartitionPublish]] (durable stage, dynamic
+    * The replay probe costs one job over the batch (its partitions and
+    * `source_file`s, collected together) and one pruned `source_file`
+    * scan of the affected partitions (typically the current day × one
+    * district) under an explicit one-column schema, so no parquet
+    * footer is read for inference. When no earlier row of the batch's
+    * files exists, the write degenerates to the plain append above.
+    * Only an actual replay pays the mergeSchema read of the affected
+    * leaves and the rewrite, which is scoped to those partitions and
+    * published through [[PartitionPublish]] (durable stage, dynamic
     * overwrite, emptied-partition cleanup, stage kept on failure).
     *
-    * `enriched` should be backed by a cached bronze batch (CompactorJob
-    * caches it) — the partition/file-list probes re-read the batch. */
+    * `enriched` should be backed by a cached bronze batch (CompactorJob's
+    * retry path and StreamingIngest cache it) — the probe re-reads the
+    * batch. */
   def writeIdempotent(spark: SparkSession, enriched: DataFrame, target: String): Long = {
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(target))) return write(enriched, target)
 
-    val batchParts: Seq[PartitionPublish.Leaf] =
-      enriched.select(PartitionCols.map(col): _*).distinct()
-        .collect().map(r => PartitionCols.indices
-          .map(i => Option(r.get(i)).map(_.toString)): PartitionPublish.Leaf)
+    val batchKeys = enriched.select((PartitionCols :+ "source_file").map(col): _*).distinct()
+      .collect()
+    val batchParts: Seq[PartitionPublish.Leaf] = batchKeys.map(r => PartitionCols.indices
+      .map(i => Option(r.get(i)).map(_.toString)): PartitionPublish.Leaf).distinct.toSeq
     if (batchParts.isEmpty) return write(enriched, target) // zero-row gate
     // The null-hiveperiod catch-all joins the affected set for each
     // district in the batch: a replayed file's rows can land in a
@@ -87,27 +95,25 @@ object SilverWriter {
     val districts = batchParts.map(_.last).distinct
     val affected = (batchParts ++ districts.map(d => Seq(None, d): PartitionPublish.Leaf)).distinct
     val dirs = affected.map(PartitionPublish.leafDir(target, PartitionCols, _))
-      .filter(fs.exists)
+      .filter(fs.exists).map(_.toString)
     if (dirs.isEmpty) return write(enriched, target)
-    val batchFiles = enriched.select("source_file").distinct()
-      .collect().map(_.getString(0))
+    val batchFiles = batchKeys.map(_.getString(PartitionCols.size)).distinct
 
     // The replay probe reads ONLY the affected leaf directories
-    // (basePath keeps the partition columns): a whole-table mergeSchema
-    // read would run footer inference over every silver file on every
-    // batch — table-wide cost in steady state. mergeSchema within the
-    // affected leaves still matters: their files carry
-    // drift-heterogeneous schemas by design, and a footer-sampled
-    // schema would silently drop late-drifted columns from the rewrite.
-    val existingTry = scala.util.Try(
-      spark.read.option("mergeSchema", "true").option("basePath", target)
-        .parquet(dirs.map(_.toString): _*))
-    if (existingTry.isFailure) return write(enriched, target) // bare skeleton dirs
-    val existing = existingTry.get
-    val replayed = existing.where(col("source_file").isin(batchFiles: _*))
+    // (basePath keeps the partition columns), and only their
+    // `source_file` column: bare skeleton dirs read as empty, not as a
+    // failed inference.
+    val replayed = spark.read.schema("source_file string").option("basePath", target)
+      .parquet(dirs: _*).where(col("source_file").isin(batchFiles: _*))
       .limit(1).count() > 0
     if (!replayed) return write(enriched, target)
 
+    // mergeSchema within the affected leaves matters: their files carry
+    // drift-heterogeneous schemas by design, and a footer-sampled schema
+    // would silently drop late-drifted columns from the rewrite. A
+    // whole-table read would run footer inference over every silver file.
+    val existing = spark.read.option("mergeSchema", "true").option("basePath", target)
+      .parquet(dirs: _*)
     val keep = existing.where(!col("source_file").isin(batchFiles: _*))
     val combined = keep.unionByName(enriched, allowMissingColumns = true)
     val batchRows = enriched.count() // cheap: bronze batch is cached

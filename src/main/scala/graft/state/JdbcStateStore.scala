@@ -64,13 +64,20 @@ class JdbcStateStore(url: String) extends AutoCloseable {
   /** Atomically claim up to `limit` pending keys (newest upload first —
     * reference `ORDER BY upload_s3_date DESC`) for `runId`. Returns the
     * claimed keys. Re-claiming for the same runId returns its existing
-    * claims (crash-retry safe). */
+    * claims (crash-retry safe) and marks them `RESUMED`, because the
+    * earlier attempt may already have written them (see [[firstClaim]]). */
   def claim(runId: String, limit: Int, district: Option[String] = None): Seq[String] = {
     // Crash-retry: a runId that already holds claims resumes exactly that
     // batch — claiming MORE keys here would double a retried batch (the
     // retry would process old + new claims under one run id).
     val existing = claimedKeys(runId)
-    if (existing.nonEmpty) return existing
+    if (existing.nonEmpty) {
+      val ps = conn.prepareStatement(
+        s"UPDATE $Table SET compression_status = 'RESUMED' WHERE compression_run_id = ? AND compression_status IS NULL")
+      ps.setString(1, runId)
+      ps.executeUpdate(); ps.close()
+      return existing
+    }
     val districtPred = district.map(_ => " AND distrik = ?").getOrElse("")
     // The OUTER predicate re-checks `compression_run_id IS NULL`: under
     // READ COMMITTED a concurrent claimer's subquery can select the same
@@ -123,6 +130,25 @@ class JdbcStateStore(url: String) extends AutoCloseable {
     while (rs.next()) out += rs.getString(1)
     rs.close(); ps.close()
     out.toSeq
+  }
+
+  /** Whether every key `runId` holds is on its first claim, i.e. no
+    * earlier attempt can have written any of its rows to silver.
+    * `compression_status` stays NULL from `register` until a key is
+    * acked (`SUCCESS`), released (`FAILED`), reaped (`ABANDONED`),
+    * re-queued (`REQUEUED_DRIFT`) or resumed under the same run id
+    * (`RESUMED`); any of those marks a retry. This is the batch path's
+    * commit log: a first claim may append without probing silver for
+    * its files. */
+  def firstClaim(runId: String): Boolean = {
+    val ps = conn.prepareStatement(
+      s"""SELECT count(*) FROM $Table WHERE compression_run_id = ?
+         |  AND compression_status IS NOT NULL AND compression_status <> 'SUCCESS'""".stripMargin)
+    ps.setString(1, runId)
+    val rs = ps.executeQuery()
+    rs.next(); val retried = rs.getLong(1)
+    rs.close(); ps.close()
+    retried == 0
   }
 
   /** Mark a run's claims processed (reference `SET 'SUCCESS'`,

@@ -52,8 +52,10 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // cached: writeIdempotent probes the batch (partitions, files,
-        // count) before writing — uncached, each probe re-reads the
+        // cached: a micro-batch has no claim log to prove it is a first
+        // attempt, so every batch goes through writeIdempotent, whose
+        // probe re-reads the batch (partitions and files together, then
+        // the count on a replay) — uncached, each pass re-reads the
         // batch's source files.
         val cached = batch.cache()
         try {

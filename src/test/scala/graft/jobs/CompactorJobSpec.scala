@@ -9,24 +9,60 @@ import graft.state.JdbcStateStore
 /** End-to-end bronze→silver pipeline (SURVEY §5 item 4): schema drift,
   * malformed lines, mixed epoch precisions, zero-row file, partition
   * layout, corrupt-row quarantine, and claim-pattern idempotency
-  * (second run is a no-op; failed runs are re-claimable). */
+  * (second run is a no-op; failed runs are re-claimable), including the
+  * crash/replay matrix and the Spark-job budget of a first attempt. */
 class CompactorJobSpec extends SparkSpec {
 
+  private def newUrl(): String =
+    s"jdbc:derby:memory:db${scala.util.Random.nextInt(1000000)};create=true"
+
   private def newStore(): JdbcStateStore = {
-    val db = s"memory:db${scala.util.Random.nextInt(1000000)};create=true"
-    val s = new JdbcStateStore(s"jdbc:derby:$db")
+    val s = new JdbcStateStore(newUrl())
     s.ensureTable()
     s
   }
+
+  /** A store that can crash a run between its silver write and its ack
+    * (`crashAck`), and whose `release` can do nothing (`hardKill`), as
+    * when the process dies instead of unwinding. Records every
+    * [[JdbcStateStore.firstClaim]] answer, i.e. which write path each
+    * run took. */
+  private class CrashingStore extends JdbcStateStore(newUrl()) {
+    var crashAck = false
+    var hardKill = false
+    var firstClaims = Vector.empty[Boolean]
+    ensureTable()
+    override def ack(runId: String): Int =
+      if (crashAck) throw new IllegalStateException(s"crash before the ack of $runId")
+      else super.ack(runId)
+    override def release(runId: String): Int = if (hardKill) 0 else super.release(runId)
+    override def firstClaim(runId: String): Boolean = {
+      val f = super.firstClaim(runId); firstClaims :+= f; f
+    }
+  }
+
+  /** Silver rows per bronze file, keyed by the path below `site/`. */
+  private def silverRowsByFile(target: String): Map[String, Long] =
+    spark.read.parquet(target).groupBy("source_file").count().collect()
+      .map(r => r.getString(0).split("/site/").last -> r.getLong(1)).toMap
+
+  /** The clean rows of each [[Fixtures.bronzeBatch]] file (dev4 is empty). */
+  private val batchRowsByFile = Map(
+    "dev1/2024010100/2024010100.txt.gz" -> 4L,
+    "dev2/2024010100/2024010100.txt.gz" -> 2L,
+    "dev3/2024010100/2024010100.txt.gz" -> 2L)
+
+  private def registerAll(store: JdbcStateStore, keys: Seq[String], from: Long): Unit =
+    keys.zipWithIndex.foreach { case (k, i) =>
+      store.register(k, "DISTRICTB", new Timestamp(from + i))
+    }
 
   test("bronze→silver end-to-end with drift, corruption, and claim/ack") {
     val dir = tmpDir("bronze")
     val target = tmpDir("silver")
     val (keys, expectClean, expectCorrupt) = Fixtures.bronzeBatch(dir)
     val store = newStore()
-    keys.zipWithIndex.foreach { case (k, i) =>
-      store.register(k, "DISTRICTB", new Timestamp(1704067200000L + i))
-    }
+    registerAll(store, keys, 1704067200000L)
 
     val r1 = CompactorJob.run(spark, store, "run-1", "DISTRICTB", target)
     assert(r1.claimed == 4)
@@ -67,6 +103,104 @@ class CompactorJobSpec extends SparkSpec {
     }
     assert(store.claimedKeys("run-fail").isEmpty) // released
     assert(store.pendingCount() == 1) // claimable again
+    store.close()
+  }
+
+  // The single-job first attempt appends without probing silver, so it is
+  // only sound if no retry is ever taken for a first claim. Each case
+  // crashes a run after its silver write, then retries the batch the way
+  // an operator or scheduler would; every file must end up in silver
+  // exactly once.
+  Seq[(String, Boolean, CrashingStore => String)](
+    ("same-runId resume after a hard kill", true, _ => "run-1"),
+    ("releaseAbandoned after a hard kill, then a new run id", true, s => {
+      assert(s.releaseAbandoned(new Timestamp(System.currentTimeMillis() + 1)) == 4); "run-2"
+    }),
+    ("release (FAILED), then a new run id", false, _ => "run-2")
+  ).foreach { case (name, hardKill, retry) =>
+    test(s"crash between silver write and ack — $name: each file lands once") {
+      val dir = tmpDir("bronze-crash")
+      val target = tmpDir("silver-crash")
+      val (keys, expectClean, expectCorrupt) = Fixtures.bronzeBatch(dir)
+      val store = new CrashingStore
+      registerAll(store, keys, 1704067200000L)
+
+      store.crashAck = true; store.hardKill = hardKill
+      intercept[IllegalStateException](CompactorJob.run(spark, store, "run-1", "DISTRICTB", target))
+      assert(silverRowsByFile(target) == batchRowsByFile, "the crashed attempt wrote its batch")
+      store.crashAck = false; store.hardKill = false
+
+      val r = CompactorJob.run(spark, store, retry(store), "DISTRICTB", target)
+      assert(silverRowsByFile(target) == batchRowsByFile)
+      assert(r.claimed == 4 && r.rows == expectClean && r.quarantined == expectCorrupt)
+      assert(store.firstClaims == Seq(true, false), "only the crashed attempt was a first claim")
+      assert(store.pendingCount() == 0)
+      store.close()
+    }
+  }
+
+  test("a batch mixing fresh and retried keys takes the idempotent path") {
+    val dir = tmpDir("bronze-mixed")
+    val target = tmpDir("silver-mixed")
+    val (keys, expectClean, expectCorrupt) = Fixtures.bronzeBatch(dir)
+    val store = new CrashingStore
+    // dev1 and dev3 are written, then the ack fails and they are released
+    registerAll(store, Seq(keys(0), keys(2)), 1704067200000L)
+    store.crashAck = true
+    intercept[IllegalStateException](CompactorJob.run(spark, store, "run-1", "DISTRICTB", target))
+    store.crashAck = false
+    // dev4 and dev2 arrive fresh; run-2 claims them with the two retries
+    registerAll(store, Seq(keys(3), keys(1)), 1704067300000L)
+    val r = CompactorJob.run(spark, store, "run-2", "DISTRICTB", target)
+    assert(silverRowsByFile(target) == batchRowsByFile)
+    assert(r.claimed == 4 && r.rows == expectClean && r.quarantined == expectCorrupt)
+    assert(store.firstClaims == Seq(true, false))
+    store.close()
+  }
+
+  test("steady-state first claim is the watchdog inference plus one write") {
+    val target = tmpDir("silver-budget")
+    val store = newStore()
+    // the first batch registers the schema; the second is steady state
+    registerAll(store, Fixtures.bronzeBatch(tmpDir("bronze-b1"))._1, 1704067200000L)
+    CompactorJob.run(spark, store, "run-1", "DISTRICTB", target)
+    val (keys, expectClean, expectCorrupt) = Fixtures.bronzeBatch(tmpDir("bronze-b2"))
+    registerAll(store, keys, 1704067300000L)
+    assert(store.loadSchema(CompactorJob.SchemaDataset).isDefined)
+
+    var r: CompactorJob.Result = null
+    val jobs = countJobs { r = CompactorJob.run(spark, store, "run-2", "DISTRICTB", target) }
+    assert(r.newFields.isEmpty, "steady state: the watchdog found no drift")
+    assert(r.rows == expectClean && r.quarantined == expectCorrupt, "a mixed batch")
+    assert(spark.read.parquet(target).count() == 2 * expectClean)
+    // 1: the watchdog's schema inference over the newest claimed file;
+    // 2: the write's shuffle map stage (decode, quarantine count and
+    //    row count, both Observations), submitted on its own by AQE;
+    // 3: the write job over the shuffled partitions.
+    assert(jobs == 3, s"$jobs Spark jobs for one steady-state batch")
+    store.close()
+  }
+
+  test("the single-job path counts quarantined lines exactly: no corrupt column, all corrupt") {
+    val dir = tmpDir("bronze-q")
+    val target = tmpDir("silver-q")
+    val store = newStore()
+    // clean-only files on an empty registry: the inferred read has no
+    // corrupt-record column at all
+    val clean = (0 until 2).map(d => Fixtures.writeGz(s"$dir/site/c$d/2024010100.txt.gz",
+      (0 until 3).map(i => Fixtures.row(Fixtures.Base + 60 * i, s"U$d", s"D$d", 40.0 + i))))
+    assert(!BronzeReader.read(spark, clean).columns.contains(BronzeReader.CorruptCol))
+    registerAll(store, clean, 1704067200000L)
+    val r1 = CompactorJob.run(spark, store, "run-1", "DISTRICTB", target)
+    assert(r1.rows == 6 && r1.quarantined == 0)
+
+    // an all-corrupt file on the registry's schema: nothing to write
+    val broken = Fixtures.writeGz(s"$dir/site/bad/2024010100.txt.gz",
+      Seq("""{"heartbeat": 1, "unitno": BROKEN""", "not json at all", """{"unitno": "X" """))
+    registerAll(store, Seq(broken), 1704067300000L)
+    val r2 = CompactorJob.run(spark, store, "run-2", "DISTRICTB", target)
+    assert(r2.claimed == 1 && r2.rows == 0 && r2.quarantined == 3)
+    assert(spark.read.parquet(target).count() == 6)
     store.close()
   }
 
