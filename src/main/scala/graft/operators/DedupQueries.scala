@@ -117,20 +117,28 @@ object DedupQueries {
        |keep AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= $MaxShingleDf),
        |sh AS (SELECT sh0.doc_id, sh0.sh FROM sh0 JOIN keep USING (sh))""".stripMargin
 
-  /** Exact Jaccard over shingle sets for a candidate pair set
-    * (columns d1, d2) — integer set math, deterministic. */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame): DataFrame = {
+  /** Exact Jaccard for pair intersections (d1, d2, inter) over the
+    * shingle sets of `sh`: (d1, d2, inter, un, jaccard) — integer set
+    * math, deterministic. The one spelling of the formula that q17,
+    * q18, q138 and the probe paths share. */
+  private def withJaccard(inter: DataFrame, sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = sh.select(col("doc_id").as("d1"), col("sh"))
-    val b = sh.select(col("doc_id").as("d2"), col("sh"))
-    val inter = cands.join(a, "d1").join(b, Seq("d2", "sh"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
     inter
       .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
       .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
       .select(col("d1"), col("d2"), col("inter"),
         (col("n1") + col("n2") - col("inter")).as("un"),
         (col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))).as("jaccard"))
+  }
+
+  /** Exact Jaccard over shingle sets for a candidate pair set
+    * (columns d1, d2). A candidate sharing no shingle has no
+    * intersection row and drops out. */
+  private def verifyJaccard(cands: DataFrame, sh: DataFrame): DataFrame = {
+    val a = sh.select(col("doc_id").as("d1"), col("sh"))
+    val b = sh.select(col("doc_id").as("d2"), col("sh"))
+    withJaccard(cands.join(a, "d1").join(b, Seq("d2", "sh"))
+      .groupBy("d1", "d2").agg(count(lit(1)).as("inter")), sh)
   }
 
   // ------------------------------------------------------------- exact
@@ -163,22 +171,18 @@ object DedupQueries {
   private[operators] def ngramJaccardOn(docRel: DataFrame): DataFrame =
     jaccardPairsOfSh(shinglesShared(docRel))
 
-  private def jaccardPairsOfSh(sh: DataFrame): DataFrame = {
-    // One self-join computes intersections directly — no separate
-    // candidate pass (pairs sharing zero shingles never appear at all).
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.select(col("doc_id").as("d1"), col("sh"))
+  private def jaccardPairsOfSh(sh: DataFrame): DataFrame =
+    sharedPairsOfSh(sh).where(col("jaccard") >= JaccardThreshold)
+
+  /** Every pair (d1 < d2) sharing at least one capped shingle, with its
+    * exact Jaccard. One self-join computes intersections directly — no
+    * separate candidate pass (pairs sharing zero shingles never appear
+    * at all). */
+  private def sharedPairsOfSh(sh: DataFrame): DataFrame =
+    withJaccard(sh.select(col("doc_id").as("d1"), col("sh"))
       .join(sh.select(col("doc_id").as("d2"), col("sh")), "sh")
       .where(col("d1") < col("d2"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-      .select(col("d1"), col("d2"), col("inter"),
-        (col("n1") + col("n2") - col("inter")).as("un"),
-        (col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))).as("jaccard"))
-      .where(col("jaccard") >= JaccardThreshold)
-  }
+      .groupBy("d1", "d2").agg(count(lit(1)).as("inter")), sh)
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardOn(docs(spark, dir))
@@ -375,26 +379,30 @@ object DedupQueries {
     * exact arm).
     *
     * Recall is 1.0 at every tested SF with the 10×2 band geometry
-    * (DedupSpec's ≥95% floor) — found ⊆ exact holds by construction
-    * (same verification, same threshold), so the semi-join numerator is
-    * a contract check, not an approximation. */
+    * (DedupSpec's ≥95% floor).
+    *
+    * One labelled pass: every shingle-sharing pair with its exact
+    * Jaccard is full-outer-joined to the flagged banded candidates on
+    * (d1, d2), and one aggregate of `count_if`s yields every count. A
+    * found pair is a flagged pair at J ≥ 0.8, which is also an exact
+    * pair, so `n_hit` (the recall numerator: true pairs the index
+    * found) equals `n_found` by construction. A candidate sharing no
+    * shingle has no pair row and is never found, as in q18's
+    * verification. The independent checks are the DuckDB oracle
+    * ([[q138Sql]] counts each relation separately) and `DedupSpec`'s
+    * cross-check of `n_exact`/`n_found` against q17/q18. */
   def q138LshRecall(spark: SparkSession, dir: String): DataFrame = {
     val sh = shinglesShared(docs(spark, dir))
-    // Pair lists persist: each feeds 2+ of the four count branches
-    // below, and without materialization the shingle self-join / band
-    // join / exact verification would re-run per branch.
-    val exact = Caches.persistTracked(jaccardPairsOfSh(sh).select("d1", "d2"))
-    val cands = Caches.persistTracked(lshCandidatesOfBands(bandsOf(sh, fastHash = false)))
-    val found = Caches.persistTracked(verifyJaccard(cands, sh)
-      .where(col("jaccard") >= JaccardThreshold).select("d1", "d2"))
-    val hits = found.join(exact, Seq("d1", "d2"), "left_semi")
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(cands.agg(count(lit(1)).as("n_cand")))
-      .crossJoin(found.agg(count(lit(1)).as("n_found")))
-      .crossJoin(hits.agg(count(lit(1)).as("n_hit")))
+    val pairs = sharedPairsOfSh(sh)
+      .select(col("d1"), col("d2"), (col("jaccard") >= JaccardThreshold).as("ok"))
+    val cands = lshCandidatesOfBands(bandsOf(sh, fastHash = false)).withColumn("c", lit(true))
+    val c = coalesce(col("c"), lit(false))
+    val ok = coalesce(col("ok"), lit(false))
+    cands.join(pairs, Seq("d1", "d2"), "full_outer")
+      .agg(count_if(ok).as("n_exact"), count_if(c).as("n_cand"), count_if(c && ok).as("n_found"))
       .select(col("n_exact"), col("n_cand"), col("n_found"),
         round(when(col("n_exact") > 0,
-          col("n_hit").cast("double") / col("n_exact").cast("double")), 6).as("recall"),
+          col("n_found").cast("double") / col("n_exact").cast("double")), 6).as("recall"),
         round(when(col("n_cand") > 0,
           col("n_found").cast("double") / col("n_cand").cast("double")), 6).as("cand_precision"))
   }

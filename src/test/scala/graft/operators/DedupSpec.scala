@@ -218,6 +218,17 @@ class DedupSpec extends SparkSpec {
     assert(r.getDouble(4) <= 1.0 && r.getDouble(4) > 0.0, r.toString)
   }
 
+  test("q138's fused counts equal the separate q17 exact pairs and q18 verified candidates") {
+    val r = DedupQueries.q138LshRecall(spark, Dir).collect().head
+    graft.core.Caches.releaseAll()
+    val nExact = DedupQueries.ngramJaccard(spark, Dir).count()
+    graft.core.Caches.releaseAll()
+    val nFound = DedupQueries.minhashLsh(spark, Dir).count()
+    graft.core.Caches.releaseAll()
+    assert(r.getLong(0) == nExact, s"n_exact vs q17's pair count $nExact: $r")
+    assert(r.getLong(2) == nFound, s"n_found vs q18's pair count $nFound: $r")
+  }
+
   // ----------------------------------------------------------- q141
   test("q141: the signature estimator tracks exact Jaccard within theory bounds") {
     val rows = DedupQueries.q141MinhashEst(spark, Dir).collect()

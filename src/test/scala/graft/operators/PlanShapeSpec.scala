@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.SparkSpec
 
@@ -628,6 +629,38 @@ class PlanShapeSpec extends SparkSpec {
       spark.conf.unset(graft.sources.VerdictStore.DirKey)
       graft.core.Caches.releaseAll()
     }
+  }
+
+  test("q138: one labelled full outer join feeds one aggregate — no nested-loop cross join of counts") {
+    val df = DedupQueries.q138LshRecall(spark, Dir)
+    df.collect() // settle AQE
+    // The final plan alone: the adaptive root prints its initial plan
+    // after the final one, which would count every join twice.
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString()
+      case other => other.toString()
+    }
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"the four counts must come from one aggregate, not crossed 1-row aggregates:\n$p")
+    assert("FullOuter".r.findAllIn(p).size == 1,
+      s"candidates and exact pairs meet in exactly one full outer join:\n$p")
+    graft.core.Caches.releaseAll()
+  }
+
+  test("q138: job budget for one collect on a cold cache") {
+    val jobs = countJobs { DedupQueries.q138LshRecall(spark, Dir).collect(); () }
+    graft.core.Caches.releaseAll()
+    // Adaptive execution submits each shuffle, broadcast and cache stage
+    // as its own job. The 25, by group:
+    //   1  documents footer read (schema inference in Tables);
+    //   4  shingles: widen exchange, explode+distinct, cache fill;
+    //   2  df-cap: the viral-shingle count and its broadcast;
+    //   6  capped-shingle cache scans, one per consumer below;
+    //   9  pair self-join with per-doc sizes, and signatures/bands with
+    //      the band join's broadcast;
+    //   2  the labelled full outer join;
+    //   1  the final aggregate.
+    assert(jobs == 25, s"q138 ran $jobs Spark jobs")
   }
 
   test("q197: the media decon band join broadcasts the eval side — never a cartesian over hashes") {
