@@ -118,19 +118,7 @@ object Bench {
     val tWall0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Data-sized AQE starting width: wide only for large inputs (see
-      // GraftSession.initialPartitionNum for both measured regimes).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialPartitionNum(cpus.toInt, sfDir).toString)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/catalyst/scan machinery so the first timed query
     // doesn't absorb one-time JVM initialization — measured: whichever

@@ -1,6 +1,11 @@
 package graft.core
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** SparkSession factory with the engine's canonical configuration.
   *
@@ -54,7 +59,21 @@ object GraftSession {
         if (wide) 8 * shufflePartitions else shufflePartitions
     }
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
+  /** Entries of Spark's JVM-wide generated-code cache.
+    *
+    * The cache is an LRU sized once, by whichever session compiles
+    * first, so every session of the engine is built here. One pass of
+    * the `queries` benchmark mix (ten declared queries, sf0.001) uses
+    * about 170 generated classes (172 from a cold cache in
+    * `CodegenCacheSpec`). At Spark's default of 100 the LRU evicted
+    * each class before its next use, and a warm pass recompiled 160–166
+    * of them. At 1000 a warm pass compiles 4–8, all in q138. Metaspace
+    * after two passes is 159.4 MiB against 158.9 MiB at 100. The size
+    * leaves room for sessions that run more of the declared queries. */
+  val CodegenCacheEntries = 1000
+
+  def builder(master: String = "local[*]", shufflePartitions: Int = 32,
+      dataDir: String = ""): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -62,7 +81,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitionNum(shufflePartitions).toString)
+        initialPartitionNum(shufflePartitions, dataDir).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // parquet TIMESTAMP(NANOS) is otherwise rejected outright; with
       // this flag it reads as a raw long, which Tables.normalizeNanos
@@ -88,8 +108,49 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeNanos(spark.read.parquet(s"$dir/$name.parquet"))
+  /** Confs that change the schema Spark infers from the same footers. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Every leaf file's (path, length, mtime), and the schema confs. */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** Table path → the schema inferred at one fingerprint. Footer
+    * inference is a Spark job; uncached, every declared query would
+    * start one per table in its build. A table rewritten in place gets
+    * a new fingerprint and is inferred again, replacing its entry. */
+  private[core] val schemas = new ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    normalizeNanos(spark.read.schema(schema(spark, path)).parquet(path))
+  }
+
+  /** Inference runs outside any map lock: two racing misses both infer,
+    * and the later `put` wins with a schema as correct as the other. */
+  private def schema(spark: SparkSession, path: String): StructType = {
+    val fp = fingerprint(spark, path)
+    Option(schemas.get(path)).filter(_._1 == fp).map(_._2).getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(path, (fp, s))
+      s
+    }
+  }
+
+  private def fingerprint(spark: SparkSession, path: String): Fingerprint = {
+    val p = new Path(path)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: FileNotFoundException => } // inference reports the missing path
+    (files.result().sorted, SchemaConfs.map(spark.conf.getOption))
+  }
 
   /** Parquet TIMESTAMP(NANOS) columns arrive as raw long nanos (see the
     * `nanosAsLong` flag in [[GraftSession]]); truncate to µs wall-clock

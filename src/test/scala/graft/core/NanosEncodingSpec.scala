@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,24 +17,9 @@ import graft.operators.CoreQueries
   */
 class NanosEncodingSpec extends SparkSpec {
 
-  /** Writes an events-shaped table whose `ts` is a raw long of NANOS —
-    * byte-for-byte what a TIMESTAMP(NANOS) parquet column looks like to
-    * the engine under `spark.sql.legacy.parquet.nanosAsLong=true`. */
   private def writeNanosFixture(): String = {
-    import spark.implicits._
-    val baseUs = java.time.LocalDateTime
-      .parse("2024-01-01T12:00:00")
-      .toInstant(java.time.ZoneOffset.UTC)
-      .toEpochMilli * 1000L
-    val rows = (0L until 100L).map { i =>
-      // 123 trailing nanos: truncation (not rounding) must drop them.
-      (i, (baseUs + i * 1000000L) * 1000L + 123L,
-        i % 7, if (i % 2 == 0) "error" else "view", i * 0.5, s"p$i")
-    }
     val dir = tmpDir("nanos_fixture")
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .repartition(2)
-      .write.parquet(s"$dir/events.parquet")
+    NanosEncodingSpec.nanosEvents(spark).write.parquet(s"$dir/events.parquet")
     dir
   }
 
@@ -60,5 +46,27 @@ class NanosEncodingSpec extends SparkSpec {
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     assert(events.schema("ts").dataType.typeName == "timestamp_ntz",
       s"µs-era ts must read as timestamp_ntz, got ${events.schema("ts").dataType}")
+  }
+}
+
+object NanosEncodingSpec {
+
+  /** An events-shaped table whose `ts` is a raw long of NANOS —
+    * byte-for-byte what a TIMESTAMP(NANOS) parquet column looks like to
+    * the engine under `spark.sql.legacy.parquet.nanosAsLong=true`.
+    * Row `i` is at 2024-01-01 12:00:00 + `i` seconds, plus 123 ns. */
+  def nanosEvents(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val baseUs = java.time.LocalDateTime
+      .parse("2024-01-01T12:00:00")
+      .toInstant(java.time.ZoneOffset.UTC)
+      .toEpochMilli * 1000L
+    val rows = (0L until 100L).map { i =>
+      // 123 trailing nanos: truncation (not rounding) must drop them.
+      (i, (baseUs + i * 1000000L) * 1000L + 123L,
+        i % 7, if (i % 2 == 0) "error" else "view", i * 0.5, s"p$i")
+    }
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartition(2)
   }
 }

@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.GraftSession
 
 /** The extensions entry point must make `vector_dot` a first-class SQL
   * function in a fresh session — resolvable by name, codegen'd, and
@@ -18,12 +19,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
   // `spark.sql.extensions=graft.plans.GraftExtensions` is STATIC and
   // only applies when it reaches a NEW SparkContext (spark-submit
   // --conf), so in a shared-context test JVM it would silently no-op.
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-extensions-spec")
+  // Built by GraftSession like the shared session: if this suite
+  // compiles first, its confs size the JVM-wide codegen cache.
+  private lazy val spark = GraftSession.builder("local[2]", 2)
     .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
     .create()
 
   test("vector_dot resolves from plain SQL and computes the dot product") {
