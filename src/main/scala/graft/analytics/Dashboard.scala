@@ -49,7 +49,11 @@ object Dashboard {
 
   /** The flagship per-minute deviation aggregation, exactly the
     * reference's `group_by_dynamic` shape incl. string-min
-    * any-bad-status-wins semantics (A3/A5, `streamlit-app.py:155-169`). */
+    * any-bad-status-wins semantics (A3/A5, `streamlit-app.py:155-169`).
+    *
+    * The result is at most minutes × selected units rows, so it is
+    * sorted in one partition: a global `orderBy` would range-partition
+    * it, which costs a sampling job and an exchange per call. */
   def perMinuteDeviation(slice: DataFrame): DataFrame =
     slice
       .groupBy(
@@ -69,5 +73,6 @@ object Dashboard {
         min(col("speedsource")).as("speedsource"))
       .withColumn("minute", col("window.start"))
       .drop("window")
+      .coalesce(1)
       .orderBy("minute", "unitno")
 }

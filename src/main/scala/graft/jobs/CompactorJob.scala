@@ -17,10 +17,11 @@ import graft.state.JdbcStateStore
   * makes re-runs after a crash no-ops for acked keys and retries for
   * released ones. The claim table is the batch path's commit log, so
   * the sink is never probed to find out whether a batch is new: when
-  * [[JdbcStateStore.firstClaim]] holds, the batch is one Spark job after
-  * the drift watchdog — decode, quarantine count (an `Observation`) and
-  * partitioned append together (the reference reads twice — count then
-  * COPY; see SilverWriter). Every other claim (resumed, released,
+  * [[JdbcStateStore.firstClaim]] holds, the batch is one Spark job —
+  * decode, quarantine count (an `Observation`) and partitioned append
+  * together (the reference reads twice — count then COPY; see
+  * SilverWriter) — after the drift watchdog, which reads one file's key
+  * names on the driver. Every other claim (resumed, released,
   * reaped or drift-re-queued keys) caches the batch and goes through
   * [[SilverWriter.writeIdempotent]], which replaces rows an earlier
   * attempt wrote instead of duplicating them.
@@ -59,14 +60,16 @@ object CompactorJob {
       // fields, so drift arriving after registration would be dropped;
       // the reference avoids that by re-inferring every batch
       // (`sample_size=-1`), i.e. a second scan of every byte. Middle
-      // ground here: a per-batch WATCHDOG infers exactly ONE claimed
-      // file (the newest — claims are newest-first, and new firmware
-      // fields show up in new files) and diffs field names against the
-      // registry; only when a new field appears does the batch fall
-      // back to full inference + registry merge. Cost in steady state:
-      // one file, not the batch. BLIND-WINDOW RECOVERY: a field drifting
-      // in only a NON-sampled file of a batch is dropped from that
-      // batch's silver rows. When a LATER inference discovers the field,
+      // ground here: a per-batch WATCHDOG lists the top-level key names
+      // of exactly ONE claimed file (the newest — claims are
+      // newest-first, and new firmware fields show up in new files) on
+      // the driver ([[BronzeReader.fieldNames]]: no Spark job, no type
+      // inference) and diffs them against the registry; only when a new
+      // name appears does the batch fall back to full inference +
+      // registry merge. Cost in steady state: one file's names, not the
+      // batch. BLIND-WINDOW RECOVERY: a field drifting in only a
+      // NON-sampled file of a batch is dropped from that batch's silver
+      // rows. When a LATER inference discovers the field,
       // the fix is automatic: every key acked since the registry last
       // changed is re-queued (claimable again), and because the silver
       // write is idempotent per source file, the re-ingest replaces the
@@ -98,8 +101,7 @@ object CompactorJob {
       val bronze = store.loadSchema(SchemaDataset) match {
         case Some(schema) if !relearnSchema =>
           val known = schema.fieldNames.toSet + BronzeReader.CorruptCol + "source_file"
-          val sampled = BronzeReader.read(spark, Seq(keys.head)).schema.fieldNames
-          if (sampled.exists(!known.contains(_))) inferAndRegister()
+          if (BronzeReader.fieldNames(spark, keys.head).exists(!known.contains(_))) inferAndRegister()
           else BronzeReader.read(spark, keys, BronzeReader.withCorruptColumn(schema))
         case _ => inferAndRegister()
       }

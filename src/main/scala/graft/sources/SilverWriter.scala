@@ -15,11 +15,16 @@ import graft.functions.TimeExprs
   * here an [[Observation]] rides along with the write job, so the
   * zero-row gate and row-count metric cost nothing extra.
   *
-  * Scale: `repartition(partitionCols)` before the write produces one
-  * task's worth of output per (date, district) partition per batch —
+  * Files per batch: the write has no exchange, so each scan task
+  * encodes and writes its own rows, at most one file per (scan task,
+  * partition) — Spark's planned write sorts each task's rows by the
+  * partition columns. A batch therefore adds up to tasks × partitions
+  * files, and the daily [[graft.jobs.CompactionJob]] merges them toward
   * the reference's 150–250 MB file-size target
-  * (`README-compacterv1.md:104`) — instead of tasks × partitions small
-  * files. Skewed partitions are re-split by AQE.
+  * (`README-compacterv1.md:104`). A `repartition(partitionCols)` here
+  * would hash every row of an hourly batch — one (date, district) —
+  * to one reducer, and adaptive execution never splits a user
+  * repartition: the whole hour would be encoded by one task.
   */
 object SilverWriter {
 
@@ -38,19 +43,16 @@ object SilverWriter {
 
   /** Append a batch as partitioned parquet; returns rows written.
     * Zero-row batches write nothing but the directory skeleton —
-    * the reference's gate (`gzip-to-parquet-etl.py:252-257`). On a
-    * zero-row batch adaptive execution replaces the empty shuffle stage
-    * and the observed count with it, so a missing count is 0. */
+    * the reference's gate (`gzip-to-parquet-etl.py:252-257`). */
   def write(df: DataFrame, target: String): Long = {
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("rows"))
-      .repartition(PartitionCols.map(col): _*)
       .write
       .mode("append")
       .option("compression", "snappy")
       .partitionBy(PartitionCols: _*)
       .parquet(target)
-    obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** Idempotent per-source-file write: any silver rows that came from

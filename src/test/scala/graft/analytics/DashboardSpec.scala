@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -48,5 +49,35 @@ class DashboardSpec extends SparkSpec {
     assert(m0.getAs[String]("camcabinstatus") == "BAD") // lexicographic min = any-bad-wins
     assert(m0.getAs[String]("gpsstatus") == "false")
     assert(agg(1).getAs[Double]("avg_gpsspeed") == 44.0)
+  }
+
+  test("perMinuteDeviation sorts in one partition: same rows and order, no range exchange, 2 jobs") {
+    // three units whose minutes interleave, stored as partitioned parquet like silver
+    val path = tmpDir("dash-silver")
+    (0 until 3).map(u => silver.where(col("unitno") === "LD772")
+        .withColumn("unitno", lit(s"U$u"))
+        .withColumn("datetime_wita", timestamp_seconds(col("epoch") + 40 * u)))
+      .reduce(_ union _)
+      .write.partitionBy("hiveperiod", "dstrct_code").parquet(path)
+    val lake = spark.read.parquet(path)
+    def minuteSlice = Dashboard.perMinuteDeviation(Dashboard.telemetrySlice(
+      lake, "2024-01-01", "DISTRICTB", Seq("U0", "U1", "U2"), (0, 23)))
+
+    // the same aggregate sorted globally over several partitions
+    val expected = minuteSlice.repartition(3).orderBy("minute", "unitno").collect().toSeq
+    val df = minuteSlice
+    var got: Seq[org.apache.spark.sql.Row] = Nil
+    val jobs = countJobs { got = df.collect().toSeq }
+    assert(got.size == 6 && got == expected)
+    val keys = got.map(r => (r.getAs[java.sql.Timestamp]("minute").getTime, r.getAs[String]("unitno")))
+    assert(keys == keys.sorted)
+
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString()
+      case other => other.toString()
+    }
+    assert(!plan.toLowerCase.contains("rangepartitioning"), s"a range exchange sorts the slice:\n$plan")
+    // the aggregate's shuffle map stage and the sorted result: no sampling job
+    assert(jobs == 2, s"$jobs Spark jobs for one slice")
   }
 }

@@ -158,7 +158,7 @@ class CompactorJobSpec extends SparkSpec {
     store.close()
   }
 
-  test("steady-state first claim is the watchdog inference plus one write") {
+  test("steady-state first claim is one Spark job") {
     val target = tmpDir("silver-budget")
     val store = newStore()
     // the first batch registers the schema; the second is steady state
@@ -173,11 +173,10 @@ class CompactorJobSpec extends SparkSpec {
     assert(r.newFields.isEmpty, "steady state: the watchdog found no drift")
     assert(r.rows == expectClean && r.quarantined == expectCorrupt, "a mixed batch")
     assert(spark.read.parquet(target).count() == 2 * expectClean)
-    // 1: the watchdog's schema inference over the newest claimed file;
-    // 2: the write's shuffle map stage (decode, quarantine count and
-    //    row count, both Observations), submitted on its own by AQE;
-    // 3: the write job over the shuffled partitions.
-    assert(jobs == 3, s"$jobs Spark jobs for one steady-state batch")
+    // The write job alone: decode, quarantine count and row count (both
+    // Observations) and the partitioned append, with no exchange. The
+    // watchdog lists the newest file's key names on the driver.
+    assert(jobs == 1, s"$jobs Spark jobs for one steady-state batch")
     store.close()
   }
 
@@ -198,9 +197,32 @@ class CompactorJobSpec extends SparkSpec {
     val broken = Fixtures.writeGz(s"$dir/site/bad/2024010100.txt.gz",
       Seq("""{"heartbeat": 1, "unitno": BROKEN""", "not json at all", """{"unitno": "X" """))
     registerAll(store, Seq(broken), 1704067300000L)
-    val r2 = CompactorJob.run(spark, store, "run-2", "DISTRICTB", target)
+    var r2: CompactorJob.Result = null
+    val jobs = countJobs { r2 = CompactorJob.run(spark, store, "run-2", "DISTRICTB", target) }
     assert(r2.claimed == 1 && r2.rows == 0 && r2.quarantined == 3)
+    assert(jobs == 1, s"$jobs Spark jobs: both counts must ride the write job")
     assert(spark.read.parquet(target).count() == 6)
+    store.close()
+  }
+
+  test("a zero-byte newest file passes the watchdog") {
+    val dir = tmpDir("bronze-zero")
+    val target = tmpDir("silver-zero")
+    val store = newStore()
+    val (keys, expectClean, _) = Fixtures.bronzeBatch(dir)
+    registerAll(store, keys, 1704067200000L)
+    CompactorJob.run(spark, store, "run-1", "DISTRICTB", target)
+    // an upload that created the object but sent no bytes, claimed first
+    val zero = new java.io.File(s"$dir/site/dev5/2024010101.txt.gz")
+    zero.getParentFile.mkdirs()
+    assert(zero.createNewFile())
+    val one = Fixtures.writeGz(s"$dir/site/dev6/2024010101.txt.gz",
+      Seq(Fixtures.row(Fixtures.Base + 3600, "LD774", "SLS30I006", 41.0)))
+    registerAll(store, Seq(one, zero.toURI.toString), 1704067300000L)
+    val r = CompactorJob.run(spark, store, "run-2", "DISTRICTB", target)
+    assert(r.claimed == 2 && r.rows == 1 && r.quarantined == 0 && r.newFields.isEmpty)
+    assert(spark.read.parquet(target).count() == expectClean + 1)
+    assert(store.pendingCount() == 0)
     store.close()
   }
 
