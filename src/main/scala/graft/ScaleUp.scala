@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derive a larger scale factor from an existing testdata dir by k-way
@@ -36,13 +36,7 @@ object ScaleUp {
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt, src).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.core.Tables(spark, src, "documents")

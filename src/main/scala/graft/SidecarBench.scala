@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prices the digest sidecar at the design-point file count (VERDICT
   * r18 next-3): the r18 claims — 1M-entry cap ≈ ~200 MB of driver
   * strings, 48 B/record on disk, load-once per process — were argued
@@ -35,10 +33,7 @@ object SidecarBench {
     val loadFiles = args.lift(2).map(_.toInt).getOrElse(60) // < CompactAt: no rewrite
     val compactFiles = 100 // > CompactAt: the rewrite triggers
 
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("local[2]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sources.FileDigests
 

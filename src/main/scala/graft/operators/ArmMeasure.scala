@@ -1,7 +1,7 @@
 package graft.operators
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, GraftSession, Tables}
 
 /** Reproduction harness for SCALE.md's arm-picker table: times q168's
   * incremental probe, q151-style full recompute, and q169's picker in
@@ -31,15 +31,7 @@ object ArmMeasure {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialPartitionNum(cpus.toInt, sfDir).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = Tables(spark, sfDir, "documents")
     d.count() // warm scan

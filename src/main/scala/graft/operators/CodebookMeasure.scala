@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, GraftSession, Tables}
 
 /** Reproduction harness for SCALE.md's trained-codebook economics: the
   * k-means training job ([[SimilarityQueries.scaledCodebookTrained]],
@@ -17,13 +15,7 @@ object CodebookMeasure {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val e = Tables(spark, sfDir, "embeddings")
     val n = e.count() // warm scan + the sizing input

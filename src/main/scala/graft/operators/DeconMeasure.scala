@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, GraftSession, Tables}
 
 /** Reproduction harness for SCALE.md's decon-matrix scale points: the
   * attribution matrix's cost is contamination volume × benchmarks
@@ -20,15 +19,7 @@ object DeconMeasure {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = sys.env.get("SPARK_GRAFT_ARM_ONLY").map(_.split(",").toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.core.GraftSession.initialPartitionNum(cpus.toInt, sfDir).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = Tables(spark, sfDir, "documents")
     d.count() // warm scan

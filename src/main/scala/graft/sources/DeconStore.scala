@@ -1,8 +1,5 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,12 +11,10 @@ import org.apache.spark.sql.functions._
   * derived relations are computed once from that benchmark's docs
   * alone and every batch probes the union.
   *
-  * Layout under one root (one partition per benchmark, the same
-  * advance/retire contract as the day-partitioned sibling stores):
+  * One [[PartitionedStore]] partition per benchmark:
   * {{{
   *   <dir>/fps/bench=<name>/    (doc_id, fp)  winnow fingerprints
   *   <dir>/grams/bench=<name>/  (g)      distinct RAW K-char grams
-  *   <dir>/meta/bench=<name>/   (n_docs, digest)  commit point, LAST
   * }}}
   *
   * Raw grams (not hashes) are stored deliberately: the eval side is
@@ -37,15 +32,9 @@ import org.apache.spark.sql.functions._
   * could not be: dropping one benchmark's partition cannot delete a
   * gram another live benchmark still contributes.
   *
-  * Freshness: per-benchmark [[SignatureStore.digestOf]] metas combine
-  * by (sum n, XOR digest) — doc-level XOR is subset-decomposable — and
-  * [[openFresh]] compares the combination against the OFFERED eval
-  * corpus, so advance/retire heal the store digest without touching
-  * other partitions' sources. [[advanceBenchmark]] never re-reads a
-  * prior benchmark; [[retireBenchmark]] never decodes anything. A
-  * torn advance (crash before its meta row) leaves the combined
-  * digest mismatched → stale → inline recompute: cost, never a wrong
-  * span.
+  * The digest is [[SignatureStore.digestOf]] over each benchmark's
+  * eval docs, so [[advanceBenchmark]] never re-reads a prior benchmark
+  * and [[retireBenchmark]] never decodes anything.
   */
 object DeconStore {
 
@@ -55,101 +44,54 @@ object DeconStore {
   /** Session conf: skip the digest freshness scan and trust the store. */
   val TrustKey = "spark.graft.deconstore.trust"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val layout = new PartitionedStore("deconstore", "bench", Seq("fps", "grams"), Seq("docs"))
 
   /** Build the whole store from the full eval corpus, replacing prior
     * content — the one-shot face (equivalently: advance of a single
     * benchmark named `all` into an empty store). */
   def build(evalRel: DataFrame, dir: String): Unit = {
-    StoreLease.checkWrite(evalRel.sparkSession, dir)
     StoreLease.replaceContents(evalRel.sparkSession, dir)
     advanceBenchmark("all", evalRel, dir)
   }
 
   /** Add (or replace) ONE benchmark's partitions from that benchmark's
-    * docs alone. Meta lands LAST — the commit point; replaying a
-    * crashed advance converges (retire-then-rewrite of one partition).
-    * The input is pinned across the three derivations so a
-    * non-deterministic eval plan cannot tear fps/grams/digest apart —
-    * same argument as WinnowStore.writeDay. */
-  def advanceBenchmark(name: String, benchRel: DataFrame, dir: String): Unit = {
-    val spark = benchRel.sparkSession
-    retireBenchmark(name, spark, dir)
-    val pinned = benchRel.persist()
-    try {
-      // DOC-LEVEL fps (r13): the fp relation keeps its doc_id so the
-      // decon arm picker can price the matched eval sliver's char mass
-      // from the store alone (SubstringDedup.deconProbeOrRecompute);
-      // probe consumers distinct the fp column themselves, so the
-      // richer schema costs them nothing but the winnow-density rows.
-      graft.operators.SubstringDedup.charWinnowOf(pinned)
-        .select("doc_id", "fp")
-        .write.parquet(s"$dir/fps/bench=$name")
-      graft.operators.SubstringDedup.rawGramsOf(pinned)
-        .select("g").distinct()
-        .write.parquet(s"$dir/grams/bench=$name")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = SignatureStore.digestOfPinned(pinned)
-      spark.createDataFrame(Seq((n, dg))).toDF("n_docs", "digest")
-        .coalesce(1).write.parquet(s"$dir/meta/bench=$name")
-    } finally pinned.unpersist(blocking = false): Unit
-  }
+    * docs alone. The input is pinned across the three derivations so a
+    * non-deterministic eval plan cannot tear fps/grams/digest apart. */
+  def advanceBenchmark(name: String, benchRel: DataFrame, dir: String): Unit =
+    layout.advance(benchRel.sparkSession, dir, name) {
+      val pinned = benchRel.persist()
+      try {
+        // DOC-LEVEL fps (r13): the fp relation keeps its doc_id so the
+        // decon arm picker can price the matched eval sliver's char mass
+        // from the store alone (SubstringDedup.deconProbeOrRecompute);
+        // probe consumers distinct the fp column themselves, so the
+        // richer schema costs them nothing but the winnow-density rows.
+        layout.write(graft.operators.SubstringDedup.charWinnowOf(pinned)
+          .select("doc_id", "fp"), dir, "fps", name)
+        layout.write(graft.operators.SubstringDedup.rawGramsOf(pinned)
+          .select("g").distinct(), dir, "grams", name)
+        Seq(SignatureStore.digestOfPinned(pinned))
+      } finally pinned.unpersist(blocking = false): Unit
+    }
 
-  /** Drop ONE benchmark's partitions. Meta goes FIRST (the inverse
-    * commit order: a crash mid-retire leaves orphan fps/grams whose
-    * digest the combined meta no longer covers → stale → inline). */
-  def retireBenchmark(name: String, spark: SparkSession, dir: String): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/meta/bench=$name"), true): Unit
-    f.delete(new Path(s"$dir/fps/bench=$name"), true): Unit
-    f.delete(new Path(s"$dir/grams/bench=$name"), true): Unit
-  }
+  /** Drop ONE benchmark's partitions. */
+  def retireBenchmark(name: String, spark: SparkSession, dir: String): Unit =
+    layout.retire(spark, dir, name)
 
   /** The stored (fps, grams) union IF configured and the per-benchmark
-    * metas combine to this exact eval corpus — None (driver-log line,
-    * never an error) on key unset, unreadable store, or digest
-    * mismatch. A store whose every benchmark was retired serves EMPTY
-    * relations against an empty eval corpus, not a schema error. */
+    * metas combine to this exact eval corpus; None otherwise. A store
+    * whose every benchmark was retired serves EMPTY relations against
+    * an empty eval corpus. Only live benchmarks are read: orphan
+    * fps/grams of a benchmark no longer in the suite would report
+    * spans against it — a wrong answer, not a cost. */
   def openFresh(evalRel: DataFrame): Option[(DataFrame, DataFrame)] = {
     val spark = evalRel.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      val parts = fs(spark, dir).listStatus(new Path(s"$dir/meta"))
-        .filter(_.getPath.getName.startsWith("bench=")).map(_.getPath.toString)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (parts.isEmpty) {
-        // zero live benchmarks: fresh iff the offered corpus is empty too
-        if (!trusted && SignatureStore.digestOf(evalRel) != ((0L, 0L))) {
-          System.err.println(s"[deconstore] $dir has no live benchmarks — recomputing inline")
-          None
-        } else Some((
-          spark.range(0).select(col("id").as("doc_id"), col("id").as("fp")),
-          spark.range(0).select(col("id").cast("string").as("g"))))
-      } else {
-        val m = spark.read.parquet(parts: _*)
-          .agg(coalesce(sum("n_docs"), lit(0L)),
-            coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-        val stored = (m.getLong(0), m.getLong(1))
-        if (!trusted && SignatureStore.digestOf(evalRel) != stored) {
-          System.err.println(s"[deconstore] $dir is stale for this eval corpus — recomputing inline")
-          None
-        } else {
-          // Read ONLY partitions with a live meta: a crash mid-retire
-          // leaves orphan fps/grams whose meta is already gone, and
-          // serving them would report spans against a benchmark no
-          // longer in the suite — a wrong answer, not a cost.
-          val live = parts.map(_.split('/').last)
-          Some((spark.read.parquet(live.map(b => s"$dir/fps/$b").toIndexedSeq: _*),
-            spark.read.parquet(live.map(b => s"$dir/grams/$b").toIndexedSeq: _*)))
-        }
-      }
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[deconstore] $dir unreadable (${e.getMessage}) — recomputing inline")
-        None
+    layout.openFresh(spark, DirKey, TrustKey, SignatureStore.digestOf(evalRel)) { (dir, benches) =>
+      if (benches.isEmpty) (
+        spark.range(0).select(col("id").as("doc_id"), col("id").as("fp")),
+        spark.range(0).select(col("id").cast("string").as("g")))
+      else (layout.live(spark, dir, "fps", benches).select("doc_id", "fp"),
+        layout.live(spark, dir, "grams", benches).select("g"))
     }
   }
 }

@@ -275,9 +275,6 @@ object FileDigests {
     f => keyHash(s"$sigH§${f.getPath}@${f.getLen}@${f.getModificationTime}")
   }
 
-  private def sidecarFs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** First-touch load of a configured dir, once per (JVM, dir). After
     * this, the dir is only re-listed on the MISS path ([[syncFromDisk]]
     * via [[refreshOnMiss]]) — a steady-state serve never touches the
@@ -334,7 +331,7 @@ object FileDigests {
     * (ADVICE r18) — the file-count trigger fires wherever a listing is
     * already in hand. */
   private def syncFromDisk(spark: SparkSession, dir: String, st: DirState): Unit = {
-    val f = sidecarFs(spark, dir)
+    val f = PartitionedStore.fs(spark, dir)
     val p = new Path(dir)
     if (!f.exists(p)) return
     val files = f.listStatus(p).filter(_.getPath.getName.endsWith(".bin"))
@@ -406,7 +403,7 @@ object FileDigests {
   private def persist(spark: SparkSession, dir: String,
       entries: Seq[(String, (Long, Long))]): Boolean =
     try {
-      val f = sidecarFs(spark, dir)
+      val f = PartitionedStore.fs(spark, dir)
       val p = new Path(dir)
       if (!f.exists(p)) f.mkdirs(p): Unit
       val (name, n) = appendRecords(f, p, entries)

@@ -1,48 +1,30 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Day-partitioned store for the image dHash index — takedown parity
-  * for the media tier (VERDICT r10 missing item 3).
+/** Day-partitioned store for the image dHash index, on the
+  * [[PartitionedStore]] contract. q153's production face probes a
+  * persisted (media_id, dhash) index (16 bytes/image) instead of
+  * re-decoding the corpus; hashing
+  * ([[graft.multimodal.MediaDedup.hashImages]]) happens once at ingest,
+  * and a takedown never re-reads another day's binary payloads.
   *
-  * q153's production face probes a persisted (media_id, dhash) index
-  * (16 bytes/image) instead of re-decoding the corpus. Before this
-  * store that index was append-only: a right-to-be-forgotten deletion
-  * forced a full rebuild — and rebuilds in the media tier re-run the
-  * DECODE, the one cost the index exists to amortize. Day partitions
-  * give the same algebra as [[SignatureStore]]/[[WinnowStore]]:
-  * [[advanceDay]] hashes only its own batch, [[retireDay]] drops a
-  * day's partition and XORs its digest back out of the meta, and
-  * neither ever re-reads another day's binary payloads.
-  *
-  * The store holds the HASHED relation, not payloads — hashing
-  * (decode, [[graft.multimodal.MediaDedup.hashImages]]) happens once
-  * at ingest, so the per-day digest is over (media_id, dhash): exact
-  * under union/difference of disjoint day batches, verifiable without
-  * touching a single image byte.
-  *
-  * Layout under one root:
   * {{{
-  *   <dir>/hashes/day=N/  (media_id, dhash)
-  *   <dir>/meta/          (day, n_media, digest) one row per day
-  *   <dir>/source_meta/   (day, n_src, digest)   sourced face only
+  *   <dir>/hashes/day=N/       (media_id, dhash)
+  *   <dir>/meta/day=N/         digest of the stored (media_id, dhash)
+  *   <dir>/source_meta/day=N/  digest of the source (media_id, text)
   * }}}
   *
   * '''The SOURCED face (r15).''' The decon probe (q197) is offered the
   * train corpus's SOURCE relation, not its hashes — so a store-or-
   * inline dispatch needs freshness the caller can verify WITHOUT the
   * decode the store exists to amortize. [[buildSourced]]/
-  * [[advanceDaySourced]] persist, per day, a digest over the source
-  * rows the day's hashes were derived from; [[openFreshFor]] then
-  * verifies the offered source in one xxhash64 scan (no render, no
-  * decode) and serves the stored index. The source meta is the LAST
-  * write — the sourced face's commit point — so a crashed advance
-  * leaves its day invisible to [[openFreshFor]] (live-meta rule) and
-  * the replay's retire-then-rewrite converges.
+  * [[advanceDaySourced]] commit, per day, a digest over the source
+  * rows the day's hashes were derived from; [[openFreshFor]] verifies
+  * the offered source in one xxhash64 scan (no render, no decode) and
+  * serves the stored index. The source meta is the LAST write, the
+  * sourced face's commit point.
   */
 object MediaHashStore {
 
@@ -78,8 +60,12 @@ object MediaHashStore {
     * runs. Default false: verify freshness even when trusted. */
   val TrustFreshKey = "spark.graft.mediastore.trustfresh"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val hashes = new PartitionedStore("mediastore", "day", Seq("hashes"), Seq("media"))
+
+  /** The sourced face's meta: its commit point, written after the hash
+    * meta, so a crashed advance's day is invisible to [[openFreshFor]]. */
+  private val sources =
+    new PartitionedStore("mediastore", "day", Seq.empty, Seq("src"), meta = "source_meta")
 
   /** Order-independent digest of a hashed batch:
     * (count, XOR of xxhash64(media_id, dhash)) — [[FileDigests]]-cached
@@ -93,76 +79,33 @@ object MediaHashStore {
   def digestOfPinned(hashed: DataFrame): (Long, Long) =
     FileDigests.digestOfPinned(hashed, xxhash64(col("media_id"), col("dhash")))
 
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      hashedBatch: DataFrame, mode: String): Unit = {
-    hashedBatch.select("media_id", "dhash").withColumn("day", lit(day))
-      .write.mode(mode).partitionBy("day").parquet(s"$dir/hashes")
-    // Meta lands LAST — the commit point; a torn day isn't covered by
-    // the digest, so a replay's retire-then-rewrite converges. The
-    // digest is computed from the JUST-WRITTEN partition, not from
-    // `hashedBatch` again: a non-deterministic batch plan (sampled,
-    // raced, or re-decoded input) evaluated twice could persist a meta
-    // digest that never matches the stored rows, turning the store
-    // permanently "torn" with no recovery besides a rebuild. Reading
-    // back what parquet holds makes the digest provably cover the
-    // stored bytes. An EMPTY day writes no partition directory at all
-    // (the sibling stores' empty-ingest-day rule, review r15): its meta
-    // row records (0, 0) — a zero XOR contribution — instead of the
-    // read-back crashing on the absent path.
-    val dayPath = new Path(s"$dir/hashes/day=$day")
-    val (n, dg) =
-      if (fs(spark, dir).exists(dayPath))
-        digestOf(spark.read.parquet(dayPath.toString))
-      else (0L, 0L)
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_media", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
-  }
-
   /** Build a fresh store from an already-hashed (media_id, dhash)
     * relation, replacing any prior content. */
   def build(hashed: DataFrame, dir: String, day: Int = 0): Unit = {
-    val spark = hashed.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, hashed, "errorifexists")
+    StoreLease.replaceContents(hashed.sparkSession, dir)
+    advanceDay(hashed, dir, day)
   }
 
-  /** Append one ingest day of hashes. Idempotent per day (existing
-    * `day=N` content is retired first), so at-least-once replay
-    * converges. */
+  /** Append (or replace) one ingest day of hashes. */
   def advanceDay(hashedBatch: DataFrame, dir: String, day: Int): Unit = {
     val spark = hashedBatch.sparkSession
-    // Unconditional retire (ADVICE r13): a crashed build leaves
-    // hashes/day=N without a meta — a meta-guarded retire would append
-    // into that orphan and double its rows.
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, hashedBatch, "append")
+    sources.retire(spark, dir, day.toString)
+    hashes.advance(spark, dir, day.toString) {
+      hashes.write(hashedBatch.select("media_id", "dhash"), dir, "hashes", day.toString)
+      // The digest is computed from the JUST-WRITTEN partition, not
+      // from `hashedBatch` again: a non-deterministic batch plan
+      // (sampled, raced, or re-decoded input) evaluated twice could
+      // persist a meta digest that never matches the stored rows.
+      Seq(hashes.digestWritten(spark, dir, "hashes", day.toString, digestOf))
+    }
   }
 
-  /** Retire one day (takedown/expiry): drop its partition, XOR its
-    * digest out of BOTH metas. After this [[open]]/[[openFreshFor]]
-    * serve the index exactly as if that day had never been ingested —
-    * no decode, no rebuild. Safe on a torn store (no meta ⇒ partition
-    * drop only). */
+  /** Retire one day (takedown/expiry) from BOTH metas, source meta
+    * first. After this [[open]]/[[openFreshFor]] serve the index exactly
+    * as if that day had never been ingested — no decode, no rebuild. */
   def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/hashes/day=$day"), true): Unit
-    if (f.exists(new Path(s"$dir/source_meta"))) {
-      val keptS = spark.read.parquet(s"$dir/source_meta")
-        .where(col("day") =!= day).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-      spark.createDataFrame(keptS).toDF("day", "n_src", "digest")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/source_meta")
-    }
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_media", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    sources.retire(spark, dir, day.toString)
+    hashes.retire(spark, dir, day.toString)
   }
 
   // -------------------------------------------- sourced decon face
@@ -176,17 +119,13 @@ object MediaHashStore {
   def sourceDigestOf(source: DataFrame): (Long, Long) =
     FileDigests.digestOf(source, xxhash64(col("media_id"), col("text")))
 
-  private def writeSourceMeta(spark: SparkSession, dir: String, day: Int,
-      source: DataFrame, mode: String): Unit = {
-    // Write path: whole-relation aggregate (never the per-file cache)
-    // so the committed digest describes the evaluation the day's hashes
-    // derived from — FileDigests.digestOfPinned's tear argument.
-    val (n, dg) =
-      FileDigests.digestOfPinned(source, xxhash64(col("media_id"), col("text")))
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_src", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/source_meta")
-  }
+  /** Commit the sourced face: the day's source digest, as a
+    * whole-relation aggregate (never the per-file cache) so it describes
+    * the evaluation the day's hashes derived from —
+    * FileDigests.digestOfPinned's tear argument. */
+  private def commitSource(dir: String, day: Int, source: DataFrame): Unit =
+    sources.commit(source.sparkSession, dir, day.toString,
+      FileDigests.digestOfPinned(source, xxhash64(col("media_id"), col("text"))))
 
   /** Build a fresh SOURCED store: the hash index plus the day's source
     * digest, so [[openFreshFor]] can verify freshness against the
@@ -202,22 +141,16 @@ object MediaHashStore {
     * maintainer may pass any day. */
   def buildSourced(source: DataFrame, hashed: DataFrame, dir: String,
       day: Int = -1): Unit = {
-    val spark = hashed.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, hashed, "errorifexists")
-    // Source meta lands LAST — the sourced face's commit point.
-    writeSourceMeta(spark, dir, day, source, "errorifexists")
+    StoreLease.replaceContents(hashed.sparkSession, dir)
+    advanceDaySourced(source, hashed, dir, day)
   }
 
-  /** Append one ingest day with its source digest. Idempotent per day
-    * (unconditional retire-then-write, source meta last). */
+  /** Append (or replace) one ingest day with its source digest, the
+    * source meta last. */
   def advanceDaySourced(source: DataFrame, hashedBatch: DataFrame,
       dir: String, day: Int): Unit = {
-    val spark = hashedBatch.sparkSession
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, hashedBatch, "append")
-    writeSourceMeta(spark, dir, day, source, "append")
+    advanceDay(hashedBatch, dir, day)
+    commitSource(dir, day, source)
   }
 
   /** The stored hash index IF [[DirKey]] is configured and the store
@@ -236,43 +169,25 @@ object MediaHashStore {
     * or missing pair. */
   def openFreshFor(source: DataFrame): Option[DataFrame] = {
     val spark = source.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      val rows = spark.read.parquet(s"$dir/source_meta").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      // Freshness runs under its OWN lever (ADVICE r15): TrustKey skips
-      // only the integrity scan below. The caption-digest comparison is
-      // decode-free and is the sole signal that demotes a lagging
-      // ingest to inline instead of silently missing pairs.
-      if (!spark.conf.get(TrustFreshKey, "false").toBoolean) {
-        val composed = (rows.map(_._2).sum, rows.map(_._3).foldLeft(0L)(_ ^ _))
-        if (sourceDigestOf(source) != composed) {
-          System.err.println(s"[mediastore] $dir is stale for this source — hashing inline")
-          return None
+    // Freshness runs under its OWN lever (ADVICE r15): TrustKey skips
+    // only the integrity scan below. The caption-digest comparison is
+    // decode-free and is the sole signal that demotes a lagging ingest
+    // to inline instead of silently missing pairs.
+    sources.open(spark, DirKey, TrustFreshKey) { (dir, trustFresh) =>
+      sources.fresh(spark, dir, trustFresh, Seq(sourceDigestOf(source))).map { days =>
+        if (days.isEmpty) {
+          import spark.implicits._
+          Seq.empty[(Long, Long)].toDF("media_id", "dhash")
+        } else {
+          val idx = hashes.live(spark, dir, "hashes", days).select("media_id", "dhash")
+          if (!spark.conf.get(TrustKey, "false").toBoolean) {
+            val stored = hashes.composed(hashes.metas(spark, dir).filter(m => days.contains(m._1)))
+            require(Seq(digestOf(idx)) == stored,
+              s"media hash store $dir is torn: partition digest != meta digest")
+          }
+          idx
         }
       }
-      val live = rows.filter(_._2 > 0L)
-      if (live.isEmpty) {
-        import spark.implicits._
-        return Some(Seq.empty[(Long, Long)].toDF("media_id", "dhash"))
-      }
-      val idx = spark.read.parquet(live.map(d => s"$dir/hashes/day=${d._1}"): _*)
-        .select("media_id", "dhash")
-      if (!trusted) {
-        val hm = spark.read.parquet(s"$dir/meta")
-          .where(col("day").isin(live.map(_._1): _*))
-          .agg(coalesce(sum("n_media"), lit(0L)),
-            coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-        require(digestOf(idx) == ((hm.getLong(0), hm.getLong(1))),
-          s"media hash store $dir is torn: partition digest != meta digest")
-      }
-      Some(idx)
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[mediastore] $dir unusable (${e.getMessage}) — hashing inline")
-        None
     }
   }
 
@@ -287,34 +202,10 @@ object MediaHashStore {
     * the meta then sums to zero media and the index is served as an
     * empty (media_id, dhash) relation — not as Spark's
     * unable-to-infer-schema error on the empty `hashes/` dir. */
-  def open(spark: SparkSession, dir: String): DataFrame = {
-    val m = spark.read.parquet(s"$dir/meta")
-      .agg(coalesce(sum("n_media"), lit(0L)),
-        coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-    val stored = (m.getLong(0), m.getLong(1))
-    if (stored._1 == 0L) {
-      // The zero-meta branch is itself a torn-store hazard (ADVICE r12):
-      // if every prior day was retired and an advanceDay crashed after
-      // writing hashes/day=N but before its meta row, hashes/ is
-      // non-empty while the meta sums to zero — serving the empty index
-      // would silently drop dedup candidates. Unless trusted, verify
-      // hashes/ really is absent/empty before serving empty.
-      if (!spark.conf.get(TrustKey, "false").toBoolean) {
-        val f = fs(spark, dir)
-        val hashesPath = new Path(s"$dir/hashes")
-        val orphans = f.exists(hashesPath) &&
-          f.listStatus(hashesPath).exists(_.getPath.getName.startsWith("day="))
-        require(!orphans,
-          s"media hash store $dir is torn: hashes/ has day partitions but the meta sums to zero")
-      }
+  def open(spark: SparkSession, dir: String): DataFrame =
+    hashes.verified(spark, dir, "hashes", spark.conf.get(TrustKey, "false").toBoolean,
+      digestOf) {
       import spark.implicits._
-      return Seq.empty[(Long, Long)].toDF("media_id", "dhash")
-    }
-    val idx = spark.read.parquet(s"$dir/hashes").select("media_id", "dhash")
-    val trusted = spark.conf.get(TrustKey, "false").toBoolean
-    if (!trusted)
-      require(digestOf(idx) == stored,
-        s"media hash store $dir is torn: partition digest != meta digest $stored")
-    idx
-  }
+      Seq.empty[(Long, Long)].toDF("media_id", "dhash")
+    }.select("media_id", "dhash")
 }

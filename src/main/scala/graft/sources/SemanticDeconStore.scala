@@ -1,8 +1,5 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,20 +16,16 @@ import org.apache.spark.sql.functions._
   * batches give a shared vector the same verdict (spec-pinned), the
   * IVF operational contract [[VectorIndexStore]] already documents.
   *
-  * Layout under one root:
+  * One [[PartitionedStore]] partition per benchmark, beside the
+  * codebook:
   * {{{
   *   <dir>/codebook/         (c_id, cv)          written ONCE at build
   *   <dir>/vecs/bench=<n>/   (vec_id, nv, bkt)   one row per (vec, probe)
-  *   <dir>/meta/bench=<n>/   (n_vecs, digest)    commit point, LAST
   * }}}
-  *
   * [[advanceBenchmark]] assigns ONLY its benchmark's embeddings
-  * against the stored codebook (never re-derived); retire is a
-  * partition drop — the codebook stays, it is a model artifact.
-  * Freshness: per-benchmark [[VectorIndexStore.digestOf]] metas
-  * combine by (sum n, XOR digest) and [[openFresh]] compares against
-  * the OFFERED eval embeddings; a torn advance reads stale → the
-  * caller recomputes inline — cost, never a missed leak.
+  * against the stored codebook (never re-derived); retire keeps the
+  * codebook — it is a model artifact. The digest is
+  * [[VectorIndexStore.digestOf]] over each benchmark's embeddings.
   */
 object SemanticDeconStore {
 
@@ -42,8 +35,7 @@ object SemanticDeconStore {
   /** Session conf: skip the digest freshness scan and trust the store. */
   val TrustKey = "spark.graft.semdeconstore.trust"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val layout = new PartitionedStore("semdeconstore", "bench", Seq("vecs"), Seq("vecs"))
 
   /** Build the store from the full eval-suite embeddings, replacing
     * prior content. The codebook freezes HERE — from `codebookFrom`
@@ -68,7 +60,6 @@ object SemanticDeconStore {
       codebookFrom: Option[DataFrame] = None,
       trained: Boolean = true): Unit = {
     val spark = evalEmb.sparkSession
-    StoreLease.checkWrite(spark, dir)
     StoreLease.replaceContents(spark, dir)
     val src = codebookFrom.getOrElse(evalEmb)
     val cents =
@@ -88,73 +79,36 @@ object SemanticDeconStore {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
 
   /** Add (or replace) ONE benchmark's partition from its embeddings
-    * alone, assigned against the FROZEN codebook. Meta lands LAST (the
-    * commit point); the input is pinned across assignment + digest so
-    * a non-deterministic plan cannot tear them apart. */
+    * alone, assigned against the FROZEN codebook. The input is pinned
+    * across assignment + digest so a non-deterministic plan cannot tear
+    * them apart. */
   def advanceBenchmark(name: String, benchEmb: DataFrame, dir: String): Unit = {
     val spark = benchEmb.sparkSession
-    retireBenchmark(name, spark, dir)
     val cents = storedCodebook(spark, dir)
-    val pinned = benchEmb.persist()
-    try {
-      graft.operators.SimilarityQueries.multiAssignWithNv(pinned, cents)
-        .write.parquet(s"$dir/vecs/bench=$name")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = VectorIndexStore.digestOfPinned(pinned)
-      spark.createDataFrame(Seq((n, dg))).toDF("n_vecs", "digest")
-        .coalesce(1).write.parquet(s"$dir/meta/bench=$name")
-    } finally pinned.unpersist(blocking = false): Unit
+    layout.advance(spark, dir, name) {
+      val pinned = benchEmb.persist()
+      try {
+        layout.write(graft.operators.SimilarityQueries.multiAssignWithNv(pinned, cents),
+          dir, "vecs", name)
+        Seq(VectorIndexStore.digestOfPinned(pinned))
+      } finally pinned.unpersist(blocking = false): Unit
+    }
   }
 
-  /** Drop ONE benchmark's partition. Meta goes FIRST (a crash
-    * mid-retire leaves orphans the combined digest no longer covers →
-    * stale → inline). The codebook stays. */
-  def retireBenchmark(name: String, spark: SparkSession, dir: String): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/meta/bench=$name"), true): Unit
-    f.delete(new Path(s"$dir/vecs/bench=$name"), true): Unit
-  }
+  /** Drop ONE benchmark's partition. The codebook stays. */
+  def retireBenchmark(name: String, spark: SparkSession, dir: String): Unit =
+    layout.retire(spark, dir, name)
 
   /** The (frozen codebook, assigned eval index) IF configured and the
-    * per-benchmark metas combine to exactly this eval corpus — None
-    * (driver-log line, never an error) on key unset, unreadable store,
-    * or digest mismatch. Only partitions with a live meta are read
-    * (the DeconStore orphan rule: spans against a retired benchmark
-    * would be a wrong answer). */
+    * per-benchmark metas combine to exactly this eval corpus; None
+    * otherwise. Only live benchmarks are read. */
   def openFresh(evalEmb: DataFrame): Option[(Seq[(Long, Seq[Double])], DataFrame)] = {
     val spark = evalEmb.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      val parts = fs(spark, dir).listStatus(new Path(s"$dir/meta"))
-        .filter(_.getPath.getName.startsWith("bench=")).map(_.getPath.toString)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (parts.isEmpty) {
-        if (!trusted && VectorIndexStore.digestOf(evalEmb) != ((0L, 0L))) {
-          System.err.println(s"[semdeconstore] $dir has no live benchmarks — recomputing inline")
-          None
-        } else Some((storedCodebook(spark, dir),
-          spark.range(0).select(col("id").as("vec_id"),
-            array().cast("array<double>").as("nv"), col("id").as("bkt"))))
-      } else {
-        val m = spark.read.parquet(parts: _*)
-          .agg(coalesce(sum("n_vecs"), lit(0L)),
-            coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-        val stored = (m.getLong(0), m.getLong(1))
-        if (!trusted && VectorIndexStore.digestOf(evalEmb) != stored) {
-          System.err.println(s"[semdeconstore] $dir is stale for this eval corpus — recomputing inline")
-          None
-        } else {
-          val live = parts.map(_.split('/').last)
-          Some((storedCodebook(spark, dir),
-            spark.read.parquet(live.map(b => s"$dir/vecs/$b").toIndexedSeq: _*)))
-        }
-      }
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[semdeconstore] $dir unreadable (${e.getMessage}) — recomputing inline")
-        None
+    layout.openFresh(spark, DirKey, TrustKey, VectorIndexStore.digestOf(evalEmb)) { (dir, benches) =>
+      (storedCodebook(spark, dir),
+        if (benches.isEmpty) spark.range(0).select(col("id").as("vec_id"),
+          array().cast("array<double>").as("nv"), col("id").as("bkt"))
+        else layout.live(spark, dir, "vecs", benches).select("vec_id", "nv", "bkt"))
     }
   }
 }

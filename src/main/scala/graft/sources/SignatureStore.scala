@@ -1,12 +1,10 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Materialized shingle/signature store for the near-dup tier.
+/** Materialized shingle/signature store for the near-dup tier, on the
+  * [[PartitionedStore]] contract (day partitions).
   *
   * Every LSH-family query (q17/q18/q40/q73/q138/q141/q146) starts from
   * the SAME two relations: the df-capped word-3-gram shingles and the
@@ -16,34 +14,14 @@ import org.apache.spark.sql.functions._
   * q40). A pipeline builds this store once per ingest day and every
   * dedup query reuses it.
   *
-  * Layout under one root:
   * {{{
   *   <dir>/shingles/day=N/   (doc_id, sh)           df-capped shingles
   *   <dir>/sigs/day=N/       (doc_id, s0..s19)      xxhash64 MinHash sigs
-  *   <dir>/meta/             (day, n_docs, digest)  one row per day
   * }}}
-  *
-  * Freshness is a corpus digest: `(count, XOR of xxhash64(doc_id, text))`.
-  * XOR is commutative and self-inverse, so the digest maintains EXACTLY
-  * under both append ([[advanceDay]]: XOR the batch digest in) and
-  * retirement ([[retireDay]]: XOR the day digest back out) — no history
-  * rescan, mirroring the bloom index's carry
-  * (`DedupQueries.bloomAdvanceDay`). [[openFresh]] recomputes the
-  * digest of the offered corpus (one narrow scan — no explode, no
-  * shuffle beyond a 1-row agg) and uses the store only on an exact
-  * match, so a filtered subset, a mutated document, or a stale store
-  * all fall back to direct computation instead of silently returning
-  * wrong pairs. Deployments whose freshness is guaranteed externally
-  * (table versions, partition watermarks) set [[TrustKey]] to skip the
-  * digest scan entirely.
-  *
-  * Day partitions mean prior days' SOURCE data is never re-read by
-  * maintenance: [[advanceDay]] shingles and signs only its own batch
-  * (SignatureStoreSpec deletes day 0's source files and day 1 still
-  * advances), and a takedown retires a day by dropping its partition.
-  *
-  * Reference analog: none — the reference re-derives per run; this is
-  * the service SCALE.md's future-work note called for.
+  * The digest is over the SOURCE documents, `xxhash64(doc_id, text)`,
+  * so [[advanceDay]] shingles and signs only its own batch and never
+  * re-reads a prior day (SignatureStoreSpec deletes day 0's source
+  * files and day 1 still advances).
   */
 object SignatureStore {
 
@@ -59,11 +37,12 @@ object SignatureStore {
 
   private val SigCols = 20
 
+  private val layout = new PartitionedStore("sigstore", "day", Seq("shingles", "sigs"), Seq("docs"))
+
   /** Order-independent corpus digest: (n_docs, XOR of per-doc hashes).
-    * Exact under union/difference of disjoint doc sets — the algebra
-    * that makes incremental maintenance honest. Served through the
-    * [[FileDigests]] per-file cache (r17): a file-backed corpus whose
-    * files are unchanged digests from one LISTING, zero data scanned. */
+    * Served through the [[FileDigests]] per-file cache (r17): a
+    * file-backed corpus whose files are unchanged digests from one
+    * LISTING, zero data scanned. */
   def digestOf(docRel: DataFrame): (Long, Long) =
     FileDigests.digestOf(docRel, xxhash64(col("doc_id"), col("text")))
 
@@ -76,96 +55,45 @@ object SignatureStore {
   def digestOfPinned(docRel: DataFrame): (Long, Long) =
     FileDigests.digestOfPinned(docRel, xxhash64(col("doc_id"), col("text")))
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      docBatch: DataFrame, mode: String): Unit = {
-    import graft.operators.DedupQueries
-    val sh = DedupQueries.shinglesOf(docBatch)
-    sh.withColumn("day", lit(day))
-      .write.mode(mode).partitionBy("day").parquet(s"$dir/shingles")
-    DedupQueries.sigsOf(sh, fastHash = true).withColumn("day", lit(day))
-      .write.mode(mode).partitionBy("day").parquet(s"$dir/sigs")
-    // Meta lands LAST — it is the commit point. A crash after the
-    // partition writes but before this row leaves day=N data the
-    // digest doesn't cover: openFresh correctly reports stale, and the
-    // replay's retire-then-rewrite converges.
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    val (n, dg) = digestOfPinned(docBatch) // write path: aggregate, never the cache
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_docs", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
-  }
-
   /** Build a fresh store at `dir` from the full corpus (replacing any
     * prior content), recorded as `day`. Caller owns cache hygiene
     * (bracket with `Caches.releaseAll()` as usual). */
   def build(docRel: DataFrame, dir: String, day: Int = 0): Unit = {
-    val spark = docRel.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, docRel, "errorifexists")
+    StoreLease.replaceContents(docRel.sparkSession, dir)
+    advanceDay(docRel, dir, day)
   }
 
-  /** Append one ingest day: shingle + sign ONLY the batch, XOR its
-    * digest into the meta. Prior days are not parameters and are never
-    * read — the whole history is the stored partitions.
-    *
-    * Idempotent per day: any existing `day=N` content — a torn write
-    * from a crashed run, or a full replay — is retired first, so
-    * re-running a day CONVERGES instead of duplicating. That is the
-    * property [[graft.streaming.SignatureMaintainer]]'s at-least-once
-    * `foreachBatch` replay relies on. */
-  def advanceDay(docBatch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = docBatch.sparkSession
-    // Unconditional retire (ADVICE r13): never append into an orphan
-    // partition a crashed build left behind without its meta.
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, docBatch, "append")
-  }
+  /** Append (or replace) one ingest day: shingle + sign ONLY the batch.
+    * Prior days are not parameters and are never read. */
+  def advanceDay(docBatch: DataFrame, dir: String, day: Int): Unit =
+    layout.advance(docBatch.sparkSession, dir, day.toString) {
+      import graft.operators.DedupQueries
+      val sh = DedupQueries.shinglesOf(docBatch)
+      layout.write(sh, dir, "shingles", day.toString)
+      layout.write(DedupQueries.sigsOf(sh, fastHash = true), dir, "sigs", day.toString)
+      Seq(digestOfPinned(docBatch))
+    }
 
-  /** Retire one day (takedown/expiry): drop its partitions and XOR its
-    * digest back out of the meta. After this the store is fresh for
-    * the corpus WITHOUT that day's documents. Safe on a torn store
-    * (no meta ⇒ partition drops only). */
-  def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/shingles/day=$day"), true)
-    f.delete(new Path(s"$dir/sigs/day=$day"), true)
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_docs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  /** Retire one day (takedown/expiry). After this the store is fresh
+    * for the corpus WITHOUT that day's documents. */
+  def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
+    layout.retire(spark, dir, day.toString)
 
-  /** The store for this corpus, IF configured and fresh. None (with a
-    * driver-log line, never an error) on: key unset, store unreadable,
-    * or digest mismatch — callers fall back to direct computation, so a
-    * stale store can cost time but never correctness. */
+  /** The store for this corpus, IF configured and fresh; None
+    * otherwise — callers fall back to direct computation, so a stale
+    * store can cost time but never correctness. */
   def openFresh(docRel: DataFrame): Option[Store] = {
     val spark = docRel.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      val m = spark.read.parquet(s"$dir/meta")
-        .agg(sum("n_docs"), call_function("bit_xor", col("digest"))).head()
-      val stored = (m.getLong(0), m.getLong(1))
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted && digestOf(docRel) != stored) {
-        System.err.println(s"[sigstore] $dir is stale for this corpus — recomputing directly")
-        None
-      } else Some(Store(
-        spark.read.parquet(s"$dir/shingles").select("doc_id", "sh"),
-        spark.read.parquet(s"$dir/sigs")
-          .select(col("doc_id") +: (0 until SigCols).map(i => col(s"s$i")): _*)))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[sigstore] $dir unreadable (${e.getMessage}) — recomputing directly")
-        None
+    layout.openFresh(spark, DirKey, TrustKey, digestOf(docRel)) { (dir, days) =>
+      val sigCols = (0 until SigCols).map(i => s"s$i")
+      if (days.isEmpty) {
+        import spark.implicits._
+        Store(Seq.empty[(Long, String)].toDF("doc_id", "sh"),
+          Seq.empty[Long].toDF("doc_id")
+            .select(col("doc_id") +: sigCols.map(lit(0L).as(_)): _*))
+      } else Store(
+        layout.live(spark, dir, "shingles", days).select("doc_id", "sh"),
+        layout.live(spark, dir, "sigs", days).select("doc_id", sigCols: _*))
     }
   }
 }

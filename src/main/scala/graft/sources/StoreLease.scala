@@ -85,8 +85,7 @@ object StoreLease {
 
   private val held = new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  import PartitionedStore.fs
 
   private def leaseDir(dir: String) = new Path(s"$dir/_lease")
 
@@ -206,10 +205,12 @@ object StoreLease {
   /** Delete a store's CONTENT but keep its owner lease — a rebuild is
     * a mutation by the same owner, not a change of ownership. The
     * store builds all use this instead of a recursive root delete.
-    * Re-checks the lease AFTER the delete completes (ADVICE r17): a
-    * takeover landing mid-delete fences this builder before it starts
-    * writing replacement content over the new owner's. */
+    * Checks the lease before the delete, and again AFTER it completes
+    * (ADVICE r17): a takeover landing mid-delete fences this builder
+    * before it starts writing replacement content over the new
+    * owner's. */
   def replaceContents(spark: SparkSession, dir: String): Unit = {
+    checkWrite(spark, dir)
     val f = fs(spark, dir)
     val p = new Path(dir)
     if (f.exists(p))

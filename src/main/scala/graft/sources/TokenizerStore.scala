@@ -28,7 +28,7 @@ import graft.operators.{BpeQueries, UnigramQueries, WordPieceQueries}
   *   <dir>/unigram/     (rank, piece, n_used)      q158's vocabulary
   *   <dir>/wordpiece/   (round, pair, n, score)    q162's merge table
   *   <dir>/wp_alphabet/ (ch)                       the train-time alphabet
-  *   <dir>/meta/        (n_docs, digest)           commit point, lands LAST
+  *   <dir>/meta/snapshot=0/ ([[PartitionedStore]] meta) commit point, LAST
   * }}}
   *
   * Freshness is the same corpus digest as the signature store —
@@ -54,8 +54,10 @@ object TokenizerStore {
   /** Session conf: skip the digest freshness scan and trust the store. */
   val TrustKey = "spark.graft.tokstore.trust"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  /** The whole store is one snapshot: the contract's meta layout with
+    * a single key and no partitioned payload. */
+  private val layout = new PartitionedStore("tokstore", "snapshot", Seq.empty, Seq("docs"))
+  private val Snapshot = "0"
 
   /** One freshness verdict per (session, store dir, corpus PLAN) —
     * q166's bake-off opens four artifacts and previously digested the
@@ -78,11 +80,12 @@ object TokenizerStore {
     * mtime, so the next open re-verifies instead of serving the old
     * verdict against replaced artifacts. Costs one fs stat per open —
     * no data scan. A missing meta keys as -1 (the verdict computation
-    * then fails and caches false; if the meta later appears, its real
-    * mtime forms a new key and verification runs fresh). */
+    * then reads no meta row and caches false; if the meta later
+    * appears, its real mtime forms a new key and verification runs
+    * fresh). */
   private def verdictKey(docRel: DataFrame, dir: String): (String, String, Int, Long) = {
     val metaMtime = try
-      fs(docRel.sparkSession, dir)
+      PartitionedStore.fs(docRel.sparkSession, dir)
         .getFileStatus(new Path(s"$dir/meta")).getModificationTime
     catch { case NonFatal(_) => -1L }
     (String.valueOf(System.identityHashCode(docRel.sparkSession)), dir,
@@ -94,12 +97,11 @@ object TokenizerStore {
 
   /** Train all four artifacts from the corpus and write the store at
     * `dir` (replacing any prior content). The meta row lands last as
-    * the commit point: a crash mid-build leaves a store [[openFresh]]
-    * rejects (unreadable meta), and a rebuild converges. */
+    * the commit point: a crash mid-build leaves a store with no meta
+    * row, which every open rejects, and a rebuild converges. */
   def build(docRel: DataFrame, dir: String): Unit = {
     val spark = docRel.sparkSession
     import spark.implicits._
-    StoreLease.checkWrite(spark, dir)
     StoreLease.replaceContents(spark, dir)
     BpeQueries.bpeMergesOn(docRel)
       .coalesce(1).write.parquet(s"$dir/bpe")
@@ -111,10 +113,8 @@ object TokenizerStore {
       .coalesce(1).write.parquet(s"$dir/wordpiece")
     WordPieceQueries.alphabetOf(docRel).toSeq.sorted.toDF("ch")
       .coalesce(1).write.parquet(s"$dir/wp_alphabet")
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    val (n, dg) = SignatureStore.digestOfPinned(docRel) // write path: aggregate, never the cache
-    Seq((n, dg)).toDF("n_docs", "digest")
-      .coalesce(1).write.parquet(s"$dir/meta")
+    // write path: aggregate, never the cache
+    layout.commit(spark, dir, Snapshot, SignatureStore.digestOfPinned(docRel))
     invalidate(dir) // a rebuilt store must re-verify, not serve old verdicts
   }
 
@@ -126,36 +126,23 @@ object TokenizerStore {
     * one narrow corpus scan, not one per open. */
   private def freshDir(docRel: DataFrame): Option[String] = {
     val spark = docRel.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    val trusted = spark.conf.get(TrustKey, "false").toBoolean
-    if (trusted) {
-      // Deployment-level freshness guarantee: skip the corpus digest
-      // (and the verdict cache — a later un-trusted open must verify,
-      // not inherit a trust-mode pass), but keep the unreadable-store
-      // fallback contract: a torn store costs inline training, never
-      // an error.
-      return try { spark.read.parquet(s"$dir/meta").head(): Unit; Some(dir) }
-      catch {
-        case NonFatal(e) =>
-          System.err.println(s"[tokstore] $dir unreadable (${e.getMessage}) — retraining inline")
-          None
+    layout.open(spark, DirKey, TrustKey) { (dir, trusted) =>
+      def check(): Boolean = {
+        val rows = layout.metas(spark, dir)
+        if (rows.isEmpty) { layout.fallback(dir, "empty"); false }
+        else trusted || {
+          digestScans.incrementAndGet(): Unit
+          val ok = Seq(SignatureStore.digestOf(docRel)) == layout.composed(rows)
+          if (!ok) layout.stale(dir)
+          ok
+        }
       }
+      // Trusted opens skip the verdict cache: a later un-trusted open
+      // must verify, not inherit a trust-mode pass.
+      val ok = if (trusted) check()
+        else verdicts.computeIfAbsent(verdictKey(docRel, dir), _ => check())
+      if (ok) Some(dir) else None
     }
-    val fresh = verdicts.computeIfAbsent(verdictKey(docRel, dir), _ =>
-      try {
-        val m = spark.read.parquet(s"$dir/meta").head()
-        digestScans.incrementAndGet(): Unit
-        val ok = SignatureStore.digestOf(docRel) == (m.getLong(0), m.getLong(1))
-        if (!ok)
-          System.err.println(s"[tokstore] $dir is stale for this corpus — retraining inline")
-        ok
-      } catch {
-        case NonFatal(e) =>
-          System.err.println(s"[tokstore] $dir unreadable (${e.getMessage}) — retraining inline")
-          false
-      })
-    if (fresh) Some(dir) else None
   }
 
   private def mergesAt(spark: SparkSession, path: String): Seq[String] = {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,11 +13,16 @@ import org.apache.spark.sql.functions._
   * proportional rescan the incremental path exists to avoid, and
   * exactly what Faiss-style deployments persist.
   *
-  * Layout under one root:
+  * Four faces share one root, each a [[PartitionedStore]] day layout
+  * beside its frozen codebooks:
   * {{{
-  *   <dir>/codebook/      (c_id, cv)               written ONCE at build
-  *   <dir>/assign/day=N/  (n_id, n_vec, bkt)       bucket assignments
-  *   <dir>/meta/          (day, n_vecs, digest)    one row per day
+  *   <dir>/codebook/             (c_id, cv)            base + PQ coarse codebook
+  *   <dir>/assign/day=N/         (n_id, n_vec, bkt)    base face
+  *   <dir>/pq_codebook/          (sub, cid, cv)        PQ face
+  *   <dir>/codes/day=N/          (vec_id, bkt, sub, code)
+  *   <dir>/meta/day=N/           base and PQ face digests
+  *   <dir>/codebook_scaled/, codebook_meta_scaled/, assign_scaled/day=N/, meta_scaled/day=N/
+  *   <dir>/codebook_pqs/, pq_codebook_pqs/, codebook_meta_pqs/, codes_pqs/day=N/, meta_pqs/day=N/
   * }}}
   *
   * **The codebook is a FROZEN model artifact.** [[advanceDay]] assigns
@@ -52,27 +55,12 @@ object VectorIndexStore {
   private[graft] val lastPqBuildReusedCodes =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** The meta rows (day, n, digest) and their composed (Σn, XOR)
-    * digest — collected to the driver (one row per day, bounded).
-    * Open faces read ONLY `day=` partitions named here: a crashed
-    * advance (partition written, meta row not) leaves an orphan day
-    * the digest no longer covers, and reading the whole directory
-    * would silently serve those extra rows past a digest check made
-    * against the pre-advance meta (ADVICE r13 — the
-    * SemanticDeconStore live-meta orphan rule, applied to all three
-    * faces here). */
-  private def liveMeta(spark: SparkSession,
-      metaPath: String): (Seq[(Int, Long, Long)], (Long, Long)) = {
-    val rows = spark.read.parquet(metaPath).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    // Zero-row days hold no data and XOR a zero digest — skip them so
-    // a day whose empty write produced no partition dir stays readable.
-    (rows.filter(_._2 > 0L),
-      (rows.map(_._2).sum, rows.map(_._3).foldLeft(0L)(_ ^ _)))
-  }
+  private val base =
+    new PartitionedStore("vectorstore", "day", Seq("assign", "codes"), Seq("vecs"))
+  private val scaled = new PartitionedStore("vectorstore.scaled", "day",
+    Seq("assign_scaled"), Seq("vecs"), meta = "meta_scaled")
+  private val pqs = new PartitionedStore("vectorstore.pqs", "day",
+    Seq("codes_pqs"), Seq("vecs"), meta = "meta_pqs")
 
   /** Corpus digest over an embedding relation (vec_id, embedding) —
     * the [[SignatureStore.digestOf]] shape for the vector tier.
@@ -87,35 +75,32 @@ object VectorIndexStore {
   def digestOfPinned(e: DataFrame): (Long, Long) =
     FileDigests.digestOfPinned(e, xxhash64(col("vec_id"), col("embedding")))
 
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      batch: DataFrame, cents: Seq[(Long, Seq[Double])], mode: String): Unit = {
-    // Pinned across assignment write + digest (the WinnowStore.writeDay
-    // argument): a non-deterministic batch plan must not persist a
-    // digest that doesn't cover the assigned rows.
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries.ivfAssign(pinned, cents)
-        .withColumn("day", lit(day))
-        .write.mode(mode).partitionBy("day").parquet(s"$dir/assign")
-      // Meta lands LAST — the commit point.
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
-  }
+  /** Advance `face` by one day: retire it, write `encode(pinned batch)`
+    * as `payload`, commit the batch digest. The batch is pinned across
+    * the write and the digest (the WinnowStore argument): a
+    * non-deterministic batch plan must not persist a digest that
+    * doesn't cover the written rows. */
+  private def advanceFace(face: PartitionedStore, payload: String, batch: DataFrame,
+      dir: String, day: Int)(encode: DataFrame => DataFrame): Unit =
+    face.advance(batch.sparkSession, dir, day.toString) {
+      val pinned = batch.persist()
+      try {
+        face.write(encode(pinned), dir, payload, day.toString)
+        Seq(digestOfPinned(pinned))
+      } finally pinned.unpersist(blocking = false): Unit
+    }
 
   /** Build a fresh index at `dir`: train (collect) the codebook from
     * `corpus`, assign `indexRel` as `day`. Replaces prior content. */
   def build(corpus: DataFrame, indexRel: DataFrame, dir: String,
       day: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    StoreLease.checkWrite(spark, dir)
     StoreLease.replaceContents(spark, dir)
     val cents = graft.operators.SimilarityQueries.centroidList(corpus)
     spark.createDataFrame(cents).toDF("c_id", "cv")
       .coalesce(1).write.parquet(s"$dir/codebook")
-    writeDay(spark, dir, day, indexRel, cents, "errorifexists")
+    advanceFace(base, "assign", indexRel, dir, day)(
+      graft.operators.SimilarityQueries.ivfAssign(_, cents))
   }
 
   /** The stored codebook — K driver rows. */
@@ -123,33 +108,20 @@ object VectorIndexStore {
     spark.read.parquet(s"$dir/codebook")
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
 
-  /** Append one ingest day: assign ONLY the batch against the STORED
-    * codebook (never re-derived — the frozen-quantizer contract), XOR
-    * its digest into the meta. Idempotent per day (existing `day=N`
-    * content is retired first), so at-least-once replay converges. */
+  /** Append (or replace) one ingest day: assign ONLY the batch against
+    * the STORED codebook (never re-derived — the frozen-quantizer
+    * contract). */
   def advanceDay(batch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = batch.sparkSession
-    val cents = storedCodebook(spark, dir)
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, batch, cents, "append")
+    val cents = storedCodebook(batch.sparkSession, dir)
+    advanceFace(base, "assign", batch, dir, day)(
+      graft.operators.SimilarityQueries.ivfAssign(_, cents))
   }
 
-  /** Retire one day (takedown/expiry): drop its partition, XOR its
-    * digest back out of the meta. The codebook stays — it is a model
-    * artifact, not data derived from the retired day. */
-  def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/assign/day=$day"), true): Unit
-    f.delete(new Path(s"$dir/codes/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_vecs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  /** Retire one day (takedown/expiry) of the base and PQ faces. The
+    * codebook stays — it is a model artifact, not data derived from the
+    * retired day. */
+  def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
+    base.retire(spark, dir, day.toString)
 
   // ------------------------------------------------------ PQ face
   /** Build the COMPRESSED index (IVF-PQ): coarse codebook + per-
@@ -161,25 +133,22 @@ object VectorIndexStore {
   def buildPq(corpus: DataFrame, dir: String, day: Int = 0): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    StoreLease.checkWrite(spark, dir)
     StoreLease.replaceContents(spark, dir)
-    val pinned = corpus.persist()
-    try {
-      val (coarse, cents, codes) =
-        graft.operators.SimilarityQueries.pqIndexArtifacts(pinned)
-      spark.createDataFrame(coarse).toDF("c_id", "cv")
-        .coalesce(1).write.parquet(s"$dir/codebook")
-      cents.toSeq.flatMap { case (sub, cs) =>
-        cs.map { case (cid, cv) => (sub, cid, cv) }
-      }.toDF("sub", "cid", "cv")
-        .coalesce(1).write.parquet(s"$dir/pq_codebook")
-      codes.withColumn("day", lit(day))
-        .write.partitionBy("day").parquet(s"$dir/codes")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
+    base.advance(spark, dir, day.toString) {
+      val pinned = corpus.persist()
+      try {
+        val (coarse, cents, codes) =
+          graft.operators.SimilarityQueries.pqIndexArtifacts(pinned)
+        spark.createDataFrame(coarse).toDF("c_id", "cv")
+          .coalesce(1).write.parquet(s"$dir/codebook")
+        cents.toSeq.flatMap { case (sub, cs) =>
+          cs.map { case (cid, cv) => (sub, cid, cv) }
+        }.toDF("sub", "cid", "cv")
+          .coalesce(1).write.parquet(s"$dir/pq_codebook")
+        base.write(codes, dir, "codes", day.toString)
+        Seq(digestOfPinned(pinned))
+      } finally pinned.unpersist(blocking = false): Unit
+    }
   }
 
   /** The stored PQ codebooks — m × k' driver rows. */
@@ -187,23 +156,14 @@ object VectorIndexStore {
       : Map[Int, Seq[(Long, Seq[Double])]] =
     storedPqCodebookAt(spark, s"$dir/pq_codebook")
 
-  /** Append one day of PQ codes, encoded against BOTH frozen
-    * codebooks. Idempotent per day (retire-then-rewrite). */
+  /** Append (or replace) one day of PQ codes, encoded against BOTH
+    * frozen codebooks. */
   def advanceDayPq(batch: DataFrame, dir: String, day: Int): Unit = {
     val spark = batch.sparkSession
     val coarse = storedCodebook(spark, dir)
     val cents = storedPqCodebook(spark, dir)
-    retireDay(spark, dir, day)
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries.pqEncodeWith(pinned, coarse, cents)
-        .withColumn("day", lit(day))
-        .write.mode("append").partitionBy("day").parquet(s"$dir/codes")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode("append").parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
+    advanceFace(base, "codes", batch, dir, day)(
+      graft.operators.SimilarityQueries.pqEncodeWith(_, coarse, cents))
   }
 
   /** The stored (coarse codebook, PQ codebooks, codes) IF configured
@@ -215,31 +175,16 @@ object VectorIndexStore {
   def openFreshPq(corpus: DataFrame)
       : Option[(Seq[(Long, Seq[Double])], Map[Int, Seq[(Long, Seq[Double])]], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    base.open(spark, DirKey, TrustKey) { (dir, trusted) =>
       val coarse = storedCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted &&
-        graft.operators.SimilarityQueries.centroidList(corpus) != coarse) {
-        System.err.println(s"[vectorstore] $dir codebook differs from this corpus's — deriving inline")
-        return None
+      if (!trusted && graft.operators.SimilarityQueries.centroidList(corpus) != coarse)
+        base.stale(dir)
+      else base.fresh(spark, dir, trusted, Seq(digestOf(corpus))).map { days =>
+        (coarse, storedPqCodebook(spark, dir),
+          if (days.isEmpty) spark.range(0).select(col("id").as("vec_id"), col("id").as("bkt"),
+            col("id").cast("int").as("sub"), col("id").as("code"))
+          else base.live(spark, dir, "codes", days).select("vec_id", "bkt", "sub", "code"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta")
-      if (!trusted && digestOf(corpus) != stored) {
-        System.err.println(s"[vectorstore] $dir is stale for this corpus — deriving inline")
-        None
-      } else if (days.isEmpty) {
-        Some((coarse, storedPqCodebook(spark, dir),
-          spark.range(0).select(col("id").as("vec_id"), col("id").as("bkt"),
-            col("id").cast("int").as("sub"), col("id").as("code"))))
-      } else Some((coarse, storedPqCodebook(spark, dir),
-        spark.read.parquet(days.map(d => s"$dir/codes/day=${d._1}"): _*)
-          .select("vec_id", "bkt", "sub", "code")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir unreadable (${e.getMessage}) — deriving inline")
-        None
     }
   }
 
@@ -266,11 +211,7 @@ object VectorIndexStore {
   def buildScaled(corpus: DataFrame, indexRel: DataFrame, dir: String,
       day: Int = 0, trained: Boolean = true): Unit = {
     val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/codebook_scaled"), true): Unit
-    f.delete(new Path(s"$dir/codebook_meta_scaled"), true): Unit
-    f.delete(new Path(s"$dir/assign_scaled"), true): Unit
-    f.delete(new Path(s"$dir/meta_scaled"), true): Unit
+    clearFace(scaled, spark, dir, "codebook_scaled", "codebook_meta_scaled")
     // Pinned: the codebook meta's digest must cover exactly the rows
     // the codebook was derived from.
     val pinned = corpus.persist()
@@ -295,7 +236,8 @@ object VectorIndexStore {
       spark.createDataFrame(Seq((n, dg, trained)))
         .toDF("n_vecs", "digest", "trained")
         .coalesce(1).write.parquet(s"$dir/codebook_meta_scaled")
-      writeDayScaled(spark, dir, day, indexRel, cents, "errorifexists")
+      advanceFace(scaled, "assign_scaled", indexRel, dir, day)(
+        graft.operators.SimilarityQueries.scaledAssign(_, cents))
     } finally pinned.unpersist(blocking = false): Unit
   }
 
@@ -305,44 +247,19 @@ object VectorIndexStore {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).map(_._2).toSeq
 
-  private def writeDayScaled(spark: SparkSession, dir: String, day: Int,
-      batch: DataFrame, cents: Seq[Seq[Double]], mode: String): Unit = {
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries.scaledAssign(pinned, cents)
-        .withColumn("day", lit(day))
-        .write.mode(mode).partitionBy("day").parquet(s"$dir/assign_scaled")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode(mode).parquet(s"$dir/meta_scaled")
-    } finally pinned.unpersist(blocking = false): Unit
-  }
-
   /** Append one day against the FROZEN scaled codebook (the same
     * frozen-quantizer contract as [[advanceDay]] — note K froze at
     * build-time corpus size; a corpus that outgrows its √N codebook
-    * re-[[buildScaled]]s, the Faiss retrain event). Idempotent. */
+    * re-[[buildScaled]]s, the Faiss retrain event). */
   def advanceDayScaled(batch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = batch.sparkSession
-    val cents = storedScaledCodebook(spark, dir)
-    retireDayScaled(spark, dir, day)
-    writeDayScaled(spark, dir, day, batch, cents, "append")
+    val cents = storedScaledCodebook(batch.sparkSession, dir)
+    advanceFace(scaled, "assign_scaled", batch, dir, day)(
+      graft.operators.SimilarityQueries.scaledAssign(_, cents))
   }
 
-  /** Retire one scaled-face day: partition drop + XOR-heal. */
-  def retireDayScaled(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/assign_scaled/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta_scaled"))) return
-    val kept = spark.read.parquet(s"$dir/meta_scaled")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_vecs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta_scaled")
-  }
+  /** Retire one scaled-face day. */
+  def retireDayScaled(spark: SparkSession, dir: String, day: Int): Unit =
+    scaled.retire(spark, dir, day.toString)
 
   /** The stored (scaled codebook, assignments) IF configured and fresh
     * for this exact (corpus, index) pair — the [[openFresh]] contract
@@ -352,43 +269,29 @@ object VectorIndexStore {
   def openFreshScaled(corpus: DataFrame, idxRel: DataFrame)
       : Option[(Seq[Seq[Double]], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    scaled.open(spark, DirKey, TrustKey) { (dir, trusted) =>
       val cents = storedScaledCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
       // Codebook freshness: the build-time corpus digest (one hash pass
       // over the offered corpus) — re-deriving the codebook would mean
       // re-running the k-means job for a trained store. Pre-meta stores
       // (no codebook_meta_scaled) fall back to the first-K comparison.
-      // Evaluated ONLY when untrusted (TrustKey skips both scans —
-      // review r14 finding 2: an eager digestOf here was exactly the
-      // per-open corpus pass the trust lever exists to avoid).
+      // Evaluated ONLY when untrusted (review r14 finding 2: an eager
+      // digestOf here was exactly the per-open corpus pass the trust
+      // lever exists to avoid).
       val cbFresh = trusted || {
-        if (fs(spark, dir).exists(new Path(s"$dir/codebook_meta_scaled"))) {
+        if (PartitionedStore.fs(spark, dir).exists(new Path(s"$dir/codebook_meta_scaled"))) {
           val m = spark.read.parquet(s"$dir/codebook_meta_scaled").head()
           (m.getLong(0), m.getLong(1)) == digestOf(corpus)
         } else graft.operators.SimilarityQueries.scaledCodebook(
           corpus, graft.operators.SimilarityQueries.scaledK(corpus)) == cents
       }
-      if (!cbFresh) {
-        System.err.println(s"[vectorstore] $dir scaled codebook differs from this corpus's — assigning inline")
-        return None
+      if (!cbFresh) scaled.stale(dir)
+      else scaled.fresh(spark, dir, trusted, Seq(digestOf(idxRel))).map { days =>
+        (cents,
+          if (days.isEmpty) spark.range(0).select(col("id").as("vec_id"),
+            array().cast("array<double>").as("nv"), col("id").as("bkt"))
+          else scaled.live(spark, dir, "assign_scaled", days).select("vec_id", "nv", "bkt"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta_scaled")
-      if (!trusted && digestOf(idxRel) != stored) {
-        System.err.println(s"[vectorstore] $dir scaled face is stale for this index — assigning inline")
-        None
-      } else if (days.isEmpty) {
-        Some((cents, spark.range(0).select(col("id").as("vec_id"),
-          array().cast("array<double>").as("nv"), col("id").as("bkt"))))
-      } else Some((cents,
-        spark.read.parquet(days.map(d => s"$dir/assign_scaled/day=${d._1}"): _*)
-          .select("vec_id", "nv", "bkt")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir scaled face unreadable (${e.getMessage}) — assigning inline")
-        None
     }
   }
 
@@ -423,10 +326,7 @@ object VectorIndexStore {
       day: Int = 0, trained: Boolean = true): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val f = fs(spark, dir)
-    Seq("codebook_pqs", "pq_codebook_pqs", "codes_pqs", "meta_pqs",
-      "codebook_meta_pqs")
-      .foreach(p => f.delete(new Path(s"$dir/$p"), true): Unit)
+    clearFace(pqs, spark, dir, "codebook_pqs", "pq_codebook_pqs", "codebook_meta_pqs")
     // The common build indexes the codebook corpus itself (Bench xpk,
     // q195's specs) — in that case the artifacts' codes ARE the index
     // codes, and re-encoding pinnedI would run the N·√N coarse
@@ -461,16 +361,15 @@ object VectorIndexStore {
         if (same) corpusCodes
         else sq.pqEncodeScaledWith(pinnedI, cents, pqCents)
       lastPqBuildReusedCodes.set(same)
-      codes.withColumn("day", lit(day))
-        .write.partitionBy("day").parquet(s"$dir/codes_pqs")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (cn, cdg) = digestOfPinned(pinnedC)
-      spark.createDataFrame(Seq((cn, cdg, trained)))
-        .toDF("n_vecs", "digest", "trained")
-        .coalesce(1).write.parquet(s"$dir/codebook_meta_pqs")
-      val (n, dg) = digestOfPinned(pinnedI)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.parquet(s"$dir/meta_pqs")
+      pqs.advance(spark, dir, day.toString) {
+        pqs.write(codes, dir, "codes_pqs", day.toString)
+        StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
+        val (cn, cdg) = digestOfPinned(pinnedC)
+        spark.createDataFrame(Seq((cn, cdg, trained)))
+          .toDF("n_vecs", "digest", "trained")
+          .coalesce(1).write.parquet(s"$dir/codebook_meta_pqs")
+        Seq(digestOfPinned(pinnedI))
+      }
     } finally {
       pinnedC.unpersist(blocking = false): Unit
       if (!same) pinnedI.unpersist(blocking = false): Unit
@@ -483,40 +382,19 @@ object VectorIndexStore {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).map(_._2).toSeq
 
-  /** Append one day of scaled PQ codes, encoded against BOTH frozen
-    * codebooks. Idempotent per day (unconditional retire-then-write). */
+  /** Append (or replace) one day of scaled PQ codes, encoded against
+    * BOTH frozen codebooks. */
   def advanceDayPqScaled(batch: DataFrame, dir: String, day: Int): Unit = {
     val spark = batch.sparkSession
     val cents = storedPqScaledCodebook(spark, dir)
     val pqCents = storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs")
-    retireDayPqScaled(spark, dir, day)
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries
-        .pqEncodeScaledWith(pinned, cents, pqCents)
-        .withColumn("day", lit(day))
-        .write.mode("append").partitionBy("day").parquet(s"$dir/codes_pqs")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode("append").parquet(s"$dir/meta_pqs")
-    } finally pinned.unpersist(blocking = false): Unit
+    advanceFace(pqs, "codes_pqs", batch, dir, day)(
+      graft.operators.SimilarityQueries.pqEncodeScaledWith(_, cents, pqCents))
   }
 
-  /** Retire one scaled-PQ day: partition drop + XOR-heal (safe on a
-    * torn store — no meta ⇒ partition drop only). */
-  def retireDayPqScaled(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/codes_pqs/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta_pqs"))) return
-    val kept = spark.read.parquet(s"$dir/meta_pqs")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_vecs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta_pqs")
-  }
+  /** Retire one scaled-PQ day. */
+  def retireDayPqScaled(spark: SparkSession, dir: String, day: Int): Unit =
+    pqs.retire(spark, dir, day.toString)
 
   /** The stored (scaled codebook, PQ codebooks, codes) IF configured
     * and fresh for this exact (codebook corpus, indexed data) pair —
@@ -531,34 +409,28 @@ object VectorIndexStore {
   def openFreshPqScaled(corpus: DataFrame, idxRel: DataFrame)
       : Option[(Seq[Seq[Double]], Map[Int, Seq[(Long, Seq[Double])]], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    pqs.open(spark, DirKey, TrustKey) { (dir, trusted) =>
       val cents = storedPqScaledCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted) {
+      val cbFresh = trusted || {
         val cb = spark.read.parquet(s"$dir/codebook_meta_pqs").head()
-        if ((cb.getLong(0), cb.getLong(1)) != digestOf(corpus)) {
-          System.err.println(s"[vectorstore] $dir scaled-PQ codebook predates this corpus — deriving inline")
-          return None
-        }
+        (cb.getLong(0), cb.getLong(1)) == digestOf(corpus)
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta_pqs")
-      if (!trusted && digestOf(idxRel) != stored) {
-        System.err.println(s"[vectorstore] $dir scaled-PQ codes are stale for this index — deriving inline")
-        None
-      } else if (days.isEmpty) {
-        Some((cents, storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs"),
-          spark.range(0).select(col("id").as("vec_id"), col("id").as("bkt"),
-            col("id").cast("int").as("sub"), col("id").as("code"))))
-      } else Some((cents, storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs"),
-        spark.read.parquet(days.map(d => s"$dir/codes_pqs/day=${d._1}"): _*)
-          .select("vec_id", "bkt", "sub", "code")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir scaled-PQ face unreadable (${e.getMessage}) — deriving inline")
-        None
+      if (!cbFresh) pqs.stale(dir)
+      else pqs.fresh(spark, dir, trusted, Seq(digestOf(idxRel))).map { days =>
+        (cents, storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs"),
+          if (days.isEmpty) spark.range(0).select(col("id").as("vec_id"), col("id").as("bkt"),
+            col("id").cast("int").as("sub"), col("id").as("code"))
+          else pqs.live(spark, dir, "codes_pqs", days).select("vec_id", "bkt", "sub", "code"))
+      }
     }
+  }
+
+  /** Drop one face's layout and its frozen artifacts, leaving the
+    * other faces under the same root alone. */
+  private def clearFace(face: PartitionedStore, spark: SparkSession, dir: String,
+      artifacts: String*): Unit = {
+    face.clear(spark, dir)
+    artifacts.foreach(a => PartitionedStore.fs(spark, dir).delete(new Path(s"$dir/$a"), true): Unit)
   }
 
   private def storedPqCodebookAt(spark: SparkSession, path: String)
@@ -576,34 +448,20 @@ object VectorIndexStore {
   def openFresh(corpus: DataFrame, idxRel: DataFrame)
       : Option[(Seq[(Long, Seq[Double])], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    base.open(spark, DirKey, TrustKey) { (dir, trusted) =>
       val cents = storedCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted &&
-        graft.operators.SimilarityQueries.centroidList(corpus) != cents) {
-        System.err.println(s"[vectorstore] $dir codebook differs from this corpus's — assigning inline")
-        return None
+      if (!trusted && graft.operators.SimilarityQueries.centroidList(corpus) != cents)
+        base.stale(dir)
+      else base.fresh(spark, dir, trusted, Seq(digestOf(idxRel))).map { days =>
+        (cents,
+          // zero live days: the index is legitimately empty (an empty
+          // assign/ has no schema to infer — serve the typed relation)
+          if (days.isEmpty) spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            idxRel.select(col("vec_id").as("n_id"),
+              col("embedding").as("n_vec"), lit(0L).as("bkt")).schema)
+          else base.live(spark, dir, "assign", days).select("n_id", "n_vec", "bkt"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta")
-      if (!trusted && digestOf(idxRel) != stored) {
-        System.err.println(s"[vectorstore] $dir is stale for this index — assigning inline")
-        None
-      } else if (days.isEmpty) {
-        // zero live days: the index is legitimately empty (empty
-        // assign/ has no schema to infer — serve the typed relation)
-        Some((cents, spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          idxRel.select(col("vec_id").as("n_id"),
-            col("embedding").as("n_vec"), lit(0L).as("bkt")).schema)))
-      } else Some((cents,
-        spark.read.parquet(days.map(d => s"$dir/assign/day=${d._1}"): _*)
-          .select("n_id", "n_vec", "bkt")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir unreadable (${e.getMessage}) — assigning inline")
-        None
     }
   }
 }

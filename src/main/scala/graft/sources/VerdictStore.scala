@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,8 +67,8 @@ import org.apache.spark.sql.types._
   *   <dir>/ev_sem/bench=B/src=dN/  (doc_id, eval_doc, sim)
   *   <dir>/ev_img/bench=B/src=dN/  (doc_id, eval_doc, hamming)
   *   <dir>/base/day=N/             (doc_id, in_txt, in_emb, in_img)
-  *   <dir>/suite_meta/bench=B/     (n/dg per modality)  bench commit, LAST
-  *   <dir>/day_meta/day=N/         (n/dg per modality)  day commit, LAST
+  *   <dir>/suite_meta/bench=B/     [[PartitionedStore]] metas over (txt, emb, img)
+  *   <dir>/day_meta/day=N/         [[PartitionedStore]] metas over (txt, emb, img)
   * }}}
   *
   * Freshness ([[openFreshThreeEye]]/[[openFreshTwoEye]]): XOR-composed
@@ -78,12 +76,8 @@ import org.apache.spark.sql.types._
   * XOR-composed per-benchmark metas the offered suite's — one hash
   * scan per offered relation, no probe, no decode (the train img side
   * is digested over HASHES, which q197/q198's callers already hold
-  * via [[MediaHashStore]]'s dispatch). Stale/missing/torn ⇒ None —
-  * the caller recomputes inline: cost, never a missed pair. Commit
-  * points: metas land LAST on advance and are deleted FIRST on
-  * retire, so a crash in either direction leaves the store stale (→
-  * inline), never wrong, and every advance is retire-then-write
-  * convergent under replay.
+  * via [[MediaHashStore]]'s dispatch). Commit order, orphans and the
+  * fallback are [[PartitionedStore]]'s.
   */
 object VerdictStore {
 
@@ -139,6 +133,11 @@ object VerdictStore {
   private def lockFor(dir: String): Object =
     dirLocks.computeIfAbsent(dir, _ => new Object)
 
+  /** Per-eye digests of one corpus side: (n, xor) for txt, emb, img,
+    * each subset-decomposable so day/bench partitions compose. */
+  private type Dg = Seq[(Long, Long)]
+  private val Eyes = Seq("txt", "emb", "img")
+
   /** Benchmark names splice into partition paths (`bench=<name>`), so
     * a name containing the partition separator would write under one
     * path and be read back truncated at the first '=' — the digest
@@ -167,13 +166,20 @@ object VerdictStore {
         "once in the offered suite — duplicate evidence would inflate hit counts")
   }
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  /** The ingest face's layout: per-day metas over (txt, emb, img),
+    * the day's base partition as payload. Evidence partitions are
+    * `src=d<day>` under every benchmark, so [[retireDay]] drops those
+    * itself. */
+  private val dayLayout = new PartitionedStore("verdictstore", "day", Seq("base"),
+    Eyes, meta = "day_meta")
 
-  /** The three per-modality digests of one corpus side — (n, xor) per
-    * eye, each subset-decomposable so day/bench partitions compose. */
-  private def digests(c: Corpus): ((Long, Long), (Long, Long), (Long, Long)) =
-    (SignatureStore.digestOf(c.txt), VectorIndexStore.digestOf(c.emb),
+  /** The suite face's layout: per-benchmark metas, the benchmark's
+    * evidence under each eye as payload. */
+  private val suiteLayout = new PartitionedStore("verdictstore", "bench",
+    Seq("ev_gram", "ev_sem", "ev_img"), Eyes, meta = "suite_meta")
+
+  private def digests(c: Corpus): Dg =
+    Seq(SignatureStore.digestOf(c.txt), VectorIndexStore.digestOf(c.emb),
       MediaHashStore.digestOf(c.img))
 
   /** Maintainer-write digests of a PINNED corpus: whole-relation
@@ -181,25 +187,9 @@ object VerdictStore {
     * committed meta must describe the snapshot the just-written
     * evidence derived from, and the per-file path re-reads disk behind
     * the pin (ADVICE r17; [[FileDigests.digestOfPinned]]). */
-  private def digestsPinned(c: Corpus): ((Long, Long), (Long, Long), (Long, Long)) =
-    (SignatureStore.digestOfPinned(c.txt), VectorIndexStore.digestOfPinned(c.emb),
+  private def digestsPinned(c: Corpus): Dg =
+    Seq(SignatureStore.digestOfPinned(c.txt), VectorIndexStore.digestOfPinned(c.emb),
       MediaHashStore.digestOfPinned(c.img))
-
-  /** Meta rows are the stores' COMMIT points, and the probe between a
-    * mutator's entry check and its meta write is long — re-check the
-    * lease immediately before committing so a writer fenced mid-probe
-    * fails loud HERE instead of committing metas over a new owner's
-    * content (ADVICE r17). The residual window is one FS write: a fence
-    * landing inside it still reads as stale (digest backstop), never
-    * wrong. */
-  private def writeMetaRow(spark: SparkSession, dir: String, path: String,
-      d: ((Long, Long), (Long, Long), (Long, Long))): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    spark.createDataFrame(Seq(
-        (d._1._1, d._1._2, d._2._1, d._2._2, d._3._1, d._3._2)))
-      .toDF("n_txt", "dg_txt", "n_emb", "dg_emb", "n_img", "dg_img")
-      .coalesce(1).write.parquet(path)
-  }
 
   // ------------------------------------------------------- build
 
@@ -228,7 +218,6 @@ object VerdictStore {
     suite.foreach { case (name, _) => requireSafeBenchName(name) }
     val spark = train.txt.sparkSession
     lockFor(dir).synchronized {
-    StoreLease.checkWrite(spark, dir)
     StoreLease.replaceContents(spark, dir)
     spark.createDataFrame(Seq((tau, maxHamming)))
       .toDF("tau", "max_hamming")
@@ -246,7 +235,7 @@ object VerdictStore {
     suite.foreach { case (name, c) =>
       // Write path: aggregate digests, never the per-file cache — the
       // uniform maintainer-commit rule (FileDigests.digestOfPinned).
-      writeMetaRow(spark, dir, s"$dir/suite_meta/bench=$name", digestsPinned(c))
+      suiteLayout.commit(spark, dir, name, digestsPinned(c): _*)
     }
     advanceDay(train, suite, dir, day)
     }
@@ -284,7 +273,7 @@ object VerdictStore {
   private def writeEvidence(dir: String, eye: String, bench: String,
       ev: DataFrame): Unit =
     ev.write.mode("append").partitionBy("src")
-      .parquet(s"$dir/ev_$eye/bench=$bench")
+      .parquet(suiteLayout.path(dir, s"ev_$eye", bench))
 
   // --------------------------------------------------- day advance
 
@@ -293,9 +282,7 @@ object VerdictStore {
     * suite metas — a drifted suite would mix evidence from two
     * different suites into one store, a WRONG future serve, so the
     * mismatch fails loud instead of demoting), write its evidence,
-    * base and day meta (commit point, LAST). Idempotent per day
-    * (unconditional retire-then-write) so at-least-once replay
-    * converges.
+    * base and day meta (commit point, LAST).
     *
     * Cost shape per batch: one batch winnow (cached across benchmark
     * probes — equal plans hit the CacheManager), one batch codebook
@@ -314,7 +301,7 @@ object VerdictStore {
     // it per benchmark made every micro-batch O(B²) in driver-side
     // parquet opens) — the metas cannot change mid-call, the dir lock
     // holds.
-    val storedMetas = readMetas(spark, s"$dir/suite_meta", "bench")
+    val storedMetas = suiteLayout.metas(spark, dir)
     // The offered suite must name EVERY stored benchmark, not just be
     // a subset of it (r17 advice, high): an ingest face whose captured
     // `suite` predates a concurrent advanceBenchmark would otherwise
@@ -367,19 +354,19 @@ object VerdictStore {
           .withColumn("in_emb", lit(true))
         val i = pinned.img.select(col("media_id").as("doc_id"))
           .withColumn("in_img", lit(true))
-        t.join(e, Seq("doc_id"), "full_outer")
+        dayLayout.write(t.join(e, Seq("doc_id"), "full_outer")
           .join(i, Seq("doc_id"), "full_outer")
           .select(col("doc_id"),
             coalesce(col("in_txt"), lit(false)).as("in_txt"),
             coalesce(col("in_emb"), lit(false)).as("in_emb"),
-            coalesce(col("in_img"), lit(false)).as("in_img"))
-          .write.parquet(s"$dir/base/day=$day")
+            coalesce(col("in_img"), lit(false)).as("in_img")),
+          dir, "base", day.toString)
         // Day meta LAST — the commit point. Digests are taken over the
         // PINNED batch via the whole-relation aggregate — the same
         // evaluation the evidence derived from (the WinnowStore tear
         // argument); the per-file cache would re-read disk behind the
         // pin (ADVICE r17).
-        writeMetaRow(spark, dir, s"$dir/day_meta/day=$day", digestsPinned(pinned))
+        dayLayout.commit(spark, dir, day.toString, digestsPinned(pinned): _*)
       } finally {
         pinned.txt.unpersist(blocking = false): Unit
         pinned.emb.unpersist(blocking = false): Unit
@@ -397,10 +384,8 @@ object VerdictStore {
     * this retire is total). */
   def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
       lockFor(dir).synchronized {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/day_meta/day=$day"), true): Unit
-    f.delete(new Path(s"$dir/base/day=$day"), true): Unit
+    dayLayout.retire(spark, dir, day.toString)
+    val f = PartitionedStore.fs(spark, dir)
     Seq("ev_gram", "ev_sem", "ev_img").foreach { eye =>
       val root = new Path(s"$dir/$eye")
       if (f.exists(root))
@@ -437,9 +422,8 @@ object VerdictStore {
       val pinnedBench = Corpus(bench.txt.persist(), bench.emb.persist(),
         bench.img.persist())
       try {
-        val dayRows = readMetas(spark, s"$dir/day_meta", "day")
-        val composed = composeDigests(dayRows.map(_._2))
-        require(composed == digestsPinned(pinned),
+        val dayRows = dayLayout.metas(spark, dir)
+        require(dayLayout.composed(dayRows) == digestsPinned(pinned),
           s"verdict store $dir: offered history does not match the live day metas — " +
             "a benchmark advanced over partial history would silently miss docs")
         val liveDays = dayRows.map(_._1)
@@ -452,8 +436,7 @@ object VerdictStore {
         writeEvidence(dir, "gram", name, attributed(g, "in_txt"))
         writeEvidence(dir, "sem", name, attributed(s, "in_emb"))
         writeEvidence(dir, "img", name, attributed(i, "in_img"))
-        writeMetaRow(spark, dir, s"$dir/suite_meta/bench=$name",
-          digestsPinned(pinnedBench))
+        suiteLayout.commit(spark, dir, name, digestsPinned(pinnedBench): _*)
       } finally {
         Seq(pinned, pinnedBench).foreach { c =>
           c.txt.unpersist(blocking = false): Unit
@@ -471,53 +454,18 @@ object VerdictStore {
     * benchmark had never been in the suite. */
   def retireBenchmark(name: String, spark: SparkSession, dir: String): Unit =
       lockFor(dir).synchronized {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/suite_meta/bench=$name"), true): Unit
-    Seq("ev_gram", "ev_sem", "ev_img").foreach(eye =>
-      f.delete(new Path(s"$dir/$eye/bench=$name"), true): Unit)
+    suiteLayout.retire(spark, dir, name)
   }
 
   // ------------------------------------------------------- serve
 
-  private type Dg = ((Long, Long), (Long, Long), (Long, Long))
-
   /** Meta partitions under `root` as (partition value, per-eye
-    * digests) — bench names for suite_meta, day ints (as strings) for
-    * day_meta. Bounded: one row per benchmark/day.
-    *
-    * ONE partitioned read per meta root (VERDICT r16 next-1), not one
-    * `spark.read.parquet(p).head()` per partition: the per-partition
-    * form cost O(B + D) SERIAL driver plan-executions per serve —
-    * ~1050 at the store's own 50-benchmark × 1000-day design point,
-    * the same bottleneck class the evidence path shed in 7e4338a. The
-    * explicit schema (partition column included, declared StringType
-    * so day=-1 and bench names come back as raw strings) skips footer
-    * inference, so the whole call is one listing + one collect of a
-    * B- or D-row result. A torn meta partition (dir without committed
-    * files) simply contributes no row — exactly the commit-point
-    * semantics: a day/bench without its meta is not live. Partition
-    * values are URL-unescaped by discovery, which is identity for
-    * legal names ([[requireSafeBenchName]] rejects '%'). */
+    * digests): ONE partitioned read per meta root (VERDICT r16
+    * next-1), never a `head()` per partition — [[PartitionedStore]]'s
+    * meta read. */
   private[sources] def readMetas(spark: SparkSession, root: String,
-      partCol: String): Seq[(String, Dg)] = {
-    if (!fs(spark, root).exists(new Path(root))) return Seq.empty
-    val schema = StructType(
-      Seq("n_txt", "dg_txt", "n_emb", "dg_emb", "n_img", "dg_img")
-        .map(StructField(_, LongType)) :+ StructField(partCol, StringType))
-    spark.read.schema(schema).option("basePath", root).parquet(root)
-      .collect().map { r =>
-        (r.getString(6),
-          ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)),
-            (r.getLong(4), r.getLong(5))))
-      }.toSeq
-  }
-
-  private def composeDigests(ds: Seq[Dg]): Dg = {
-    def comp(sel: Dg => (Long, Long)) =
-      (ds.map(sel(_)._1).sum, ds.map(sel(_)._2).foldLeft(0L)(_ ^ _))
-    (comp(_._1), comp(_._2), comp(_._3))
-  }
+      partCol: String): Seq[(String, Dg)] =
+    PartitionedStore.metasAt(spark, root, partCol, Eyes)
 
   private def evSchema(eye: String): StructType = eye match {
     case "gram" => StructType(Seq(StructField("doc_id", LongType),
@@ -553,7 +501,7 @@ object VerdictStore {
     // serves all-keep, correctly. Any OTHER read failure propagates
     // loudly — after the freshness digests passed, silently serving
     // empty evidence would under-report contamination.
-    if (!fs(spark, dir).exists(new Path(root)))
+    if (!PartitionedStore.fs(spark, dir).exists(new Path(root)))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
     spark.read
@@ -565,31 +513,24 @@ object VerdictStore {
       .select(cols: _*)
   }
 
-  /** Everything a serve needs, or None when unset/unreadable/stale:
-    * (live benches, live days, their composed digests). */
-  private def opened(spark: SparkSession): Option[(String, Seq[String], Seq[String], Dg, Dg)] = {
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      val suiteRows = readMetas(spark, s"$dir/suite_meta", "bench")
-      val dayRows = readMetas(spark, s"$dir/day_meta", "day")
-      if (suiteRows.isEmpty || dayRows.isEmpty) {
-        System.err.println(s"[verdictstore] $dir has no live benchmarks/days — recomputing inline")
-        None
-      } else Some((dir, suiteRows.map(_._1), dayRows.map(_._1),
-        composeDigests(suiteRows.map(_._2)), composeDigests(dayRows.map(_._2))))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[verdictstore] unreadable (${e.getMessage}) — recomputing inline")
-        None
+  /** The serve gate every face shares: None (one driver-log line)
+    * when the store is unset, unreadable, has no live benchmark or
+    * day, or `fresh(dir, trusted, suite digest, day digest)` fails;
+    * otherwise `serve(dir, live benches, live days)`. */
+  private def served(spark: SparkSession)(fresh: (String, Boolean, Dg, Dg) => Boolean)(
+      serve: (String, Seq[String], Seq[String]) => DataFrame): Option[DataFrame] =
+    suiteLayout.open(spark, DirKey, TrustKey) { (dir, trusted) =>
+      val suiteRows = suiteLayout.metas(spark, dir)
+      val dayRows = dayLayout.metas(spark, dir)
+      if (suiteRows.isEmpty || dayRows.isEmpty) suiteLayout.fallback(dir, "empty")
+      else if (!fresh(dir, trusted, suiteLayout.composed(suiteRows), dayLayout.composed(dayRows)))
+        suiteLayout.stale(dir)
+      else Some(serve(dir, suiteRows.map(_._1), dayRows.map(_._1)))
     }
-  }
 
   private def baseIds(spark: SparkSession, dir: String, days: Seq[String],
       flag: String): DataFrame =
-    spark.read.parquet(s"$dir/base")
-      .where(col("day").isin(days.map(_.toInt): _*) && col(flag))
-      .select("doc_id")
+    dayLayout.live(spark, dir, "base", days).where(col(flag)).select("doc_id")
 
   private def gramVerdict(spark: SparkSession, dir: String,
       benches: Seq[String], days: Seq[String]): DataFrame =
@@ -615,32 +556,22 @@ object VerdictStore {
       maxHamming: Int = graft.operators.MediaQueries.MaxHamming)
       : Option[DataFrame] = {
     val spark = train.txt.sparkSession
-    opened(spark).flatMap { case (dir, benches, days, suiteDg, dayDg) =>
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      val fresh =
-        try
-          // Thresholds are part of freshness (review r16 finding 2): a
-          // store built at a different τ / hamming radius holds
-          // evidence thresholded differently from what the caller's
-          // verdict contract promises — digest-fresh data, WRONG
-          // verdicts. Never trusted away: params are one driver row.
-          storedParams(spark, dir) == ((tau, maxHamming)) &&
-            (trusted || (digests(suite) == suiteDg && digests(train) == dayDg))
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[verdictstore] $dir freshness scan failed (${e.getMessage}) — recomputing inline")
-            false
-        }
-      if (!fresh) {
-        System.err.println(s"[verdictstore] $dir is stale for this corpus/suite — recomputing inline")
-        None
-      } else Some(graft.streaming.DeconGate.composeThreeEye(
+    served(spark) { (dir, trusted, suiteDg, dayDg) =>
+      // Thresholds are part of freshness (review r16 finding 2): a
+      // store built at a different τ / hamming radius holds evidence
+      // thresholded differently from what the caller's verdict contract
+      // promises — digest-fresh data, WRONG verdicts. Never trusted
+      // away: params are one driver row.
+      storedParams(spark, dir) == ((tau, maxHamming)) &&
+        (trusted || (digests(suite) == suiteDg && digests(train) == dayDg))
+    } { (dir, benches, days) =>
+      graft.streaming.DeconGate.composeThreeEye(
         graft.streaming.DeconGate.composeTwoEye(
           gramVerdict(spark, dir, benches, days),
           semVerdict(spark, dir, benches, days)),
         graft.streaming.DeconGate.flagMediaFromPairs(
           baseIds(spark, dir, days, "in_img"),
-          readEvidence(spark, dir, "img", benches, days))))
+          readEvidence(spark, dir, "img", benches, days)))
     }
   }
 
@@ -660,23 +591,11 @@ object VerdictStore {
       maxHamming: Int = graft.operators.MediaQueries.MaxHamming)
       : Option[DataFrame] = {
     val spark = trainImg.sparkSession
-    opened(spark).flatMap { case (dir, benches, days, suiteDg, dayDg) =>
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      val fresh =
-        try
-          storedParams(spark, dir)._2 == maxHamming && (trusted ||
-            (MediaHashStore.digestOf(suiteImg) == suiteDg._3 &&
-              MediaHashStore.digestOf(trainImg) == dayDg._3))
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[verdictstore] $dir freshness scan failed (${e.getMessage}) — recomputing inline")
-            false
-        }
-      if (!fresh) {
-        System.err.println(s"[verdictstore] $dir is stale for these media hashes — recomputing inline")
-        None
-      } else Some(readEvidence(spark, dir, "img", benches, days))
-    }
+    served(spark) { (dir, trusted, suiteDg, dayDg) =>
+      storedParams(spark, dir)._2 == maxHamming && (trusted ||
+        (MediaHashStore.digestOf(suiteImg) == suiteDg(2) &&
+          MediaHashStore.digestOf(trainImg) == dayDg(2)))
+    } { (dir, benches, days) => readEvidence(spark, dir, "img", benches, days) }
   }
 
   /** The stored TWO-EYE verdict relation (q196's shape) — the same
@@ -689,29 +608,19 @@ object VerdictStore {
       tau: Double = graft.operators.SimilarityQueries.SemDeconTau)
       : Option[DataFrame] = {
     val spark = trainTxt.sparkSession
-    opened(spark).flatMap { case (dir, benches, days, suiteDg, dayDg) =>
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      val fresh =
-        try
-          // τ is part of freshness (the three-eye face's argument); the
-          // hamming radius is not compared here — a two-eye reader
-          // ignores the media evidence the radius thresholded.
-          storedParams(spark, dir)._1 == tau && (trusted ||
-          ((SignatureStore.digestOf(suiteTxt), VectorIndexStore.digestOf(suiteEmb)) ==
-            ((suiteDg._1, suiteDg._2)) &&
-          (SignatureStore.digestOf(trainTxt), VectorIndexStore.digestOf(trainEmb)) ==
-            ((dayDg._1, dayDg._2))))
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[verdictstore] $dir freshness scan failed (${e.getMessage}) — recomputing inline")
-            false
-        }
-      if (!fresh) {
-        System.err.println(s"[verdictstore] $dir is stale for this corpus/suite — recomputing inline")
-        None
-      } else Some(graft.streaming.DeconGate.composeTwoEye(
+    served(spark) { (dir, trusted, suiteDg, dayDg) =>
+      // τ is part of freshness (the three-eye face's argument); the
+      // hamming radius is not compared here — a two-eye reader ignores
+      // the media evidence the radius thresholded.
+      storedParams(spark, dir)._1 == tau && (trusted ||
+        (Seq(SignatureStore.digestOf(suiteTxt), VectorIndexStore.digestOf(suiteEmb)) ==
+          suiteDg.take(2) &&
+        Seq(SignatureStore.digestOf(trainTxt), VectorIndexStore.digestOf(trainEmb)) ==
+          dayDg.take(2)))
+    } { (dir, benches, days) =>
+      graft.streaming.DeconGate.composeTwoEye(
         gramVerdict(spark, dir, benches, days),
-        semVerdict(spark, dir, benches, days)))
+        semVerdict(spark, dir, benches, days))
     }
   }
 }

@@ -1,35 +1,21 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Day-partitioned store for the video SEGMENT fingerprint index —
-  * takedown parity for the third media modality (VERDICT r12 missing
-  * item 3). Image hashes ([[MediaHashStore]]) and audio fingerprints
-  * already ride a day-partitioned store; video segment fingerprints
-  * ([[graft.multimodal.VideoSegDedup.segmentFingerprints]]) were still
-  * derived inline every run, so a takedown of one day of video meant
-  * re-DECODING the whole segment index — the one cost the index
-  * exists to amortize.
+/** Day-partitioned store for the video SEGMENT fingerprint index, on
+  * the [[PartitionedStore]] contract. Segment fingerprints
+  * ([[graft.multimodal.VideoSegDedup.segmentFingerprints]]) decode
+  * once at ingest, so a takedown of one day of video never re-decodes
+  * the rest: `VideoSegDedup.sharedSegmentPairs(open(...))` after a
+  * retire equals the pairs of an index REBUILT without that day
+  * (spec-pinned).
   *
-  * Same algebra as its siblings: [[advanceDay]] decodes only its own
-  * batch, [[retireDay]] drops a day's partition and XORs its digest
-  * back out, and [[open]] serves the composed (video_id, seg_fp)
-  * relation with zero decodes — so
-  * `VideoSegDedup.sharedSegmentPairs(open(...))` after a retire equals
-  * the pairs of an index REBUILT without that day (spec-pinned).
-  *
-  * The per-day digest is over (video_id, seg_fp) rows — a video with
-  * N eligible segments contributes N rows, exact under union /
-  * difference of disjoint day batches, verifiable without touching a
-  * single container byte.
-  *
-  * Layout under one root:
   * {{{
   *   <dir>/segs/day=N/  (video_id, seg_fp)
-  *   <dir>/meta/        (day, n_segs, digest) one row per day
   * }}}
+  * The per-day digest is over the stored (video_id, seg_fp) rows,
+  * verifiable without touching a single container byte.
   */
 object VideoSegStore {
 
@@ -38,8 +24,7 @@ object VideoSegStore {
     * exposes. Default false: verify. */
   val TrustKey = "spark.graft.videostore.trust"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val layout = new PartitionedStore("videostore", "day", Seq("segs"), Seq("segs"))
 
   /** Order-independent digest of a fingerprint batch:
     * (count, XOR of xxhash64(video_id, seg_fp)) — [[FileDigests]]-cached
@@ -47,89 +32,39 @@ object VideoSegStore {
   def digestOf(fps: DataFrame): (Long, Long) =
     FileDigests.digestOf(fps, xxhash64(col("video_id"), col("seg_fp")))
 
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      fpBatch: DataFrame, mode: String): Unit = {
-    fpBatch.select("video_id", "seg_fp").withColumn("day", lit(day))
-      .write.mode(mode).partitionBy("day").parquet(s"$dir/segs")
-    // Meta lands LAST (the commit point), and the digest is computed
-    // from the JUST-WRITTEN partition, not the batch plan again — the
-    // decode behind segmentFingerprints is exactly the kind of
-    // re-evaluated input whose second run must not be trusted to
-    // reproduce byte-identically (MediaHashStore.writeDay's argument).
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    val (n, dg) = digestOf(spark.read.parquet(s"$dir/segs/day=$day"))
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_segs", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
-  }
-
   /** Build a fresh store from an already-fingerprinted
     * (video_id, seg_fp) relation, replacing any prior content. */
   def build(fps: DataFrame, dir: String, day: Int = 0): Unit = {
-    val spark = fps.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, fps, "errorifexists")
+    StoreLease.replaceContents(fps.sparkSession, dir)
+    advanceDay(fps, dir, day)
   }
 
-  /** Append one ingest day of segment fingerprints (the day's videos
-    * decode exactly once, here). Idempotent per day — the retire is
-    * UNCONDITIONAL (not meta-guarded), so a replayed advance after a
-    * crashed build (segs/day=N written, meta never committed) rewrites
-    * the orphan partition instead of appending duplicate rows into it
-    * (ADVICE r13). */
+  /** Append (or replace) one ingest day of segment fingerprints (the
+    * day's videos decode exactly once, here). */
   def advanceDay(fpBatch: DataFrame, dir: String, day: Int): Unit = {
     val spark = fpBatch.sparkSession
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, fpBatch, "append")
-  }
-
-  /** Retire one day (takedown/expiry): drop its partition, XOR its
-    * digest out — the retired day's videos become unfindable with zero
-    * decodes and zero touches of other days. Safe on a torn store: the
-    * partition drop never needs the meta, and the XOR-heal is skipped
-    * when no meta was ever committed (ADVICE r13 — retire must be able
-    * to REPAIR a crashed build, not throw on it). */
-  def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/segs/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_segs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** The stored index across all live days, digest-verified unless
-    * [[TrustKey]] is set. Retiring the LAST live day serves an empty
-    * relation — after verifying `segs/` holds no orphan day partition
-    * (a crashed advance's data without its meta row must raise the
-    * torn error, not silently drop candidates — the MediaHashStore r13
-    * fix, carried here from birth). */
-  def open(spark: SparkSession, dir: String): DataFrame = {
-    val m = spark.read.parquet(s"$dir/meta")
-      .agg(coalesce(sum("n_segs"), lit(0L)),
-        coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-    val stored = (m.getLong(0), m.getLong(1))
-    val trusted = spark.conf.get(TrustKey, "false").toBoolean
-    if (stored._1 == 0L) {
-      if (!trusted) {
-        val f = fs(spark, dir)
-        val segsPath = new Path(s"$dir/segs")
-        val orphans = f.exists(segsPath) &&
-          f.listStatus(segsPath).exists(_.getPath.getName.startsWith("day="))
-        require(!orphans,
-          s"video segment store $dir is torn: segs/ has day partitions but the meta sums to zero")
-      }
-      import spark.implicits._
-      return Seq.empty[(Long, String)].toDF("video_id", "seg_fp")
+    layout.advance(spark, dir, day.toString) {
+      layout.write(fpBatch.select("video_id", "seg_fp"), dir, "segs", day.toString)
+      // The digest is computed from the JUST-WRITTEN partition, not the
+      // batch plan again — the decode behind segmentFingerprints is
+      // exactly the kind of re-evaluated input whose second run must
+      // not be trusted to reproduce byte-identically.
+      Seq(layout.digestWritten(spark, dir, "segs", day.toString, digestOf))
     }
-    val idx = spark.read.parquet(s"$dir/segs").select("video_id", "seg_fp")
-    if (!trusted)
-      require(digestOf(idx) == stored,
-        s"video segment store $dir is torn: partition digest != meta digest $stored")
-    idx
   }
+
+  /** Retire one day (takedown/expiry): the retired day's videos become
+    * unfindable with zero decodes and zero touches of other days. */
+  def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
+    layout.retire(spark, dir, day.toString)
+
+  /** The stored index across all live days, verified (orphan-free,
+    * digest-matching) unless [[TrustKey]] is set. Retiring the LAST
+    * live day serves an empty relation. */
+  def open(spark: SparkSession, dir: String): DataFrame =
+    layout.verified(spark, dir, "segs", spark.conf.get(TrustKey, "false").toBoolean,
+      digestOf) {
+      import spark.implicits._
+      Seq.empty[(Long, String)].toDF("video_id", "seg_fp")
+    }.select("video_id", "seg_fp")
 }

@@ -1,38 +1,20 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Day-partitioned store for the substring-dedup char-winnow
-  * fingerprint index — [[SignatureStore]]'s maintenance contract
-  * applied to the substring tier (VERDICT r10 missing item 2).
+  * fingerprint index, on the [[PartitionedStore]] contract.
   *
   * q152's daily probe reads a history fingerprint index
   * (`SubstringDedup.charWinnowOf`: (doc_id, fp), ~1/FpW the density of
-  * the corpus's character positions, 8-byte values). Before this store
-  * that index was build-once: correct for a static history, but a
-  * 100 TB pipeline's history GROWS a batch per day and SHRINKS under
-  * takedown — and re-winnowing the whole history for either is exactly
-  * the corpus-proportional rescan the incremental path exists to
-  * avoid.
+  * the corpus's character positions, 8-byte values). A history that
+  * grows a batch per day and shrinks under takedown would otherwise be
+  * re-winnowed whole for either.
   *
-  * Layout under one root:
   * {{{
   *   <dir>/fps/day=N/   (doc_id, fp)         winnowed fingerprints
-  *   <dir>/meta/        (day, n_docs, digest) one row per day
   * }}}
-  *
-  * Same freshness algebra as the signature store: per-day corpus
-  * digest `(count, XOR of xxhash64(doc_id, text))`, XOR-composed on
-  * read, so [[advanceDay]] never reads prior days' SOURCE data (the
-  * spec deletes day 0's source and day 1 still advances) and
-  * [[retireDay]] heals the digest exactly by XOR-ing the day back out.
-  * [[openFresh]] recomputes the offered history's digest with one
-  * narrow scan and serves the stored index only on an exact match —
-  * a stale store costs a rebuild, never a wrong span.
+  * The digest is [[SignatureStore.digestOf]] over the source documents.
   */
 object WinnowStore {
 
@@ -42,104 +24,48 @@ object WinnowStore {
   /** Session conf: skip the digest freshness scan and trust the store. */
   val TrustKey = "spark.graft.winnowstore.trust"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      docBatch: DataFrame, mode: String): Unit = {
-    // The batch is evaluated twice (the fps write, then the digest).
-    // Pin it across both so a non-deterministic batch plan (a sampled
-    // or raced source) cannot persist a digest that doesn't cover the
-    // rows the fps were winnowed from — that state is permanently
-    // "stale" with no recovery besides a rebuild. Unlike
-    // MediaHashStore the digest can't be recomputed from the written
-    // partition (it covers the SOURCE text, which openFresh re-digests
-    // from the offered history; the fps are a lossy derivation).
-    val pinned = docBatch.persist()
-    try {
-      graft.operators.SubstringDedup.charWinnowOf(pinned)
-        .withColumn("day", lit(day))
-        .write.mode(mode).partitionBy("day").parquet(s"$dir/fps")
-      // Meta lands LAST — the commit point (same crash story as
-      // SignatureStore.writeDay: a torn day isn't covered by the digest,
-      // so openFresh reports stale and a replay converges).
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = SignatureStore.digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_docs", "digest")
-        .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
-  }
+  private val layout = new PartitionedStore("winnowstore", "day", Seq("fps"), Seq("docs"))
 
   /** Build a fresh store at `dir` from the full history (replacing any
     * prior content), recorded as `day`. */
   def build(docRel: DataFrame, dir: String, day: Int = 0): Unit = {
-    val spark = docRel.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, docRel, "errorifexists")
+    StoreLease.replaceContents(docRel.sparkSession, dir)
+    advanceDay(docRel, dir, day)
   }
 
-  /** Append one ingest day: winnow ONLY the batch, XOR its digest into
-    * the meta. Idempotent per day (any existing `day=N` content is
-    * retired first), so at-least-once replay converges — the property
-    * [[graft.streaming.WinnowMaintainer]] relies on. */
-  def advanceDay(docBatch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = docBatch.sparkSession
-    // Unconditional retire (ADVICE r13): never append into an orphan
-    // partition a crashed build left behind without its meta.
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, docBatch, "append")
-  }
+  /** Append (or replace) one ingest day: winnow ONLY the batch. */
+  def advanceDay(docBatch: DataFrame, dir: String, day: Int): Unit =
+    layout.advance(docBatch.sparkSession, dir, day.toString) {
+      // The batch is evaluated twice (the fps write, then the digest).
+      // Pin it across both so a non-deterministic batch plan (a sampled
+      // or raced source) cannot persist a digest that doesn't cover the
+      // rows the fps were winnowed from — that state is permanently
+      // "stale" with no recovery besides a rebuild. Unlike
+      // MediaHashStore the digest can't be recomputed from the written
+      // partition (it covers the SOURCE text; the fps are a lossy
+      // derivation).
+      val pinned = docBatch.persist()
+      try {
+        layout.write(graft.operators.SubstringDedup.charWinnowOf(pinned),
+          dir, "fps", day.toString)
+        Seq(SignatureStore.digestOfPinned(pinned))
+      } finally pinned.unpersist(blocking = false): Unit
+    }
 
-  /** Retire one day (takedown/expiry): drop its partition and XOR its
-    * digest back out of the meta. Safe on a torn store (no meta ⇒
-    * partition drop only). */
-  def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/fps/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_docs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  /** Retire one day (takedown/expiry). */
+  def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
+    layout.retire(spark, dir, day.toString)
 
   /** The stored fingerprint index (doc_id, fp) for this history, IF
-    * configured and fresh — None (driver-log line, never an error) on
-    * key unset, unreadable store, or digest mismatch; callers fall
-    * back to `charWinnowOf(history)` directly. */
+    * configured and fresh; None otherwise — callers fall back to
+    * `charWinnowOf(history)` directly. */
   def openFresh(histRel: DataFrame): Option[DataFrame] = {
     val spark = histRel.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      // coalesce: retiring the LAST live day leaves a zero-row meta,
-      // where a bare sum/bit_xor returns null and getLong NPEs — which
-      // used to surface as "unreadable (null)" instead of the legal
-      // empty-store state.
-      val m = spark.read.parquet(s"$dir/meta")
-        .agg(coalesce(sum("n_docs"), lit(0L)),
-          coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-      val stored = (m.getLong(0), m.getLong(1))
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted && SignatureStore.digestOf(histRel) != stored) {
-        System.err.println(s"[winnowstore] $dir is stale for this history — re-winnowing directly")
-        None
-      } else if (stored._1 == 0L) {
-        // zero live days AND the offered history digests empty (or the
-        // caller trusts the store): the index is legitimately empty —
-        // an empty `fps/` dir has no schema to infer, so serve the
-        // typed empty relation directly.
+    layout.openFresh(spark, DirKey, TrustKey, SignatureStore.digestOf(histRel)) { (dir, days) =>
+      if (days.isEmpty) {
         import spark.implicits._
-        Some(Seq.empty[(Long, Long)].toDF("doc_id", "fp"))
-      } else Some(spark.read.parquet(s"$dir/fps").select("doc_id", "fp"))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[winnowstore] $dir unreadable (${e.getMessage}) — re-winnowing directly")
-        None
+        Seq.empty[(Long, Long)].toDF("doc_id", "fp")
+      } else layout.live(spark, dir, "fps", days).select("doc_id", "fp")
     }
   }
 }

@@ -55,8 +55,5 @@ object DeconMaintainer {
     * checkpointLocation, trigger, etc.). */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      applyBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(applyBatch(_, store, sinkId, dir, _))
 }

@@ -9,24 +9,17 @@ import graft.sources.MediaHashStore
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the media hash index's SOURCED face
-  * ([[MediaHashStore]]) — the [[VideoSegMaintainer]] contract for the
-  * decon tier's media eye (r15): each micro-batch of arriving
+  * ([[MediaHashStore]]): each micro-batch of arriving
   * (media_id, text, content) rows is DECODED ONCE, its dHashes
-  * appended as the batch's own day with the day's source digest, so
+  * appended as the batch's own day with the day's source digest,
+  * exactly once ([[BatchDay.applyOnce]]), so
   * [[graft.operators.MediaQueries]]' q197/q198 dispatch
   * ([[MediaHashStore.openFreshFor]]) reads an index current through
   * the last committed batch — the corpus decode happens at ingest,
   * exactly once per payload, and a suite edit later probes stored
-  * 16-byte hashes instead of re-rendering terabytes of images.
-  *
-  * Exactly-once by the tier's two moves:
-  * [[MediaHashStore.advanceDaySourced]] is convergent under replay
-  * (unconditional retire-then-write, SOURCE meta commit point last —
-  * a crashed advance's orphan day is invisible to `openFreshFor`) and
-  * the control-table batch marker makes a committed replay skip the
-  * decode entirely. Per micro-batch the cost is one batch-sized decode
-  * pass + two one-row digests + one partition write + one PK insert —
-  * nothing scales with the stored history.
+  * 16-byte hashes instead of re-rendering terabytes of images. Per
+  * micro-batch the cost is one batch-sized decode pass + two one-row
+  * digests + one partition write + one PK insert.
   */
 object MediaHashMaintainer {
 
@@ -39,38 +32,25 @@ object MediaHashMaintainer {
     * callers hold; payload bytes never outlive the hashing pass. */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
+    BatchDay.applyOnce(batch, store, sinkId, batchId) { (b, day) =>
       // The source digest and the hash rows must derive from the SAME
       // evaluation of a possibly non-deterministic upstream (the
-      // WinnowStore.writeDay argument) — but pinning the RAW batch
-      // would cache every payload byte for the length of the advance
-      // (review r15 finding 4). Instead the hashing pass carries the
-      // caption through and the pinned relation is the NARROW
+      // WinnowStore argument) — but pinning the RAW batch would cache
+      // every payload byte for the length of the advance (review r15
+      // finding 4). Instead the hashing pass carries the caption
+      // through and the pinned relation is the NARROW
       // (media_id, text, dhash) output: payloads dropped in-pass,
       // consistency by construction.
-      // Caches.scoped (ADVICE r15): any kernel pins release on failure
-      // too, and only this batch's — never a sibling stream's.
-      graft.core.Caches.scoped {
-        val pinned = MediaDedup.hashImagesWithSource(
-          batch.select(col("media_id"), col("text"), col("content"))).persist()
-        try {
-          MediaHashStore.advanceDaySourced(
-            pinned.select("media_id", "text"),
-            pinned.select("media_id", "dhash"),
-            dir, BatchDay.of(batchId))
-        } finally pinned.unpersist(blocking = false): Unit
-      }
-      store.markBatch(sinkId, batchId)
+      val pinned = MediaDedup.hashImagesWithSource(
+        b.select(col("media_id"), col("text"), col("content"))).persist()
+      try MediaHashStore.advanceDaySourced(
+        pinned.select("media_id", "text"), pinned.select("media_id", "dhash"), dir, day)
+      finally pinned.unpersist(blocking = false): Unit
     }
 
   /** Wire a streaming media DataFrame (media_id, text, content) into
-    * the maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). */
+    * the maintainer. Caller starts it. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatch(_, store, sinkId, dir, _))
 }

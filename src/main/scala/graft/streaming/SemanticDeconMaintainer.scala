@@ -50,8 +50,5 @@ object SemanticDeconMaintainer {
     * starts it (and owns checkpointLocation, trigger, etc.). */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      applyBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(applyBatch(_, store, sinkId, dir, _))
 }

@@ -9,21 +9,11 @@ import graft.state.JdbcStateStore
 /** Streaming maintenance of the shared [[SignatureStore]] — the glue
   * that closes the loop between streaming ingest and the batch dedup
   * tier: each micro-batch of fresh documents is shingled, signed, and
-  * appended to the store as its own day partition, EXACTLY once, so
-  * the nightly dedup queries (q17/q18/q40/… via `shinglesShared`) read
-  * signatures that are already current through the last committed
-  * micro-batch — no corpus re-shingle at query time.
-  *
-  * Exactly-once with the same two moves as [[TransactionalSink]]:
-  * `foreachBatch` is at-least-once, so (1) the store advance itself is
-  * CONVERGENT under replay — `SignatureStore.advanceDay` retires any
-  * prior `day=N` content before rewriting, and its meta row lands last
-  * as the commit point — and (2) the control-table batch marker
-  * ([[JdbcStateStore.markBatch]], an atomic PK insert) makes a replay
-  * of a fully-committed batch skip the work entirely. Crash matrix:
-  * die mid-advance → digest doesn't cover the torn partition, replay
-  * retires + rewrites; die between advance and marker → replay rewrites
-  * byte-identically then marks; die after marker → replay no-ops.
+  * appended to the store as its own day partition, exactly once
+  * ([[BatchDay.applyOnce]]), so the nightly dedup queries (q17/q18/q40/…
+  * via `shinglesShared`) read signatures that are already current
+  * through the last committed micro-batch — no corpus re-shingle at
+  * query time.
   *
   * Scale: per micro-batch the work is one batch-sized shingle+sign
   * pass, two partition writes, and one PK insert — nothing scales with
@@ -37,25 +27,11 @@ object SignatureMaintainer {
     * skipped). The batch id doubles as the store day. */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // Caches.scoped frees the advance's shingle pins on failure too,
-      // and only this batch's — never a sibling stream's (ADVICE r15).
-      graft.core.Caches.scoped {
-        SignatureStore.advanceDay(batch, dir, BatchDay.of(batchId))
-      }
-      // First-caller-wins marker: if a racing zombie committed first,
-      // its advance stands — both wrote the same convergent content.
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)(SignatureStore.advanceDay(_, dir, _))
 
   /** Wire a streaming document DataFrame (doc_id, text, …) into the
-    * maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). */
+    * maintainer. Caller starts it. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatch(_, store, sinkId, dir, _))
 }

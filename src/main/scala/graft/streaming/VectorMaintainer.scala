@@ -6,115 +6,62 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.sources.VectorIndexStore
 import graft.state.JdbcStateStore
 
-/** Streaming maintenance of the IVF [[VectorIndexStore]] — the
-  * [[WinnowMaintainer]] contract for the vector tier: each micro-batch
-  * of freshly-embedded vectors is bucket-assigned against the FROZEN
-  * stored codebook and appended as its own day partition EXACTLY once,
-  * so q139's daily probe reads an index already current through the
-  * last committed batch — embeddings flow from the embedding service
-  * into the ANN index with no nightly re-assignment job in between.
+/** Streaming maintenance of the IVF [[VectorIndexStore]]: each
+  * micro-batch of freshly-embedded vectors is bucket-assigned against
+  * the FROZEN stored codebook and appended as its own day partition
+  * exactly once ([[BatchDay.applyOnce]]), so q139's daily probe reads
+  * an index already current through the last committed batch —
+  * embeddings flow from the embedding service into the ANN index with
+  * no nightly re-assignment job in between. Per micro-batch the cost
+  * is one batch-sized assignment pass (K·D flops/vector against the
+  * stored quantizer; for the PQ face also the subvector encode against
+  * the frozen PQ codebooks) + one partition write + one PK insert.
   *
-  * Exactly-once by the same two moves: `VectorIndexStore.advanceDay`
-  * is convergent under replay (retire-then-rewrite, meta commit point
-  * last) and the control-table batch marker makes a committed replay
-  * skip the work. Per micro-batch the cost is one batch-sized
-  * assignment pass (K·D flops/vector against the stored quantizer) +
-  * one partition write + one PK insert — nothing scales with the
-  * stored index.
+  * Every face's store must already exist (its `build*`) — a codebook
+  * is a trained artifact, not something a micro-batch may invent. The
+  * batch id doubles as the store day, so build with a day OUTSIDE the
+  * stream's batch-id range (e.g. day = -1 for the initial backfill) or
+  * batch 0 would retire-and-replace it.
   */
 object VectorMaintainer {
 
-  /** Advance the store by one micro-batch exactly once; returns true
-    * when this call performed the advance (false = committed replay
-    * skipped). The batch id doubles as the store day — build the store
-    * with a day OUTSIDE the stream's batch-id range (e.g. day = -1 for
-    * the initial backfill) or batch 0 would retire-and-replace it. */
+  /** Advance the base face (q139) by one micro-batch exactly once;
+    * returns true when this call performed the advance. */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // Caches.scoped (ADVICE r15): kernel pins release on failure too,
-      // and only this batch's — never a sibling stream's.
-      graft.core.Caches.scoped {
-        VectorIndexStore.advanceDay(batch, dir, BatchDay.of(batchId))
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)(VectorIndexStore.advanceDay(_, dir, _))
 
   /** Wire a streaming embedding DataFrame (vec_id, embedding, …) into
-    * the maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). The store must already exist ([[VectorIndexStore
-    * .build]]) — the codebook is a trained artifact, not something a
-    * micro-batch may invent. */
+    * the base face's maintainer. Caller starts it. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
-
-  // ------------------------------------- scaled + scaled-PQ faces (r15)
-  // VERDICT r14 missing-1: the faces the 100 TB deployment actually
-  // serves (xsk's K=⌈√N⌉ flat index, xpk's compressed IVF-PQ) had
-  // idempotent advanceDay*s but nothing wiring daily ingest into them —
-  // maintained by hand while every sibling store had its maintainer.
-  // Same two moves each: the advance is convergent under replay
-  // (unconditional retire-then-write, meta commit point last, only
-  // live-meta days readable), and the control-table batch marker makes
-  // a committed replay skip the work. Per micro-batch the cost is one
-  // batch-sized assignment (√N dots/vector) — plus, for the PQ face,
-  // the batch's subvector encode against the FROZEN PQ codebooks —
-  // nothing ever rescales with the stored index.
+    BatchDay.writer(stream)(advanceBatch(_, store, sinkId, dir, _))
 
   /** Advance the SCALED face (q188/xsk) by one micro-batch exactly
-    * once; returns true when this call performed the advance. The
-    * batch id doubles as the store day — build with a day outside the
-    * stream's batch-id range (e.g. -1). Note the frozen codebook's K
-    * froze at BUILD-time corpus size: a corpus that outgrows its √N
-    * codebook re-[[VectorIndexStore.buildScaled]]s (the Faiss retrain
-    * event); the maintainer only appends under the standing model. */
+    * once. The frozen codebook's K froze at BUILD-time corpus size: a
+    * corpus that outgrows its √N codebook re-[[VectorIndexStore.buildScaled]]s
+    * (the Faiss retrain event); the maintainer only appends under the
+    * standing model. */
   def advanceBatchScaled(batch: DataFrame, store: JdbcStateStore,
       sinkId: String, dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      graft.core.Caches.scoped {
-        VectorIndexStore.advanceDayScaled(batch, dir, BatchDay.of(batchId))
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)(VectorIndexStore.advanceDayScaled(_, dir, _))
 
   /** Wire a streaming embedding DataFrame into the scaled face's
-    * maintainer. The store must already exist
-    * ([[VectorIndexStore.buildScaled]]). */
+    * maintainer. */
   def exactlyOnceScaled(stream: DataFrame, store: JdbcStateStore,
       sinkId: String, dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatchScaled(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatchScaled(_, store, sinkId, dir, _))
 
   /** Advance the SCALED-PQ face (q195/xpk — the compressed serving
     * shape) by one micro-batch exactly once: the batch is coarse-
-    * assigned and PQ-encoded against BOTH frozen codebooks and its
-    * codes appended as the batch's own day. Returns true when this
-    * call performed the advance. */
+    * assigned and PQ-encoded against BOTH frozen codebooks. */
   def advanceBatchPqScaled(batch: DataFrame, store: JdbcStateStore,
       sinkId: String, dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      graft.core.Caches.scoped {
-        VectorIndexStore.advanceDayPqScaled(batch, dir, BatchDay.of(batchId))
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)(VectorIndexStore.advanceDayPqScaled(_, dir, _))
 
   /** Wire a streaming embedding DataFrame into the scaled-PQ face's
-    * maintainer. The store must already exist
-    * ([[VectorIndexStore.buildPqScaled]]). */
+    * maintainer. */
   def exactlyOncePqScaled(stream: DataFrame, store: JdbcStateStore,
       sinkId: String, dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatchPqScaled(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatchPqScaled(_, store, sinkId, dir, _))
 }

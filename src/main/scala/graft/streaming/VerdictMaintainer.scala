@@ -61,13 +61,8 @@ object VerdictMaintainer {
   def advanceBatch(batch: DataFrame, suite: Seq[(String, VerdictStore.Corpus)],
       store: JdbcStateStore, sinkId: String, dir: String,
       batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // advanceDay brackets itself in Caches.scoped (pins release on
-      // failure too, never a sibling stream's).
-      VerdictStore.advanceDay(corpusOf(batch), suite, dir, BatchDay.of(batchId))
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)((b, day) =>
+      VerdictStore.advanceDay(corpusOf(b), suite, dir, day))
 
   /** Wire a streaming (doc_id, text, embedding, content) DataFrame
     * into the ingest maintainer. Caller starts it (and owns
@@ -77,10 +72,7 @@ object VerdictMaintainer {
   def exactlyOnce(stream: DataFrame, suite: Seq[(String, VerdictStore.Corpus)],
       store: JdbcStateStore, sinkId: String, dir: String)
       : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, suite, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatch(_, suite, store, sinkId, dir, _))
 
   /** Apply one micro-batch of suite edits exactly once (the shared
     * [[SuiteEditBatch]] protocol — pinned batch, retires first,
@@ -105,8 +97,5 @@ object VerdictMaintainer {
   def exactlyOnceSuite(stream: DataFrame, history: VerdictStore.Corpus,
       store: JdbcStateStore, sinkId: String, dir: String)
       : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      applySuiteBatch(df, history, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(applySuiteBatch(_, history, store, sinkId, dir, _))
 }

@@ -8,24 +8,14 @@ import graft.sources.VideoSegStore
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the video segment fingerprint index
-  * ([[VideoSegStore]]) — the [[WinnowMaintainer]] contract for the
-  * third media modality, completing the tier's framing (every heavy
-  * artifact gets store + advance/retire + maintainer): each
-  * micro-batch of arriving videos is DECODED ONCE, its segment
-  * fingerprints appended as the batch's own day partition exactly
-  * once, so the daily shared-segment pass reads an index already
-  * current through the last committed batch and never touches a
-  * container byte.
-  *
-  * Exactly-once by the same two moves: [[VideoSegStore.advanceDay]]
-  * is convergent under replay (retire-then-rewrite, meta commit point
-  * last, digest computed from the just-written partition — the decode
-  * behind the fingerprints must never be trusted to reproduce
-  * byte-identically on a replayed plan), and the control-table batch
-  * marker makes a committed replay skip the decode entirely. Per
-  * micro-batch the cost is one batch-sized decode pass + one
-  * partition write + one PK insert — nothing scales with the stored
-  * history.
+  * ([[VideoSegStore]]): each micro-batch of arriving videos is DECODED
+  * ONCE, its segment fingerprints appended as the batch's own day
+  * partition exactly once ([[BatchDay.applyOnce]]), so the daily
+  * shared-segment pass reads an index already current through the last
+  * committed batch and never touches a container byte. A committed
+  * replay skips the decode entirely. Per micro-batch the cost is one
+  * batch-sized decode pass + one partition write + one PK insert —
+  * nothing scales with the stored history.
   */
 object VideoSegMaintainer {
 
@@ -35,24 +25,12 @@ object VideoSegMaintainer {
     * as the store day. */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // Caches.scoped (ADVICE r15): kernel pins release on failure too,
-      // and only this batch's — never a sibling stream's.
-      graft.core.Caches.scoped {
-        VideoSegStore.advanceDay(
-          VideoSegDedup.segmentFingerprints(batch), dir, BatchDay.of(batchId))
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)((b, day) =>
+      VideoSegStore.advanceDay(VideoSegDedup.segmentFingerprints(b), dir, day))
 
   /** Wire a streaming video DataFrame (video_id, content) into the
-    * maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). */
+    * maintainer. Caller starts it. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatch(_, store, sinkId, dir, _))
 }

@@ -6,18 +6,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.sources.WinnowStore
 import graft.state.JdbcStateStore
 
-/** Streaming maintenance of the substring-dedup [[WinnowStore]] — the
-  * [[SignatureMaintainer]] contract for the char-winnow fingerprint
-  * index: each micro-batch of fresh documents is winnowed and appended
-  * as its own day partition EXACTLY once, so q152's daily probe reads
-  * an index already current through the last committed batch.
-  *
-  * Exactly-once by the same two moves: `WinnowStore.advanceDay` is
-  * convergent under replay (retire-then-rewrite, meta commit point
-  * last) and the control-table batch marker makes a committed replay
-  * skip the work. Per micro-batch the cost is one batch-sized winnow
-  * pass + one partition write + one PK insert — nothing scales with
-  * the stored history.
+/** Streaming maintenance of the substring-dedup [[WinnowStore]]: each
+  * micro-batch of fresh documents is winnowed and appended as its own
+  * day partition exactly once ([[BatchDay.applyOnce]]), so q152's daily
+  * probe reads an index already current through the last committed
+  * batch. Per micro-batch the cost is one batch-sized winnow pass + one
+  * partition write + one PK insert — nothing scales with the stored
+  * history.
   */
 object WinnowMaintainer {
 
@@ -26,23 +21,11 @@ object WinnowMaintainer {
     * skipped). The batch id doubles as the store day. */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // Caches.scoped (ADVICE r15): kernel pins release on failure too,
-      // and only this batch's — never a sibling stream's.
-      graft.core.Caches.scoped {
-        WinnowStore.advanceDay(batch, dir, BatchDay.of(batchId))
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    BatchDay.applyOnce(batch, store, sinkId, batchId)(WinnowStore.advanceDay(_, dir, _))
 
   /** Wire a streaming document DataFrame (doc_id, text, …) into the
-    * maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). */
+    * maintainer. Caller starts it. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    BatchDay.writer(stream)(advanceBatch(_, store, sinkId, dir, _))
 }

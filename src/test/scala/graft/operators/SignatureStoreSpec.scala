@@ -31,7 +31,7 @@ class SignatureStoreSpec extends SparkSpec {
   private def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select("d1", "d2").as[(Long, Long)].collect().toSet
 
-  private def withStore(dir: String, trust: Boolean = false)(body: => Unit): Unit = {
+  private def withStore[T](dir: String, trust: Boolean = false)(body: => T): T = {
     spark.conf.set(SignatureStore.DirKey, dir)
     if (trust) spark.conf.set(SignatureStore.TrustKey, "true")
     try body
@@ -143,6 +143,53 @@ class SignatureStoreSpec extends SparkSpec {
       val left = SignatureStore.openFresh(day1).get.sigs
         .select("doc_id").as[Long].collect().toSet
       assert(left == Set(10L, 20L), s"day-0 signatures must be gone: $left")
+    }
+  }
+
+  test("an orphan day (payload written, meta never committed) is not served") {
+    // A crashed or fenced advance of day 1: shingles/ and sigs/ day=1
+    // land, its meta row never does (StoreLease.checkWrite throws at
+    // the commit point after the payload writes). Offered the
+    // pre-advance corpus, the store still digests fresh — and must
+    // serve exactly the day-0 relations.
+    val day0 = corpusDf.where(col("doc_id") < 10L)
+    val day1 = corpusDf.where(col("doc_id") >= 10L)
+    val dir = tmpDir("sigstore_orphan")
+    SignatureStore.build(day0, dir, day = 0)
+    Caches.releaseAll()
+    def rows(s: SignatureStore.Store) =
+      (s.shingles.collect().map(_.toString).toSet, s.sigs.collect().map(_.toString).toSet)
+    val before = withStore(dir)(rows(SignatureStore.openFresh(day0).get))
+    val sh = DedupQueries.shinglesOf(day1)
+    sh.withColumn("day", lit(1))
+      .write.mode("append").partitionBy("day").parquet(s"$dir/shingles")
+    DedupQueries.sigsOf(sh, fastHash = true).withColumn("day", lit(1))
+      .write.mode("append").partitionBy("day").parquet(s"$dir/sigs")
+    Caches.releaseAll()
+    val after = withStore(dir) {
+      val store = SignatureStore.openFresh(day0)
+      assert(store.isDefined, "the pre-advance corpus is still exactly covered")
+      rows(store.get)
+    }
+    assert(after == before, "the orphan day's shingles and signatures must not be served")
+  }
+
+  test("retiring the last live day serves an empty store for an empty corpus") {
+    val dir = tmpDir("sigstore_empty")
+    SignatureStore.build(corpusDf, dir, day = 0)
+    Caches.releaseAll()
+    SignatureStore.retireDay(spark, dir, day = 0)
+    withStore(dir) {
+      // Zero live days: the store digests (0, 0), which an empty corpus
+      // matches — a typed empty store, not "unreadable".
+      val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+      val store = SignatureStore.openFresh(empty)
+      assert(store.isDefined, "zero live days + empty corpus = fresh empty store")
+      assert(store.get.shingles.columns.toSeq == Seq("doc_id", "sh"))
+      assert(store.get.sigs.columns.toSeq == "doc_id" +: (0 until 20).map(i => s"s$i"))
+      assert(store.get.shingles.count() == 0 && store.get.sigs.count() == 0)
+      // a non-empty corpus is correctly stale against the empty store
+      assert(SignatureStore.openFresh(corpusDf).isEmpty)
     }
   }
 }

@@ -47,7 +47,7 @@ class WinnowStoreSpec extends SparkSpec {
     out
   }
 
-  private def withStore(dir: String)(body: => Unit): Unit = {
+  private def withStore[T](dir: String)(body: => T): T = {
     spark.conf.set(WinnowStore.DirKey, dir)
     try body
     finally { spark.conf.unset(WinnowStore.DirKey); Caches.releaseAll() }
@@ -120,6 +120,26 @@ class WinnowStoreSpec extends SparkSpec {
       assert(idx.get.count() == 0)
       // A non-empty history is correctly stale against the empty store.
       assert(WinnowStore.openFresh(day0).isEmpty)
+    }
+  }
+
+  test("an orphan day (payload written, meta never committed) is not served") {
+    // A crashed or fenced advance of day 1: fps/day=1 lands, its meta
+    // row never does. Offered the pre-advance history, the store still
+    // digests fresh — and must serve exactly the day-0 index.
+    val dir = tmpDir("winnow_orphan")
+    WinnowStore.build(day0, dir, day = 0)
+    Caches.releaseAll()
+    def fps(idx: DataFrame) =
+      idx.select("doc_id", "fp").as[(Long, Long)].collect().toSet
+    val day0Fps = withStore(dir)(fps(WinnowStore.openFresh(day0).get))
+    SubstringDedup.charWinnowOf(day1).withColumn("day", lit(1))
+      .write.mode("append").partitionBy("day").parquet(s"$dir/fps")
+    Caches.releaseAll()
+    withStore(dir) {
+      val idx = WinnowStore.openFresh(day0)
+      assert(idx.isDefined, "the pre-advance history is still exactly covered")
+      assert(fps(idx.get) == day0Fps, "the orphan day's fingerprints must not be served")
     }
   }
 
