@@ -69,7 +69,18 @@ object GraftSession {
     * each class before its next use, and a warm pass recompiled 160–166
     * of them. At 1000 a warm pass compiles 4–8, all in q138. Metaspace
     * after two passes is 159.4 MiB against 158.9 MiB at 100. The size
-    * leaves room for sessions that run more of the declared queries. */
+    * leaves room for sessions that run more of the declared queries.
+    *
+    * The cache is keyed by the generated source, and Spark names each
+    * whole-stage class after its codegen stage id. Adaptive execution
+    * numbers stages in the order they are planned, which follows the
+    * order earlier stages finish, so the same stage can come back as
+    * `GeneratedIteratorForCodegenStage3` in one run and `…Stage4` in
+    * the next: two sources, a miss and a recompile, for identical code.
+    * Sessions turn the id out of the class name
+    * (`spark.sql.codegen.useIdInClassName=false`); q138 compiled 2–4
+    * classes on every warm run of the mix before, none after
+    * (`CodegenCacheSpec`). */
   val CodegenCacheEntries = 1000
 
   def builder(master: String = "local[*]", shufflePartitions: Int = 32,
@@ -83,6 +94,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         initialPartitionNum(shufflePartitions, dataDir).toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // parquet TIMESTAMP(NANOS) is otherwise rejected outright; with
       // this flag it reads as a raw long, which Tables.normalizeNanos

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Scale-adaptive scan widening for CPU-bound per-row derivations.
   *
@@ -28,11 +28,18 @@ import org.apache.spark.sql.DataFrame
   * top still reach the parquet scan: the optimizer pushes predicates
   * through `Repartition` (PushDownPredicates), pinned by
   * PlanShapeSpec's PushedFilters checks on the widened families.
+  *
+  * With `keys`, the exchange hash-partitions by them instead of
+  * round-robin: a downstream aggregate or join on the same keys then
+  * plans no exchange of its own (the near-dup tier's per-document set
+  * union rides the widen).
   */
 object Par {
-  def widen(df: DataFrame): DataFrame = {
+  def widen(df: DataFrame, keys: Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (df.rdd.getNumPartitions >= target) df
+    else if (keys.isEmpty) df.repartition(target)
+    else df.repartition(target, keys: _*)
   }
 
 }

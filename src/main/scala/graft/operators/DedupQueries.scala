@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Tables}
+import graft.core.{Caches, Par, Tables}
 import graft.functions.TextExprs
+import graft.sources.SignatureStore
 
 /** Deduplication operators over the `documents` table — the LLM
   * training-data-pipeline surface (BASELINE.json north star): exact
@@ -45,64 +46,93 @@ object DedupQueries {
   private val KmPrime = 1125899906842597L
   private val JaccardThreshold = 0.8
 
-  /** Widened ([[graft.core.Par.widen]]): the shingle explode+distinct
-    * and the signature aggregates are CPU-bound per row, so the
-    * bytes-sized scan partitioning serializes them on a small-file
-    * corpus (r19 profile at sf0.1: the shingle build's map side ran on
-    * one task). At scale the scan is already wide — identity. */
+  /** Widened ([[graft.core.Par.widen]]) and hash-partitioned by
+    * doc_id. Shingling and the signature and SimHash passes are
+    * CPU-bound per row, so the bytes-sized scan partitioning serializes
+    * them on a small-file corpus (r19 profile at sf0.1: the shingle
+    * build's map side ran on one task). Keyed by doc_id, so the
+    * per-document set union of [[rawSetsOf]] plans no exchange of its
+    * own. At scale the scan is already wide — identity. */
   private def docs(spark: SparkSession, dir: String): DataFrame =
-    graft.core.Par.widen(Tables(spark, dir, "documents"))
+    Par.widen(Tables(spark, dir, "documents"), col("doc_id"))
 
-  /** The capped shingle relation, read from the configured
+  /** The capped shingle sets, read from the configured
     * [[graft.sources.SignatureStore]] when one is present AND fresh for
     * this exact corpus (digest match), computed directly otherwise.
     * Every shingle consumer (q17/q18/q40/q138/q141/q146/q42-chain) goes
     * through here, so a pipeline that maintains the store pays the
-    * corpus-wide explode+distinct+df-cap ONCE per ingest day instead of
+    * corpus-wide shingling and df-cap ONCE per ingest day instead of
     * once per query. Correctness is unconditional: the store was
-    * written by [[shinglesOf]] itself, and a stale/missing/foreign
+    * written from [[shinglesOf]] itself, and a stale/missing/foreign
     * store falls back to direct computation. */
   private def shinglesShared(docRel: DataFrame): DataFrame =
-    graft.sources.SignatureStore.openFresh(docRel)
-      // Widened like [[docs]]: the store's single parquet reads as one
-      // split, and every signature aggregate downstream is CPU-bound.
-      .map(s => Caches.persistTracked(graft.core.Par.widen(s.shingles)))
+    shinglesFrom(SignatureStore.openFresh(docRel), docRel)
+
+  /** The store's shingle rows regrouped into sets, else [[shinglesOf]].
+    * The store keeps one row per (doc_id, sh), the layout it has always
+    * had, so stores written by any version open alike. The regroup is
+    * the store path's one shuffle: the widen keys it by doc_id (the
+    * store's parquet reads as one split), the aggregate reuses that
+    * partitioning, and its result is the one persist. */
+  private def shinglesFrom(store: Option[SignatureStore.Store], docRel: DataFrame): DataFrame =
+    store.map(s => Caches.persistTracked(setsOfRows(Par.widen(s.shingles, col("doc_id")))))
       .getOrElse(shinglesOf(docRel))
 
-  /** Distinct word-3-gram shingles per document, document-frequency
-    * capped: (doc_id, sh).
-    *
-    * Persisted: every near-dup pipeline references this relation several
-    * times (both sides of the self-join + per-doc sizes); without
-    * materialization Spark re-runs the explode+distinct for each
-    * reference — at 100 TB that's the difference between one corpus scan
-    * and five. */
-  private[graft] def shinglesOf(docRel: DataFrame): DataFrame = {
-    val toks = TextExprs.tokens(col("text"))
-    // The pre-cap relation persists too: it feeds BOTH the df-cap
-    // aggregate and the join probe, and without its own materialization
-    // the corpus-wide explode+distinct would run twice before the capped
-    // result's persist ever takes effect.
-    val sh = Caches.persistTracked(docRel
-      .select(col("doc_id"), toks.as("w"))
+  /** Distinct word-3-gram shingle set per document, uncapped: (doc_id,
+    * shs, n) with n = |shs|, one row per doc_id. Shingling is a per-row
+    * map. A doc_id on several rows gets the union of their sets, as
+    * DuckDB's `SELECT DISTINCT doc_id, sh` does; that union is an
+    * aggregate by doc_id, which plans no exchange over [[docs]]'
+    * doc_id-keyed widen. A document under [[ShingleN]] tokens has no
+    * row. */
+  private def rawSetsOf(docRel: DataFrame): DataFrame =
+    withSize(docRel
+      .select(col("doc_id"), TextExprs.tokens(col("text")).as("w"))
       .where(size(col("w")) >= ShingleN)
-      .select(col("doc_id"), explode(TextExprs.shingles(col("w"), ShingleN)).as("sh"))
-      .distinct())
-    // The cap is applied as a broadcast ANTI join against the VIRAL list
-    // (df > cap) rather than an equi-join with the keep list: the viral
-    // list is the boilerplate vocabulary — tiny by construction — so the
-    // exclusion is map-side and the big relation is never re-shuffled by
-    // `sh`. That also dodges the skew trap both alternatives carry: a
-    // shuffle keyed on `sh` (keep-join or a count window) sends every
-    // row of a viral shingle to ONE task — the exact blow-up the cap
-    // exists to prevent. (A corpus whose viral vocabulary alone
-    // overflows broadcast limits would need a two-level cap; no real
-    // boilerplate set comes close.) Measured at sf0.1: 5.3 s → 1.8 s
-    // cold for the capped relation.
-    val viral = sh.groupBy("sh").agg(count(lit(1)).as("df"))
+      .groupBy("doc_id")
+      .agg(array_distinct(flatten(collect_list(TextExprs.shingles(col("w"), ShingleN))))
+        .as("shs")))
+
+  private def withSize(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("shs"), size(col("shs")).cast("long").as("n"))
+
+  /** Shingle rows (doc_id, sh) regrouped into sets (doc_id, shs, n). */
+  private def setsOfRows(rows: DataFrame): DataFrame =
+    withSize(rows.groupBy("doc_id").agg(collect_set(col("sh")).as("shs")))
+
+  /** One row per (document, shingle) with the document's set size:
+    * (doc_id, sh, n). A narrow explode of the sets. */
+  private[graft] def rowsOf(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("shs")).as("sh"), col("n"))
+
+  /** The document-frequency-capped shingle sets: (doc_id, shs, n), one
+    * row per document whose capped set is non-empty. Every near-dup
+    * consumer reads this one relation: the pair self-join explodes it
+    * ([[rowsOf]]), the signatures read each set in place ([[sigsOf]]).
+    *
+    * Persisted, and the build's only persist: the uncapped sets feed
+    * the df count and every consumer, and without materialization each
+    * reference would re-shingle the corpus. The cap is a narrow map
+    * over them. The viral list (df > cap) is collected and each set
+    * drops its members per row (`array_except` against the list as a
+    * literal), so the exclusion is map-side and no relation is ever
+    * shuffled by `sh` before the self-join. That also dodges the skew
+    * trap of a shuffle keyed on `sh` (a keep-join or a count window):
+    * it sends every row of a viral shingle to ONE task, the exact
+    * blow-up the cap exists to prevent. The viral list is the
+    * boilerplate vocabulary, small by construction; the per-row
+    * exclusion costs O(|set| + |viral|). (A corpus whose viral
+    * vocabulary alone overflows the driver would need a two-level cap;
+    * no real boilerplate set comes close.) */
+  private[graft] def shinglesOf(docRel: DataFrame): DataFrame = {
+    val raw = Caches.persistTracked(rawSetsOf(docRel))
+    val viral = raw.select(explode(col("shs")).as("sh"))
+      .groupBy("sh").agg(count(lit(1)).as("df"))
       .where(col("df") > MaxShingleDf)
-      .select("sh")
-    Caches.persistTracked(sh.join(broadcast(viral), Seq("sh"), "left_anti"))
+      .select("sh").collect().map(_.getString(0))
+    if (viral.isEmpty) raw
+    else withSize(raw.select(col("doc_id"), array_except(col("shs"), typedLit(viral)).as("shs")))
+      .where(col("n") > 0)
   }
 
   /** The capped-shingle relation as DuckDB SQL CTEs (`sh` = the capped
@@ -117,29 +147,40 @@ object DedupQueries {
        |keep AS (SELECT sh FROM sh0 GROUP BY sh HAVING count(*) <= $MaxShingleDf),
        |sh AS (SELECT sh0.doc_id, sh0.sh FROM sh0 JOIN keep USING (sh))""".stripMargin
 
-  /** Exact Jaccard for pair intersections (d1, d2, inter) over the
-    * shingle sets of `sh`: (d1, d2, inter, un, jaccard) — integer set
-    * math, deterministic. The one spelling of the formula that q17,
-    * q18, q138 and the probe paths share. */
-  private def withJaccard(inter: DataFrame, sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    inter
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-      .select(col("d1"), col("d2"), col("inter"),
-        (col("n1") + col("n2") - col("inter")).as("un"),
-        (col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))).as("jaccard"))
+  /** Exact Jaccard for pair intersections (d1, n1, d2, n2, inter):
+    * (d1, d2, inter, un, jaccard) — integer set math, deterministic.
+    * The one spelling of the formula that q17, q18, q138 and the probe
+    * paths share. The set sizes arrive with the pairs, so no per-doc
+    * size aggregate is joined back. */
+  private def withJaccard(inter: DataFrame): DataFrame =
+    inter.select(col("d1"), col("d2"), col("inter"),
+      (col("n1") + col("n2") - col("inter")).as("un"),
+      (col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))).as("jaccard"))
+
+  /** Every pair (d1 < d2) sharing at least one shingle of `sets`:
+    * (d1, n1, d2, n2, inter). One self-join of the shingle rows on
+    * `sh` (both sides read one exchange); each row carries its
+    * document's n, so the sizes ride the count's grouping keys. Pairs
+    * sharing zero shingles never appear at all. */
+  private def sharedOfSh(sets: DataFrame): DataFrame = {
+    val r = rowsOf(sets)
+    r.select(col("doc_id").as("d1"), col("sh"), col("n").as("n1"))
+      .join(r.select(col("doc_id").as("d2"), col("sh"), col("n").as("n2")), "sh")
+      .where(col("d1") < col("d2"))
+      .groupBy("d1", "n1", "d2", "n2").agg(count(lit(1)).as("inter"))
   }
 
-  /** Exact Jaccard over shingle sets for a candidate pair set
-    * (columns d1, d2). A candidate sharing no shingle has no
-    * intersection row and drops out. */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame): DataFrame = {
-    val a = sh.select(col("doc_id").as("d1"), col("sh"))
-    val b = sh.select(col("doc_id").as("d2"), col("sh"))
-    withJaccard(cands.join(a, "d1").join(b, Seq("d2", "sh"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter")), sh)
-  }
+  /** Intersections for a candidate pair set (d1, d2) over `sets`:
+    * (d1, n1, d2, n2, inter). One doc-keyed join per side and a per-pair
+    * set intersection; no shingle rows. A candidate sharing no shingle
+    * gets inter 0, which no threshold downstream passes; a candidate
+    * without a set drops out. */
+  private def interOfCands(cands: DataFrame, sets: DataFrame): DataFrame =
+    cands
+      .join(sets.select(col("doc_id").as("d1"), col("shs").as("s1"), col("n").as("n1")), "d1")
+      .join(sets.select(col("doc_id").as("d2"), col("shs").as("s2"), col("n").as("n2")), "d2")
+      .select(col("d1"), col("n1"), col("d2"), col("n2"),
+        size(array_intersect(col("s1"), col("s2"))).cast("long").as("inter"))
 
   // ------------------------------------------------------------- exact
   /** Exact dedup by content hash: every doc annotated with its group's
@@ -175,14 +216,8 @@ object DedupQueries {
     sharedPairsOfSh(sh).where(col("jaccard") >= JaccardThreshold)
 
   /** Every pair (d1 < d2) sharing at least one capped shingle, with its
-    * exact Jaccard. One self-join computes intersections directly — no
-    * separate candidate pass (pairs sharing zero shingles never appear
-    * at all). */
-  private def sharedPairsOfSh(sh: DataFrame): DataFrame =
-    withJaccard(sh.select(col("doc_id").as("d1"), col("sh"))
-      .join(sh.select(col("doc_id").as("d2"), col("sh")), "sh")
-      .where(col("d1") < col("d2"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter")), sh)
+    * exact Jaccard ([[sharedOfSh]]). */
+  private def sharedPairsOfSh(sh: DataFrame): DataFrame = withJaccard(sharedOfSh(sh))
 
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardOn(docs(spark, dir))
@@ -198,59 +233,27 @@ object DedupQueries {
        |WHERE inter * 1.0 / (s1.n + s2.n - inter) >= $JaccardThreshold""".stripMargin
 
   // ----------------------------------------------------- MinHash+LSH
-  /** Per-shingle (h1, h2) hash pair for Kirsch–Mitzenmacher double
-    * hashing. Parity mode derives both halves from ONE md5 (portable to
-    * the DuckDB oracle, bit-for-bit); fast mode uses two xxhash64 calls
-    * — native 64-bit codegen'd hashing, ~an order of magnitude cheaper
-    * than the md5→hex→substring→conv chain, for production runs where
-    * no cross-engine parity is required. Both land in [0, KmPrime) so
-    * `h1 + i·h2` stays exact below 2^53. */
-  private[operators] def shingleHashes(sh: DataFrame, fastHash: Boolean): DataFrame =
-    if (fastHash)
-      sh.select(col("doc_id"),
-        pmod(xxhash64(col("sh")), lit(KmPrime)).as("h1"),
-        pmod(xxhash64(col("sh"), lit(1L)), lit(KmPrime)).as("h2"))
-    else {
-      val hex = md5(col("sh").cast("binary"))
-      sh.select(col("doc_id"),
-        conv(substring(hex, 1, 12), 16, 10).cast("long").as("h1"),
-        conv(substring(hex, 17, 12), 16, 10).cast("long").as("h2"))
-    }
-
-  /** MinHash + LSH near-dup, banded 10×2; pairs colliding in any band
-    * are candidates, then verified by exact Jaccard ≥ 0.8. The scale
-    * path: candidate count is driven by band collisions, never N².
+  /** Per-doc MinHash signatures (doc_id, s0..s19) of a set relation
+    * (doc_id, shs) — the raw estimator relation q141 audits and
+    * [[bandsOf]] folds into band keys.
     *
-    * Signatures use Kirsch–Mitzenmacher double hashing: one base hash
-    * pair per shingle; the i-th hash is `(h1 + i·h2) mod p`. All 20
-    * per-doc minima are computed as 20 aggregates of a single groupBy —
-    * one pass, one shuffle, versus the naive 20× row fan-out with 20
-    * hash calls per shingle. */
-  /** LSH band keys for every document of a (capped) shingle relation:
-    * (doc_id, band, bk). This relation IS the near-dup index a pipeline
-    * persists between runs — see [[incrementalNearDupOn]]. */
-  /** Per-doc MinHash signatures (doc_id, s0..s19) — the raw estimator
-    * relation q141 audits and [[bandsOf]] folds into band keys.
-    *
-    * The fast path computes all 20 minima in ONE native buffer
-    * aggregate ([[graft.plans.MinHashSigsAgg]]): one update loop per
-    * row and one array through the partial-agg shuffle instead of 20
-    * aggregate expressions and 20 columns. The md5 parity path keeps
-    * the column formulation its DuckDB oracle mirrors term-for-term;
-    * `DedupSpec` pins the two formulations row-identical. */
-  private[graft] def sigsOf(sh: DataFrame, fastHash: Boolean): DataFrame = {
-    val hashed = shingleHashes(sh, fastHash)
-    if (fastHash) {
-      hashed.groupBy("doc_id")
-        .agg(graft.plans.MinHashSigs.sigs(col("h1"), col("h2"), MinhashSeeds, KmPrime).as("sig"))
-        .select(col("doc_id") +:
-          (0 until MinhashSeeds).map(i => col("sig").getItem(i).as(s"s$i")): _*)
-    } else {
-      val sigAggs = (0 until MinhashSeeds)
-        .map(i => min(pmod(col("h1") + lit(i.toLong) * col("h2"), lit(KmPrime))).as(s"s$i"))
-      hashed.groupBy("doc_id").agg(sigAggs.head, sigAggs.tail: _*)
-    }
-  }
+    * One narrow per-document expression ([[graft.plans.MinHashSigs]])
+    * computes all 20 minima of a set in one native pass, no
+    * `groupBy(doc_id)`. Parity mode derives both base hashes from ONE
+    * md5 (portable to the DuckDB oracle, bit-for-bit); fast mode uses
+    * two xxhash64 calls, for production runs where no cross-engine
+    * parity is required. `DedupSpec` pins both modes row-identical to
+    * the 20-aggregate column formulation. A document without a set has
+    * no signature row, so no band key is ever built from nothing. */
+  private[graft] def sigsOf(sets: DataFrame, fastHash: Boolean): DataFrame =
+    sets
+      // On the set, not the signature: a filter on `sig` is pushed below
+      // the projection and would compute every signature twice.
+      .where(size(col("shs")) > 0)
+      .select(col("doc_id"),
+        graft.plans.MinHashSigs.sigs(col("shs"), MinhashSeeds, KmPrime, md5 = !fastHash).as("sig"))
+      .select(col("doc_id") +:
+        (0 until MinhashSeeds).map(i => col("sig").getItem(i).as(s"s$i")): _*)
 
   /** 10×2 band keys folded from an existing signature relation
     * (doc_id, s0..s19) — the seam that lets stored signatures skip the
@@ -265,6 +268,9 @@ object DedupQueries {
       .select(col("doc_id"), col("x.band").as("band"), col("x.bk").as("bk"))
   }
 
+  /** LSH band keys for every document of a (capped) shingle set
+    * relation: (doc_id, band, bk). This relation IS the near-dup index a
+    * pipeline persists between runs — see [[incrementalNearDupOn]]. */
   private[graft] def bandsOf(sh: DataFrame, fastHash: Boolean): DataFrame =
     bandsOfSigs(sigsOf(sh, fastHash))
 
@@ -276,19 +282,23 @@ object DedupQueries {
       .where(col("d1") < col("d2"))
       .select("d1", "d2").distinct()
 
+  /** MinHash + LSH near-dup, banded 10×2; pairs colliding in any band
+    * are candidates, then verified by exact Jaccard ≥ 0.8. The scale
+    * path: candidate count is driven by band collisions, never N².
+    * Signatures use Kirsch–Mitzenmacher double hashing: one base hash
+    * pair per shingle; the i-th hash is `(h1 + i·h2) mod p`. */
   private[graft] def minhashLshOn(docRel: DataFrame,
       fastHash: Boolean = false): DataFrame = {
     // Resolve the store ONCE (one digest scan) for both relations. The
     // fast path reuses stored signatures outright; the md5 parity path
     // recomputes its signatures from the (shared) shingles — the stored
     // sigs are xxhash64, not the oracle-portable md5 formulation.
-    val store = graft.sources.SignatureStore.openFresh(docRel)
-    val sh = store.map(s => Caches.persistTracked(s.shingles))
-      .getOrElse(shinglesOf(docRel))
+    val store = SignatureStore.openFresh(docRel)
+    val sh = shinglesFrom(store, docRel)
     val bands =
       if (fastHash) store.map(s => bandsOfSigs(s.sigs)).getOrElse(bandsOf(sh, fastHash))
       else bandsOf(sh, fastHash)
-    verifyJaccard(lshCandidatesOfBands(bands), sh)
+    withJaccard(interOfCands(lshCandidatesOfBands(bands), sh))
       .where(col("jaccard") >= JaccardThreshold)
   }
 
@@ -322,11 +332,11 @@ object DedupQueries {
     // the store's parquet lazily, so the files must outlive this method
     // (see TempCleanup's scaladoc for the full lifetime argument).
     graft.core.TempCleanup.registerForExit(storeDir)
-    graft.sources.SignatureStore.build(d, storeDir)
+    SignatureStore.build(d, storeDir)
     Caches.releaseAll() // free build's internal shingle pins before the read path runs
-    spark.conf.set(graft.sources.SignatureStore.DirKey, storeDir)
+    spark.conf.set(SignatureStore.DirKey, storeDir)
     try minhashLshOn(d, fastHash = false)
-    finally spark.conf.unset(graft.sources.SignatureStore.DirKey)
+    finally spark.conf.unset(SignatureStore.DirKey)
   }
 
   /** The q18 banding CTEs (`h`/`sig`/`bands`/`cand`) — shared by the
@@ -627,15 +637,16 @@ object DedupQueries {
     * change.
     *
     * Scale: the estimator is a 20-integer-comparison map over the pair
-    * list joined to the persisted signature relation — pair-list-sized,
-    * no corpus work beyond what q17/q18 already do. */
+    * list joined to the per-document signatures, a narrow map over the
+    * persisted shingle sets — pair-list-sized, no corpus work beyond
+    * what q17/q18 already do. */
   def q141MinhashEst(spark: SparkSession, dir: String): DataFrame =
     q141MinhashEstOn(docs(spark, dir))
 
   private[graft] def q141MinhashEstOn(docRel: DataFrame): DataFrame = {
     val sh = shinglesShared(docRel)
     val pairs = jaccardPairsOfSh(sh).select("d1", "d2", "jaccard")
-    val sigs = Caches.persistTracked(sigsOf(sh, fastHash = false))
+    val sigs = sigsOf(sh, fastHash = false)
     def side(as: String) = sigs.select(col("doc_id").as(as) +:
       (0 until MinhashSeeds).map(i => col(s"s$i").as(s"$as$i")): _*)
     val matches = (0 until MinhashSeeds)
@@ -830,15 +841,7 @@ object DedupQueries {
     * in itself), so the sf oracle face verifies the empty result and
     * `DedupSpec` carries the positive cases on a constructed corpus. */
   private[graft] def q146ContainmentOn(docRel: DataFrame): DataFrame = {
-    val sh = shinglesShared(docRel)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.select(col("doc_id").as("d1"), col("sh"))
-      .join(sh.select(col("doc_id").as("d2"), col("sh")), "sh")
-      .where(col("d1") < col("d2"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    val withSizes = inter
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
+    val withSizes = sharedOfSh(shinglesShared(docRel))
     val nSmall = least(col("n1"), col("n2"))
     val containment = col("inter") * lit(1.0) / nSmall
     val jaccard = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
@@ -914,20 +917,8 @@ object DedupQueries {
     val cands = Caches.persistTracked(cands0)
     val candIds = cands.select(col("d1").as("doc_id"))
       .union(cands.select(col("d2").as("doc_id"))).distinct()
-    val raw = Caches.persistTracked(d
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), TextExprs.tokens(col("text")).as("w"))
-      .where(size(col("w")) >= ShingleN)
-      .select(col("doc_id"), explode(TextExprs.shingles(col("w"), ShingleN)).as("sh"))
-      .distinct())
-    val sizes = raw.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cands
-      .join(raw.select(col("doc_id").as("d1"), col("sh")), "d1")
-      .join(raw.select(col("doc_id").as("d2"), col("sh")), Seq("d2", "sh"))
-      .groupBy("d1", "d2").agg(count(lit(1)).as("inter"))
-    val withSizes = inter
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
+    val raw = Caches.persistTracked(rawSetsOf(d.join(candIds, Seq("doc_id"), "left_semi")))
+    val withSizes = interOfCands(cands, raw)
     val nSmall = least(col("n1"), col("n2"))
     val containment = col("inter") * lit(1.0) / nSmall
     val jaccard = col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter"))
@@ -1188,20 +1179,15 @@ object DedupQueries {
   /** Exact raw-shingle Jaccard for an asymmetric candidate pair set,
     * shingling ONLY the docs that appear in a candidate. Both the pair
     * set (referenced three times: two id projections + the intersection
-    * join) and the raw shingle relation persist — otherwise every
-    * reference re-runs the band-index join and the 20-aggregate
-    * signature pipeline upstream of it. */
+    * join) and the raw shingle sets (both sides of the intersection)
+    * persist — otherwise every reference re-runs the band-index join
+    * and the signature pipeline upstream of it. */
   private def probeVerify(d: DataFrame, cands0: DataFrame): DataFrame = {
     val cands = Caches.persistTracked(cands0)
     val candIds = cands.select(col("d1").as("doc_id"))
       .union(cands.select(col("d2").as("doc_id"))).distinct()
-    val raw = Caches.persistTracked(d
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), TextExprs.tokens(col("text")).as("w"))
-      .where(size(col("w")) >= ShingleN)
-      .select(col("doc_id"), explode(TextExprs.shingles(col("w"), ShingleN)).as("sh"))
-      .distinct())
-    verifyJaccard(cands, raw).where(col("jaccard") >= JaccardThreshold)
+    val raw = Caches.persistTracked(rawSetsOf(d.join(candIds, Seq("doc_id"), "left_semi")))
+    withJaccard(interOfCands(cands, raw)).where(col("jaccard") >= JaccardThreshold)
   }
 
   val incrementalNearDupSql: String = {

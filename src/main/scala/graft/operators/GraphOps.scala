@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Caches
@@ -12,7 +12,8 @@ import graft.core.Caches
   * (q17/q18/q39) say "A~B, B~C", but training-data dedup must keep ONE
   * doc per transitive cluster {A,B,C}.
   *
-  * Two execution paths, chosen by the MEASURED edge count:
+  * Two execution paths, chosen by the edge count a bounded collect
+  * sees:
   *
   *  - **Small graphs** (≤ `maxDriverEdges`, default 5M pairs ≈ 160 MB):
   *    driver-side union-find with path compression. The edge set of a
@@ -49,22 +50,25 @@ object GraphOps {
 
   /** Labels every vertex incident to an edge with its component's min
     * vertex id. `edges` needs long-typed columns `src`/`dst` (undirected;
-    * one direction suffices). Returns (id, lbl). */
+    * one direction suffices). Returns (id, lbl).
+    *
+    * The path is chosen by one bounded collect of at most
+    * `maxDriverEdges + 1` edges: an edge list that fits comes back
+    * whole and is labelled on the driver; one row more hands the edges
+    * to the distributed loop, which re-reads them. A small graph, the
+    * dedup case, costs that one collect: no persist and no count. */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
       maxDriverEdges: Long = 5000000L): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    try {
-      val m = e.count()
-      if (m <= maxDriverEdges) unionFindLocal(e)
-      else propagateDistributed(e, maxRounds)
-    } finally e.unpersist() // loop rounds are checkpointed; safe either path
+    val cap = math.min(maxDriverEdges, Int.MaxValue - 1L).toInt
+    val head = e.limit(cap + 1).collect()
+    if (head.length <= cap) unionFindLocal(e.sparkSession, head)
+    else propagateDistributed(e, maxRounds)
   }
 
   /** Driver union-find with path compression over the collected pair
-    * list, relabeled to component minima. O(E α(E)) time, one collect. */
-  private def unionFindLocal(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
+    * list, relabeled to component minima. O(E α(E)) time. */
+  private def unionFindLocal(spark: SparkSession, edges: Array[Row]): DataFrame = {
     val parent = mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -73,7 +77,7 @@ object GraphOps {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    e.collect().foreach { row =>
+    edges.foreach { row =>
       val (s, d) = (row.getLong(0), row.getLong(1))
       parent.getOrElseUpdate(s, s)
       parent.getOrElseUpdate(d, d)

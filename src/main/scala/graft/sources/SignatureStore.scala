@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Every LSH-family query (q17/q18/q40/q73/q138/q141/q146) starts from
   * the SAME two relations: the df-capped word-3-gram shingles and the
   * 20 MinHash signatures. Recomputing them per query is the daily-
-  * pipeline cost driver — the corpus-wide explode+distinct+df-cap is
+  * pipeline cost driver — the corpus-wide shingling and df-cap was
   * 60-80% of each query's runtime (measured: the `xss` bench entry vs
   * q40). A pipeline builds this store once per ingest day and every
   * dedup query reuses it.
@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   *   <dir>/shingles/day=N/   (doc_id, sh)           df-capped shingles
   *   <dir>/sigs/day=N/       (doc_id, s0..s19)      xxhash64 MinHash sigs
   * }}}
+  * The shingles stay one row per (doc_id, sh), the layout every version
+  * of the store has written; the near-dup tier regroups them into its
+  * one-row-per-document sets on read (`DedupQueries.shinglesFrom`).
   * The digest is over the SOURCE documents, `xxhash64(doc_id, text)`,
   * so [[advanceDay]] shingles and signs only its own batch and never
   * re-reads a prior day (SignatureStoreSpec deletes day 0's source
@@ -68,9 +71,9 @@ object SignatureStore {
   def advanceDay(docBatch: DataFrame, dir: String, day: Int): Unit =
     layout.advance(docBatch.sparkSession, dir, day.toString) {
       import graft.operators.DedupQueries
-      val sh = DedupQueries.shinglesOf(docBatch)
-      layout.write(sh, dir, "shingles", day.toString)
-      layout.write(DedupQueries.sigsOf(sh, fastHash = true), dir, "sigs", day.toString)
+      val sets = DedupQueries.shinglesOf(docBatch)
+      layout.write(DedupQueries.rowsOf(sets).select("doc_id", "sh"), dir, "shingles", day.toString)
+      layout.write(DedupQueries.sigsOf(sets, fastHash = true), dir, "sigs", day.toString)
       Seq(digestOfPinned(docBatch))
     }
 

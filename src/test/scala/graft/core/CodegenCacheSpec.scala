@@ -25,7 +25,7 @@ class CodegenCacheSpec extends SparkSpec {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
-  private def runMix(): Unit = Mix.foreach { q =>
+  private def runMix(queries: Seq[String] = Mix): Unit = queries.foreach { q =>
     SparkEntry.queries(q)(spark, Dir).collect()
     Caches.releaseAll()
     spark.catalog.clearCache()
@@ -40,6 +40,18 @@ class CodegenCacheSpec extends SparkSpec {
     m.setAccessible(true)
     val cache = m.invoke(CodeGenerator)
     cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
+
+  test("q138 compiles no generated class in a warm pass of the mix") {
+    // Every class of a repeated query must come from the cache: a
+    // per-run value in generated code (such as the adaptive stage id in
+    // a class name) would recompile on every call.
+    runMix()
+    val second = Mix.map { q =>
+      q -> compiledBy(runMix(Seq(q)))
+    }.toMap
+    info(s"classes compiled per query in the warm pass: $second")
+    assert(second("q138_lsh_recall") == 0, s"a warm q138 compiled ${second("q138_lsh_recall")} classes")
   }
 
   test("a second pass of the query mix compiles at most a tenth of the first's classes") {

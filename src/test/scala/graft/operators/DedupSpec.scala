@@ -29,7 +29,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("shingle df cap bounds every posting list under a viral shingle") {
-    val sh = DedupQueries.shinglesOf(viralDocs)
+    val sh = DedupQueries.rowsOf(DedupQueries.shinglesOf(viralDocs))
     val maxDf = sh.groupBy("sh").count().agg(max("count")).head().getLong(0)
     assert(maxDf <= DedupQueries.MaxShingleDf,
       s"a shingle survived with df=$maxDf > cap — self-join fan-out unbounded")
@@ -247,22 +247,96 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("native minhash_sigs buffer is row-identical to the 20-aggregate formulation") {
-    import org.apache.spark.sql.functions._
+  test("per-document minhash signatures equal the 20-aggregate formulation in both hash modes") {
+    // The reference: per-shingle base hashes as columns (the md5 pair
+    // is the spelling the DuckDB oracles use), then 20 min aggregates
+    // per doc_id over the exploded rows — the formulation the native
+    // per-set expression replaces.
+    val kmPrime = 1125899906842597L
     val sh = spark.read.parquet(s"$Dir/documents.parquet")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("sh")).distinct()
-    val hashed = DedupQueries.shingleHashes(sh, fastHash = true)
-    val viaColumns = {
+    val sets = sh.groupBy("doc_id").agg(collect_set("sh").as("shs"))
+    def hashes(fast: Boolean): Seq[org.apache.spark.sql.Column] =
+      if (fast) Seq(pmod(xxhash64(col("sh")), lit(kmPrime)).as("h1"),
+        pmod(xxhash64(col("sh"), lit(1L)), lit(kmPrime)).as("h2"))
+      else {
+        val hex = md5(col("sh").cast("binary"))
+        Seq(conv(substring(hex, 1, 12), 16, 10).cast("long").as("h1"),
+          conv(substring(hex, 17, 12), 16, 10).cast("long").as("h2"))
+      }
+    def bySig(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (1 to 20).map(r.getLong).toSeq).toMap
+    for (fast <- Seq(true, false)) {
       val aggs = (0 until 20).map(i =>
-        min(pmod(col("h1") + lit(i.toLong) * col("h2"), lit(1125899906842597L))).as(s"s$i"))
-      hashed.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => r.getLong(0) -> (1 to 20).map(r.getLong).toSeq).toMap
+        min(pmod(col("h1") + lit(i.toLong) * col("h2"), lit(kmPrime))).as(s"s$i"))
+      val viaColumns = bySig(sh.select(col("doc_id") +: hashes(fast): _*)
+        .groupBy("doc_id").agg(aggs.head, aggs.tail: _*))
+      val viaNative = bySig(DedupQueries.sigsOf(sets, fastHash = fast))
+      assert(viaNative.size == viaColumns.size && viaNative.nonEmpty, s"fast=$fast")
+      assert(viaNative == viaColumns,
+        s"fast=$fast: the per-set expression must reproduce every signature bit-for-bit")
     }
-    val viaNative = DedupQueries.sigsOf(sh, fastHash = true)
-      .collect().map(r => r.getLong(0) -> (1 to 20).map(r.getLong).toSeq).toMap
-    assert(viaNative.size == viaColumns.size && viaNative.nonEmpty)
-    assert(viaNative == viaColumns,
-      "the fused buffer must reproduce every signature bit-for-bit")
+    // and the signature pass is a narrow map over the sets: no exchange
+    val scanned = spark.range(4).select(col("id").as("doc_id"),
+      array(lit("a b c"), concat(lit("b c "), col("id").cast("string"))).as("shs"))
+    val plan = DedupQueries.sigsOf(scanned, fastHash = false).queryExecution.executedPlan.toString()
+    assert(plan.contains("minhash_sigs") && !plan.contains("Exchange"),
+      s"signatures must not shuffle:\n$plan")
+  }
+
+  // ------------------------------------------- doc-keyed shingle sets
+  test("a document with an empty capped set gets no signature or band row") {
+    import spark.implicits._
+    // 140 documents open with the same boilerplate 3-gram (df 142 > the
+    // cap); docs 500/501 are nothing BUT that 3-gram, so their capped
+    // sets are empty; three more have under three tokens or no text.
+    val boiler = (0 until 140).map(i => (i.toLong, s"all rights reserved u${i}a u${i}b"))
+    val cloneText = "the quick brown fox jumps over the lazy dog tonight"
+    val docs = (boiler ++ Seq(
+      (500L, "all rights reserved"), (501L, "all rights reserved"),
+      (1L << 40, "too short"), ((1L << 40) + 1, ""), ((1L << 40) + 2, null.asInstanceOf[String]),
+      (1000L, cloneText), (1001L, cloneText))).toDF("doc_id", "text")
+    val empty = Set(500L, 501L, 1L << 40, (1L << 40) + 1, (1L << 40) + 2)
+    val sets = DedupQueries.shinglesOf(docs)
+    val setIds = sets.select("doc_id").as[Long].collect().toSet
+    assert((setIds & empty).isEmpty, s"empty capped sets must have no row: ${setIds & empty}")
+    assert(sets.where(col("n") <= 0).count() == 0)
+    val bands = DedupQueries.bandsOf(sets, fastHash = false)
+    assert(bands.where(col("doc_id").isin(empty.toSeq: _*)).count() == 0)
+    assert(bands.where(col("bk") === "" || col("bk").isNull).count() == 0,
+      "no band key may be built from a missing signature")
+    // the two all-boilerplate docs are identical, yet never candidates
+    assert(pairs(DedupQueries.minhashLshOn(docs)) == Set((1000L, 1001L)))
+    graft.core.Caches.releaseAll()
+  }
+
+  test("a doc_id repeated across rows gets the union of its rows' shingle sets") {
+    import spark.implicits._
+    // DuckDB's `SELECT DISTINCT doc_id, sh` unions doc 1's two rows:
+    // {a b c, b c d} ∪ {c d e, d e f} is doc 2's set exactly (J = 1).
+    val docs = Seq((1L, "a b c d"), (1L, "c d e f"), (2L, "a b c d e f"), (3L, "x y z w"))
+      .toDF("doc_id", "text")
+    val sets = DedupQueries.shinglesOf(docs)
+      .select("doc_id", "n").as[(Long, Long)].collect().toMap
+    assert(sets == Map(1L -> 4L, 2L -> 4L, 3L -> 2L), s"one row per doc_id: $sets")
+    val got = DedupQueries.ngramJaccardOn(docs).select("d1", "d2", "inter", "un", "jaccard")
+      .as[(Long, Long, Long, Long, Double)].collect().toSeq
+    assert(got == Seq((1L, 2L, 4L, 4L, 1.0)), s"q17 over the union: $got")
+    assert(pairs(DedupQueries.minhashLshOn(docs)) == Set((1L, 2L)))
+    assert(DedupQueries.sigsOf(DedupQueries.shinglesOf(docs), fastHash = false)
+      .where(col("doc_id") === 1L).count() == 1, "one signature per doc_id")
+    graft.core.Caches.releaseAll()
+  }
+
+  test("q42's components are the same through the driver union-find and the distributed loop") {
+    val edges = DedupQueries.ngramJaccard(spark, Dir).select(col("d1").as("src"), col("d2").as("dst"))
+    def labels(maxDriverEdges: Long) = GraphOps.connectedComponents(edges, maxDriverEdges = maxDriverEdges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = labels(5000000L)
+    val distributed = labels(1L)
+    graft.core.Caches.releaseAll()
+    assert(local.exists { case (id, l) => id != l }, "sf0.01 must hold a non-trivial component")
+    assert(distributed == local)
   }
 
   // ----------------------------------------------------------- q146

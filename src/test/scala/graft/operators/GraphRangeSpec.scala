@@ -23,6 +23,22 @@ class GraphRangeSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents labels on the driver up to maxDriverEdges, distributed one edge above") {
+    // The bounded collect decides: 3 edges fit a bound of 3 and come
+    // back as a driver-built relation; a bound of 2 sends the same edges
+    // to the distributed loop. Both label identically.
+    val edges = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
+    def driverBuilt(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => ()
+      }.isDefined
+    val atBound = GraphOps.connectedComponents(edges, maxDriverEdges = 3L)
+    val above = GraphOps.connectedComponents(edges, maxDriverEdges = 2L)
+    assert(driverBuilt(atBound) && !driverBuilt(above))
+    assert(atBound.as[(Long, Long)].collect().toMap == above.as[(Long, Long)].collect().toMap)
+    graft.core.Caches.releaseAll()
+  }
+
   test("connectedComponents converges on a path far longer than maxRounds") {
     // 120-edge chain through the DISTRIBUTED loop (driver path gated
     // off): one-hop propagation alone would need 120 rounds

@@ -1,7 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.expressions.ArrayExcept
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.SparkSpec
 
@@ -16,6 +24,23 @@ class PlanShapeSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString()
+
+  /** Every node of a plan, the final adaptive plan first, down through
+    * query stages, reused exchanges and (unless `intoCache` is off)
+    * cached relations' plans. */
+  private def nodes(p: SparkPlan, intoCache: Boolean = true): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, intoCache)
+    case s: QueryStageExec => s +: nodes(s.plan, intoCache)
+    case r: ReusedExchangeExec => r +: nodes(r.child, intoCache)
+    case m: InMemoryTableScanExec if intoCache => m +: nodes(m.relation.cachedPlan)
+    case other => other +: other.children.flatMap(nodes(_, intoCache))
+  }
+
+  private def keyedBy(e: ShuffleExchangeExec, column: String): Boolean =
+    e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq(column)
+      case _ => false
+    }
 
   /** The column NAMES of the scan's ReadSchema. The physical type of
     * `ts` is deliberately not pinned: the testdata has shipped both
@@ -73,12 +98,65 @@ class PlanShapeSpec extends SparkSpec {
       s"mixture must never read text:\n$p")
   }
 
-  test("q17: the shingle df-cap is a map-side broadcast anti join, not a re-shuffle by shingle") {
+  test("q17: the shingle df-cap is a map-side exclusion, not a re-shuffle by shingle") {
+    import spark.implicits._
+    // 140 documents share one boilerplate 3-gram: df 140 > the cap
+    val viral = (0 until 140).map(i => (i.toLong, s"all rights reserved u${i}a u${i}b u${i}c"))
+      .toDF("doc_id", "text")
+    for ((name, q) <- Seq[(String, () => DataFrame)](
+        "sf0.001" -> (() => DedupQueries.ngramJaccard(spark, Dir)),
+        "viral fixture" -> (() => DedupQueries.ngramJaccardOn(viral)))) {
+      val df = q()
+      df.collect() // settle AQE
+      val all = nodes(df.queryExecution.executedPlan)
+      val p = all.head.toString
+      // No aggregate groups by shingle (the df count is the build's own
+      // collect), and the shingle self-join is the only join: no keep-
+      // or anti join re-shuffles the shingles by `sh`.
+      assert(!all.exists {
+        case a: BaseAggregateExec => a.groupingExpressions.exists(_.references.exists(_.name == "sh"))
+        case _ => false
+      }, s"$name: an aggregate groups by sh:\n$p")
+      val joins = all.collect { case j: BaseJoinExec => j }
+      assert(joins.size == 1 && joins.head.joinType == Inner &&
+        joins.head.leftKeys.flatMap(_.references.map(_.name)) == Seq("sh"),
+        s"$name: the shingle self-join must be the only join:\n$p")
+      // Each side reaches the join straight from the cached sets: an
+      // explode, projections and at most the join's own exchange.
+      joins.head.children.foreach { side =>
+        val path = nodes(side, intoCache = false)
+        assert(path.count(_.isInstanceOf[InMemoryTableScanExec]) == 1 &&
+          !path.exists(n => n.isInstanceOf[BaseAggregateExec] || n.isInstanceOf[BaseJoinExec]),
+          s"$name: a self-join side does more than explode the cached sets:\n$side")
+      }
+      graft.core.Caches.releaseAll()
+    }
+    // The viral list is excluded per set, in a projection over the
+    // cached sets.
+    val df = DedupQueries.ngramJaccardOn(viral)
+    df.collect()
+    assert(nodes(df.queryExecution.executedPlan).exists {
+      case pr: ProjectExec => pr.projectList.exists(_.exists(_.isInstanceOf[ArrayExcept]))
+      case _ => false
+    }, "viral exclusion must be a map-side array_except")
+    graft.core.Caches.releaseAll()
+  }
+
+  test("q17: set sizes ride the pair count — no per-document size aggregate joined back") {
     val df = DedupQueries.ngramJaccard(spark, Dir)
-    df.count() // settle AQE
-    val p = plan(df)
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"viral-shingle exclusion must broadcast, keeping the big relation un-shuffled:\n$p")
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan)
+    // The widen's repartition is the only exchange keyed by doc_id: the
+    // per-document set union reuses it, and no size aggregate adds one.
+    val byDoc = all.collect { case e: ShuffleExchangeExec if keyedBy(e, "doc_id") => e }
+    assert(byDoc.nonEmpty && byDoc.forall(_.shuffleOrigin == REPARTITION_BY_NUM),
+      s"exchanges keyed by doc_id: ${byDoc.map(_.shuffleOrigin)}\n${all.head}")
+    // and the pair count groups by both sizes along with the pair
+    val pairAgg = all.collect {
+      case a: BaseAggregateExec if a.groupingExpressions.map(_.references.head.name).toSet ==
+        Set("d1", "n1", "d2", "n2") => a
+    }
+    assert(pairAgg.nonEmpty, s"the pair count must group by (d1, n1, d2, n2):\n${all.head}")
     graft.core.Caches.releaseAll()
   }
 
@@ -647,6 +725,22 @@ class PlanShapeSpec extends SparkSpec {
     graft.core.Caches.releaseAll()
   }
 
+  test("q132 and q138: job budgets for a warm collect") {
+    graft.core.Tables(spark, Dir, "documents")
+    def jobs(q: => DataFrame): Int = {
+      val n = countJobs { q.collect(); () }
+      graft.core.Caches.releaseAll()
+      n
+    }
+    // warm: schemas inferred, generated code compiled, no persist left
+    jobs(DedupQueries.clusterSplit(spark, Dir))
+    jobs(DedupQueries.q138LshRecall(spark, Dir))
+    val q132 = jobs(DedupQueries.clusterSplit(spark, Dir))
+    val q138 = jobs(DedupQueries.q138LshRecall(spark, Dir))
+    info(s"warm jobs: q132 $q132, q138 $q138")
+    assert(q132 == 10 && q138 == 10, s"q132 ran $q132 Spark jobs, q138 $q138")
+  }
+
   test("q138: job budget for one collect on a cold cache") {
     // Infer the documents schema first, so the pin is the same in any
     // suite order (Tables keeps it per file version).
@@ -654,15 +748,15 @@ class PlanShapeSpec extends SparkSpec {
     val jobs = countJobs { DedupQueries.q138LshRecall(spark, Dir).collect(); () }
     graft.core.Caches.releaseAll()
     // Adaptive execution submits each shuffle, broadcast and cache stage
-    // as its own job. The 24, by group:
-    //   4  shingles: widen exchange, explode+distinct, cache fill;
-    //   2  df-cap: the viral-shingle count and its broadcast;
-    //   6  capped-shingle cache scans, one per consumer below;
-    //   9  pair self-join with per-doc sizes, and signatures/bands with
-    //      the band join's broadcast;
-    //   2  the labelled full outer join;
-    //   1  the final aggregate.
-    assert(jobs == 24, s"q138 ran $jobs Spark jobs")
+    // as its own job. The 10, by group:
+    //   2  shingle sets: the doc_id-keyed widen exchange, the cache fill;
+    //   2  df-cap: the viral-shingle count's map stage and its collect;
+    //   2  broadcasts: the shingle rows of the pair self-join and the
+    //      band keys of the band join (signatures are a narrow map);
+    //   2  the labelled full outer join: the candidate distinct and the
+    //      pair side (the pair count rides the doc_id partitioning);
+    //   2  the final aggregate's exchange and result.
+    assert(jobs == 10, s"q138 ran $jobs Spark jobs")
   }
 
   test("q197: the media decon band join broadcasts the eval side — never a cartesian over hashes") {

@@ -66,6 +66,37 @@ class SignatureStoreSpec extends SparkSpec {
     }
   }
 
+  test("stored (doc_id, sh) rows serve the direct pairs, a document's rows spread over files") {
+    // The store keeps one row per (doc_id, sh), the layout every version
+    // wrote; the near-dup tier regroups the rows into one set per
+    // document on read. Day 0's rows are rewritten as two files split
+    // by shingle, so every document's set is assembled across files.
+    val corpus = corpusDf
+    val direct = Seq(DedupQueries.ngramJaccardOn(corpus), DedupQueries.minhashLshOn(corpus),
+      DedupQueries.minhashLshOn(corpus, fastHash = true)).map(pairsOf)
+    Caches.releaseAll()
+    assert(direct.forall(_.nonEmpty), "fixture must contain near-dup pairs")
+
+    val dir = tmpDir("sigstore_rows")
+    SignatureStore.build(corpus, dir)
+    Caches.releaseAll()
+    val part = s"$dir/shingles/day=0"
+    val stored = spark.read.parquet(part)
+    assert(stored.columns.toSeq == Seq("doc_id", "sh"))
+    val rows = stored.collect().toSeq
+    val fs = new org.apache.hadoop.fs.Path(part).getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(new org.apache.hadoop.fs.Path(part), true)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), stored.schema)
+      .repartition(2, col("sh")).write.parquet(part)
+    assert(spark.read.parquet(part).inputFiles.length == 2)
+    withStore(dir) {
+      assert(SignatureStore.openFresh(corpus).isDefined, "store must be fresh")
+      val viaStore = Seq(DedupQueries.ngramJaccardOn(corpus), DedupQueries.minhashLshOn(corpus),
+        DedupQueries.minhashLshOn(corpus, fastHash = true)).map(pairsOf)
+      assert(viaStore == direct)
+    }
+  }
+
   test("a stale store is detected and silently falls back to direct computation") {
     val corpus = corpusDf
     val dir = tmpDir("sigstore_stale")
