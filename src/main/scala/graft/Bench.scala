@@ -79,47 +79,179 @@ object Bench {
       k -> (if (adjudicated) v else older.get(k).fold(v)(math.min(v, _)))
     }
 
+
+  import Measure.{Run, Scenario, Shot}
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+  import graft.operators.{DedupQueries, MediaQueries, SimilarityQueries, SubstringDedup}
+  import graft.sources._
+
+  private def extra(code: String, single: Boolean = false)(setup: Run => Shot): Scenario =
+    Scenario(code, single)(r => Seq(code -> setup(r)))
+  /** `df` split 4:1 on `id`: (the stored corpus, the fresh day). */
+  private def split5(df: DataFrame, id: String): (DataFrame, DataFrame) =
+    (df.where(pmod(col(id), lit(5)) =!= 0), df.where(pmod(col(id), lit(5)) === 0))
+  private def stored(code: String, query: (SparkSession, String) => DataFrame, key: String)(
+      build: (Run, String) => Unit): Scenario = extra(code) { r =>
+    val dir = r.dir(code)
+    build(r, dir)
+    Shot(() => query(r.spark, r.sfDir), Seq(key -> dir))
+  }
+  private def winnowStore(r: Run): String = r.shared("winnowstore") { dir =>
+    WinnowStore.build(r.table("documents").filter(col("doc_id") % 2 === 0), dir)
+  }
+
+  /** Bench's extras, in stdout order: the daily production shapes the
+    * declared queries do not time. Most read a store built untimed by the
+    * setup (its cost amortizes over every later day) and are timed with
+    * the store's conf set; the delta against the matching suite entry is
+    * the store's payoff. Each shot is re-runnable against the still-on-
+    * disk store, so the ≥2× self-adjudication net covers the extras too. */
+  val Extras: Seq[Scenario] = Seq(
+    // BASELINE.md's "3M rows < 3 min": the reference enrichment (epoch
+    // normalization + partition keys) over a 3M-row batch, written as
+    // hive-partitioned snappy parquet.
+    extra("xt", single = true) { r =>
+      val ev = r.table("events")
+      val copies = math.max(1, (3000000L / math.max(1L, ev.count())).toInt)
+      val big = ev.withColumn("rep", explode(array((0 until copies).map(lit): _*)))
+        .withColumn("heartbeat", unix_micros(col("ts").cast("timestamp")))
+      Shot(() => {
+        val (wita, hp) = graft.functions.TimeExprs.enrichment(col("heartbeat"))
+        big.withColumn("datetime_wita", wita.cast("timestamp_ntz"))
+          .withColumn("hiveperiod", hp)
+          .withColumn("dstrct_code", concat(lit("D"), pmod(col("user_id"), lit(4))))
+          .repartition(col("hiveperiod"), col("dstrct_code"))
+          .write.mode("overwrite").option("compression", "snappy")
+          .partitionBy("hiveperiod", "dstrct_code").parquet(r.dir("ingest"))
+      })
+    },
+    // q73's daily path: read the stored band index, shingle and sign the
+    // fresh batch, band-join, exact-verify the candidates.
+    extra("xip") { r =>
+      val d = r.table("documents")
+      val (corpus, fresh) = split5(d, "doc_id")
+      DedupQueries.bandIndexOf(corpus).write.parquet(r.dir("bandidx"))
+      Shot(() => DedupQueries.probeIndex(d, DedupQueries.bandIndexOf(fresh),
+        r.spark.read.parquet(r.dir("bandidx"))))
+    },
+    // q40 riding the shared shingle/signature store, digest scan included.
+    stored("xss", DedupQueries.minhashLshFast, SignatureStore.DirKey) { (r, dir) =>
+      SignatureStore.build(r.table("documents"), dir)
+    },
+    // q146's production path: r=1 band-join of the fresh 20% against the
+    // stored signatures, exact containment on the candidate sliver.
+    extra("xcp") { r =>
+      val d = r.table("documents")
+      val (corpus, fresh) = split5(d, "doc_id")
+      SignatureStore.build(corpus, r.dir("containidx"))
+      Shot(() => DedupQueries.containmentProbeIndexed(d, fresh,
+        r.spark.read.parquet(r.dir("containidx/sigs"))))
+    },
+    // q153's production path: render+hash the fresh 20%, multi-index
+    // band-join against the stored 16-byte hashes, exact Hamming check.
+    extra("xmp") { r =>
+      val docs = r.table("documents").filter(length(col("text")) >= 50)
+        .select(col("doc_id").as("media_id"), col("text"))
+      val (corpus, fresh) = split5(docs, "media_id")
+      MediaHashStore.build(Measure.hashedImages(corpus), r.dir("dhashidx"))
+      Shot(() => graft.multimodal.MediaDedup.nearDupProbe(Measure.hashedImages(fresh),
+        MediaHashStore.open(r.spark, r.dir("dhashidx")), MediaQueries.MaxHamming))
+    },
+    // q197 through the sourced MediaHashStore: the train corpus decodes
+    // once at build; the serve pays one caption-hash freshness scan, the
+    // eval-side render and the band join. Built from the exact relation
+    // q197 dispatches on: a re-derived copy could digest-mismatch and
+    // demote every timed open to inline hashing.
+    stored("xmd", MediaQueries.q197MediaDecon, MediaHashStore.DirKey) { (r, dir) =>
+      val train = MediaQueries.deconTrainDocs(r.spark, r.sfDir)
+      MediaHashStore.buildSourced(train, Measure.hashedImages(train), dir)
+    },
+    // q166 bake-off through the TokenizerStore: one digest scan, the
+    // artifact reads and the four encode passes.
+    stored("xts", graft.operators.TokenizerCompare.q166TokenizerCompare, TokenizerStore.DirKey) {
+      (r, dir) => TokenizerStore.build(r.table("documents"), dir)
+    },
+    // q168's hashed-key probe against the history half's WinnowStore.
+    extra("xws") { r =>
+      Shot(() => SubstringDedup.q168SubstringProbeFast(r.spark, r.sfDir), Seq(WinnowStore.DirKey -> winnowStore(r)))
+    },
+    // q169's arm picker through the same store, the deployed daily shape
+    // (on this fixture it dispatches to recompute: SubstringDedup.ProbeCharRatio).
+    extra("xsp") { r =>
+      Shot(() => SubstringDedup.q169SubstringAuto(r.spark, r.sfDir), Seq(WinnowStore.DirKey -> winnowStore(r)))
+    },
+    // q175's daily batch probe through the DeconStore: digest scan, stored
+    // fps/gram reads, one winnow and one sliver gram-explode of the batch.
+    stored("xdc", SubstringDedup.q175DeconProbe, DeconStore.DirKey) { (r, dir) =>
+      DeconStore.build(r.table("documents").filter(col("doc_id") % 10 === 0), dir)
+    },
+    // q189's picker through a DeconStore: the delta against xdc is the
+    // dispatch's value on this fixture.
+    stored("xda", SubstringDedup.q189DeconAuto, DeconStore.DirKey) { (r, dir) =>
+      DeconStore.build(r.table("documents").filter(col("doc_id") % 10 === 0), dir)
+    },
+    // q155's pairs from the stored 24-byte segment fingerprints: the
+    // decode, the media tier's dominant cost, is paid once at build.
+    extra("xvg") { r =>
+      val docs = MediaQueries.spread(r.table("documents").select("doc_id", "text"))
+      VideoSegStore.build(graft.multimodal.VideoSegDedup.segmentFingerprints(
+        graft.multimodal.VideoSegDedup.renderVideos(docs)), r.dir("videosegstore"))
+      Shot(() => graft.multimodal.VideoSegDedup.sharedSegmentPairs(
+        VideoSegStore.open(r.spark, r.dir("videosegstore"))))
+    },
+    // q139's IVF probe reading stored bucket assignments and the frozen codebook.
+    stored("xvs", SimilarityQueries.q139IvfProbe, VectorIndexStore.DirKey) { (r, dir) =>
+      val e = r.table("embeddings")
+      VectorIndexStore.build(e, split5(e, "vec_id")._1, dir)
+    },
+    // q188 through the scaled-K face: the √N-dot assignment is paid at
+    // build. The store is trained, the production artifact; `codebook`
+    // serves q188 from a first-K and a trained store in one run.
+    stored("xsk", SimilarityQueries.q188IvfScaled, VectorIndexStore.DirKey) { (r, dir) =>
+      val e = r.table("embeddings")
+      VectorIndexStore.buildScaled(e, split5(e, "vec_id")._1, dir)
+    },
+    // q82 through the IVF-PQ store: k-means training and the corpus
+    // encode are paid at build; the query reads codes.
+    stored("xpq", SimilarityQueries.ivfPqTopK, VectorIndexStore.DirKey) { (r, dir) =>
+      VectorIndexStore.buildPq(r.table("embeddings"), dir)
+    },
+    // q195 through the scaled-PQ face (trained): the serve pays only the
+    // probe, ADC and refine — the 100 TB deployment's serving shape.
+    stored("xpk", SimilarityQueries.q195IvfPqScaled, VectorIndexStore.DirKey) { (r, dir) =>
+      val e = r.table("embeddings")
+      VectorIndexStore.buildPqScaled(e, e, dir)
+    },
+    // The semantic decon gate reading the eval suite's pre-derived
+    // assignments (trained frozen codebook): its deployed, batch-
+    // independent shape.
+    extra("xsd") { r =>
+      val e = r.table("embeddings")
+      val (ev, train) = (e.filter(col("vec_id") % 10 === 0), e.filter(col("vec_id") % 10 =!= 0))
+      SemanticDeconStore.build(ev, r.dir("semdeconstore"), codebookFrom = Some(e))
+      Shot(() => graft.streaming.DeconGate.flagSemantic(train, ev),
+        Seq(SemanticDeconStore.DirKey -> r.dir("semdeconstore")))
+    },
+    // q198's three-eye report served from per-(benchmark, day) evidence
+    // partitions instead of the corpus sweep the q198 entry prices.
+    extra("xvd") { r =>
+      Measure.buildVerdictStores(r, r.dir("verdictstore"), r.dir("verdictstore_media"))
+      Shot(() => MediaQueries.q198ThreeEyeDecon(r.spark, r.sfDir), Seq(
+        VerdictStore.DirKey -> r.dir("verdictstore"), MediaHashStore.DirKey -> r.dir("verdictstore_media")))
+    },
+    // Tolerance-driven PageRank (q107's production loop): a data-
+    // dependent round count to L1 < 1e-7 with per-round checkpoints.
+    // Single shot: the ~50-round loop already averages per-round noise.
+    extra("xprt", single = true) { r =>
+      Shot(() => graft.operators.GraphQueries.pageRankUntil(r.spark.read
+        .parquet(s"${r.sfDir}/lineitem.parquet").select(col("l_orderkey"), col("l_partkey")), tol = 1e-7))
+    })
+
   def main(args: Array[String]): Unit = {
-    // Load sentinel (r9 post-mortem): a contended machine inflated every
-    // query 2-19x and cost a full adjudication cycle to rule NOT-a-
-    // regression. "la":[pre,post] centi-load plus core count ("nc") and
-    // our own wall time ("w", centisec) let bench_diff.py auto-flag a
-    // contaminated round instead of a human re-running nine queries.
-    // r12 change: the PRE sample is now measured FOREIGN cpu — system
-    // cpu minus this JVM's cpu, medianed over ~1.2 s — because the 1-min
-    // load average it used to report decays too slowly: the harness's
-    // own just-finished sbt compile left it at ~3.9 in rounds 9-11, so
-    // the contamination banner fired every round on an idle machine and
-    // trained readers to ignore it. Instantaneous foreign cpu is ~0
-    // right after our own compile but still catches a genuinely
-    // competing process. The POST sample stays a 1-min load average —
-    // it is context (how hard the whole run pushed), not a verdict.
-    // "lak" declares which measurement la[0] actually is ("fcpu" =
-    // measured foreign cores, "la1m" = 1-min load average fallback) so
-    // bench_diff keys its banner off the declared kind instead of
-    // sniffing qunit — the fallback path (com.sun bean unavailable or
-    // never primed) otherwise emits a load average under a line whose
-    // qunit says "ds", and the harness's own just-finished compile
-    // (~3.9 load) would re-trigger the exact false-positive banner the
-    // r12 change exists to eliminate (ADVICE r12).
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val (laPre, laKind) = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean =>
-        val s = (1 to 4).flatMap { _ =>
-          Thread.sleep(300)
-          val sys = b.getCpuLoad // [0,1] whole machine; <0 until primed
-          val self = b.getProcessCpuLoad
-          if (sys < 0 || self < 0) None else Some(math.max(0.0, sys - self))
-        }
-        if (s.isEmpty) (osBean.getSystemLoadAverage, "la1m")
-        else (s.sorted.apply((s.size - 1) / 2) * Runtime.getRuntime.availableProcessors, "fcpu")
-      case _ => (osBean.getSystemLoadAverage, "la1m") // negative if unsupported
-    }
-    val tWall0 = System.nanoTime()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt, sfDir).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sentinel = new Measure.Sentinel
+    val sfDir = Measure.sfDir
+    val spark = Measure.session()
     // Warm up codegen/catalyst/scan machinery so the first timed query
     // doesn't absorb one-time JVM initialization — measured: whichever
     // query ran first in hash-map order absorbed 10+ s of JIT/codegen
@@ -128,7 +260,6 @@ object Bench {
     // lambda math). Failure-tolerant: a bad SF dir must still produce
     // the JSON line (with negative per-query durations), not a crash.
     try {
-      import org.apache.spark.sql.functions._
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").count().collect()
       spark.read.parquet(s"$sfDir/documents.parquet")
@@ -161,10 +292,7 @@ object Bench {
       val mdocs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id").cast("long"), col("text")).limit(64)
         .repartition(4)
-      graft.multimodal.MediaDedup.hashImages(
-        mdocs.as[(Long, String)].mapPartitions(_.map { case (id, t) =>
-          (id, graft.multimodal.MediaDedup.renderImage(t)) })
-          .toDF("media_id", "content")).count()
+      Measure.hashedImages(mdocs).count()
       graft.multimodal.VideoSegDedup.segmentFingerprints(
         graft.multimodal.VideoSegDedup.renderVideos(mdocs)).count()
       val aud = mdocs.as[(Long, String)].mapPartitions(_.map { case (id, t) =>
@@ -176,11 +304,6 @@ object Bench {
       graft.core.Caches.releaseAll(); spark.catalog.clearCache()
     }
     catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
-    // Fixed ascending name order: deterministic run-to-run and
-    // cheap-queries-first, so any residual warmup lands on sub-second
-    // queries instead of a random expensive one. SPARK_GRAFT_ONLY
-    // (comma-separated substrings) narrows the suite for iteration.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // Attribution knob (VERDICT r18 next-1): price the digest sidecar
     // on the timed serve faces. The graded bench never sets
     // FileDigests.DirKey (nor acquires a lease — serve faces don't
@@ -188,677 +311,32 @@ object Bench {
     // exclude both mechanisms; running the band WITH the sidecar
     // enabled bounds its cost in the other direction.
     sys.env.get("SPARK_GRAFT_DIGEST_DIR").foreach { d =>
-      spark.conf.set(graft.sources.FileDigests.DirKey, d)
+      spark.conf.set(FileDigests.DirKey, d)
       System.err.println(s"[bench] digest sidecar enabled at $d (attribution run)")
     }
-    // Per-run scratch root for every probe's persisted index: a FIXED
-    // tmpdir path meant two concurrent bench invocations on one machine
-    // overwrote each other's index mid-run, and the directories were
-    // never reclaimed. PID-suffixed and deleted at the end of the run.
-    val scratch = s"${System.getProperty("java.io.tmpdir")}/graft_bench_${ProcessHandle.current.pid}"
-    // Median-of-N (default 3, SPARK_GRAFT_REPEATS overrides): single-shot
-    // timings swing up to 5× between identical-code runs (GC, JIT, page
-    // cache), which made a real 2× regression indistinguishable from
-    // noise. The median of three is stable enough to act on; a failed
-    // first attempt is not retried (its negative duration is the signal).
-    val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt)
-    // r07 post-mortem: the full ~366-execution run degraded late-suite
-    // queries up to 180× (suite 48 s → 512 s) from session-state
-    // accumulation — localCheckpoint blocks live OUTSIDE the
-    // CacheManager (neither releaseAll's Dataset handles nor
-    // clearCache touched them), and ContextCleaner only reclaims
-    // broadcasts/shuffle files when weak refs are GC'd, which a
-    // 128 GiB-heap JVM does rarely. Caches now tracks checkpoint RDDs;
-    // the sweep below is the belt-and-braces backstop for anything
-    // untracked, and the periodic System.gc() lets ContextCleaner
-    // drain. Verified: post-fix full-suite numbers match isolated runs.
-    // Forcing function (r15 bench-integrity fix): `df.count()` lets the
-    // optimizer REWRITE the plan under the count — column pruning plus
-    // unique-keyed-outer-join elimination delete every branch that
-    // cannot change the row count, which for the verdict/coverage
-    // shapes (a kernel rollup LEFT-JOINed back onto the id relation:
-    // q183/q190/q196/q198/q199, DeconGate.flagSemantic) is the ENTIRE
-    // kernel — q199's count() plan at sf10 was a bare documents scan
-    // (0.7 s) while its pair relation costs ~39 s, and q196's count
-    // plan full-outer-joins two raw id columns with both eyes' kernels
-    // eliminated (plan-confirmed this round). Executing the query's OWN
-    // optimized plan via toRdd produces every output row in full, the
-    // same work Verify (and any real consumer) pays — including final
-    // sorts count() also elided. Cross-round note: r14-and-earlier
-    // numbers for those entries price the pruned plan; SCALE.md r15
-    // publishes the re-measured values.
-    implicit class Forced(df: org.apache.spark.sql.DataFrame) {
-      def forceRows(): Long = df.queryExecution.toRdd.count()
-    }
-    var execs = 0
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).forceRows(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
+    // SPARK_GRAFT_ONLY (comma-separated substrings) narrows the suite and
+    // the extras, by name or short code, for iteration: an unset ONLY
+    // (the official round run) runs everything. Fixed ascending name
+    // order keeps runs deterministic and puts cheap queries first, so any
+    // residual warmup lands on sub-second ones.
+    val partial = Measure.only.nonEmpty
+    Measure.withRoot(root => report(spark, sfDir, sentinel, new Run(spark, sfDir, root), partial))
+    spark.stop()
+  }
+
+  private def report(spark: SparkSession, sfDir: String, sentinel: Measure.Sentinel, run: Run,
+      partial: Boolean): Unit = {
+    val queries = SparkEntry.queries
+    def queryShot(name: String) = { val fn = queries(name); Shot(() => fn(spark, sfDir)) }
+    val results = queries.keys.toSeq.sorted.filter(Measure.selected)
+      .map(name => name -> Measure.timed(spark, name, queryShot(name), Measure.repeats))
+    // An extra ONLY skips reports 0; a failed setup reports -1.
+    val extras: Seq[(String, Option[Shot], Double)] = Extras.map { x =>
+      if (!Measure.selected(x.name)) (x.name, None, 0.0)
+      else Measure.prepare(run, x).flatMap(_.headOption).map(_._2) match {
+        case Some(shot) => (x.name, Some(shot), Measure.timed(spark, x.name, shot, if (x.single) 1 else Measure.repeats))
+        case None => (x.name, None, -1.0)
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.core.Caches.releaseAll() // builder-pinned relations + checkpoints
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      execs += 1
-      if (execs % 25 == 0) System.gc() // let ContextCleaner reclaim broadcasts/shuffles
-      // Failures are reported as negative durations — a silent
-      // plausible-looking timing would corrupt baseline comparisons.
-      if (ok) dt else -dt
-    }
-    // r18 (VERDICT next-2): every extra registers a RE-RUNNABLE
-    // single-shot thunk — store conf set/unset INSIDE the shot, store
-    // artifacts still on disk until the end-of-run scratch cleanup —
-    // so the ≥2× self-adjudication net covers the x-entries too. In
-    // BENCH_r17 xvg shipped at 8× its prior (contention) with no
-    // defense while 13 suite queries got quiet re-runs, because the
-    // extras were bespoke one-way timings appended after adjudication.
-    val extraRerun = scala.collection.mutable.LinkedHashMap[String, () => Double]()
-    def medianExtra(code: String)(shot: => Double): Double = {
-      extraRerun(code) = () => shot
-      val times = (1 to repeats).map(_ => shot)
-      times.sorted.apply((times.size - 1) / 2)
-    }
-    // Single-shot extras (xt's 3M-row write, xprt's ~50-round loop)
-    // already average internal noise; registering the same shot keeps
-    // them re-runnable without paying repeats in the main pass.
-    def singleExtra(code: String)(shot: => Double): Double = {
-      extraRerun(code) = () => shot
-      shot
-    }
-    // Extras participate in the ONLY filter under their short codes
-    // (xt/xip/xss/xcp/xmp/xts/xprt), so a scale-point run can time the
-    // incremental probes without paying the whole 167-query suite:
-    // SPARK_GRAFT_ONLY=q148,xss,xcp runs two queries and two probes.
-    // No ONLY (the official round run) still runs everything.
-    def extraOn(code: String): Boolean = only.forall(_.exists(code.contains))
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .map { case (name, fn) =>
-        val first = timeOnce(name, fn)
-        val times = if (first < 0) Seq(first)
-          else first +: (2 to repeats).map(_ => timeOnce(name, fn))
-        // ANY failed repeat fails the query (negative duration) — a
-        // median over mixed signs would silently mask an intermittent
-        // failure behind a plausible-looking timing.
-        name -> (if (times.exists(_ < 0)) times.min
-          else times.sorted.apply((times.size - 1) / 2))
-      }
-    // Transform-class benchmark vs BASELINE.md "3M rows < 3 min": the
-    // reference enrichment (epoch normalization + partition keys) over a
-    // 3M-row batch, written as hive-partitioned snappy parquet.
-    val ingest = if (!extraOn("xt")) (0L, 0.0) else try {
-      import org.apache.spark.sql.functions._
-      val ev = graft.core.Tables(spark, sfDir, "events")
-      val n = ev.count()
-      val copies = math.max(1, (3000000L / math.max(1L, n)).toInt)
-      val big = ev.withColumn("rep", explode(array((0 until copies).map(lit): _*)))
-        .withColumn("heartbeat", unix_micros(col("ts").cast("timestamp")))
-      val out = s"$scratch/ingest"
-      val dt = singleExtra("xt") {
-        val t0 = System.nanoTime()
-        val (wita, hp) = graft.functions.TimeExprs.enrichment(col("heartbeat"))
-        big.withColumn("datetime_wita", wita.cast("timestamp_ntz"))
-          .withColumn("hiveperiod", hp)
-          .withColumn("dstrct_code", concat(lit("D"), pmod(col("user_id"), lit(4))))
-          .repartition(col("hiveperiod"), col("dstrct_code"))
-          .write.mode("overwrite").option("compression", "snappy")
-          .partitionBy("hiveperiod", "dstrct_code").parquet(out)
-        (System.nanoTime() - t0) / 1e9
-      }
-      (n * copies, dt)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] transform benchmark failed: ${e.getMessage}")
-      (0L, -1.0)
-    }
-    // Incremental near-dup probe vs rebuild (q73's value claim): q73's
-    // benched number times a full self-contained rebuild because its
-    // oracle must be deterministic; the operator's point is the daily
-    // path. Build the corpus band index ONCE and write it to parquet
-    // (untimed — that cost amortizes over every later day), then time
-    // only what a day actually runs: read the stored index, shingle and
-    // sign the fresh batch, band-join, exact-verify the candidates.
-    // Median-of-`repeats` like every query entry.
-    val probe = if (!extraOn("xip")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val d = graft.core.Tables(spark, sfDir, "documents")
-      val idxPath = s"$scratch/bandidx"
-      graft.operators.DedupQueries.bandIndexOf(d.where(pmod(col("doc_id"), lit(5)) =!= 0))
-        .write.mode("overwrite").parquet(idxPath)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xip") {
-        val t0 = System.nanoTime()
-        val idx = spark.read.parquet(idxPath)
-        val fresh = graft.operators.DedupQueries.bandIndexOf(
-          d.where(pmod(col("doc_id"), lit(5)) === 0))
-        graft.operators.DedupQueries.probeIndex(d, fresh, idx).forceRows()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-        dt
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] incremental probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // Signature-store reuse (the daily-pipeline shape behind the whole
-    // dedup tier): build the shared shingle/signature store ONCE
-    // (untimed — that cost amortizes over every dedup query of the
-    // ingest day), then time minhashLshFast WITH the store configured.
-    // The timed run includes the digest freshness scan — that is what
-    // a store-riding query actually pays. The delta vs the q40 entry
-    // (the same query, no store) is the materialization payoff.
-    val storeReuse = if (!extraOn("xss")) 0.0 else try {
-      val d = graft.core.Tables(spark, sfDir, "documents")
-      val dirS = s"$scratch/sigstore"
-      graft.sources.SignatureStore.build(d, dirS)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xss") {
-        spark.conf.set(graft.sources.SignatureStore.DirKey, dirS)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.DedupQueries.minhashLshFast(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.SignatureStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] signature-store reuse failed: ${e.getMessage}")
-      -1.0
-    }
-    // Containment probe (q146's production path): index the 80% corpus
-    // slice once (untimed), then time a day's work — shingle+sign the
-    // fresh 20%, r=1 band-join against the STORED signatures, exact
-    // containment verification of the candidate sliver.
-    val containProbe = if (!extraOn("xcp")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val d = graft.core.Tables(spark, sfDir, "documents")
-      val dirC = s"$scratch/containidx"
-      graft.sources.SignatureStore.build(d.where(pmod(col("doc_id"), lit(5)) =!= 0), dirC)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xcp") {
-        val t0 = System.nanoTime()
-        val idxSigs = spark.read.parquet(s"$dirC/sigs")
-        graft.operators.DedupQueries.containmentProbeIndexed(
-          d, d.where(pmod(col("doc_id"), lit(5)) === 0), idxSigs).forceRows()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-        dt
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] containment probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // Image-dedup daily probe (q153's production path): hash the 80%
-    // corpus slice once and persist the 16-byte/image index (untimed —
-    // per-day maintenance is an append), then time a day's work:
-    // render+hash the fresh 20%, multi-index band-join against the
-    // STORED hashes, exact Hamming verification.
-    val mediaProbe = if (!extraOn("xmp")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val docs = graft.core.Tables(spark, sfDir, "documents")
-        .filter(length(col("text")) >= 50)
-        .select(col("doc_id").as("media_id"), col("text"))
-      val dirM = s"$scratch/dhashidx"
-      def hashed(part: org.apache.spark.sql.DataFrame) = {
-        import spark.implicits._
-        graft.multimodal.MediaDedup.hashImages(
-          part.as[(Long, String)]
-            .map { case (id, t) => (id, graft.multimodal.MediaDedup.renderImage(t)) }
-            .toDF("media_id", "content"))
-      }
-      graft.sources.MediaHashStore.build(
-        hashed(docs.where(pmod(col("media_id"), lit(5)) =!= 0)), dirM)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xmp") {
-        val t0 = System.nanoTime()
-        val idx = graft.sources.MediaHashStore.open(spark, dirM)
-        graft.multimodal.MediaDedup.nearDupProbe(
-          hashed(docs.where(pmod(col("media_id"), lit(5)) === 0)), idx,
-          graft.operators.MediaQueries.MaxHamming).forceRows()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-        dt
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] image-dedup probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // q197 through the prebuilt MediaHashStore SOURCED face: the train
-    // corpus decodes ONCE at build (untimed — per-day maintenance is
-    // advanceDaySourced), then the decon probe verifies freshness with
-    // one caption-hash scan and reads the stored 16-byte hashes; the
-    // timed run pays only the eval-side render + the band join. The
-    // delta vs the q197 suite entry (train re-decoded per run) is the
-    // media eye's store payoff — xmp's argument carried to the decon
-    // orientation, where the suite edit (not the corpus) is what
-    // changed.
-    val mediaDecon = if (!extraOn("xmd")) 0.0 else try {
-      // The store is built from the EXACT relation q197 dispatches on
-      // (MediaQueries.deconTrainDocs) — a re-derived copy of the
-      // private eligibility/split predicates could drift, digest-
-      // mismatch, and silently demote every timed open to inline
-      // hashing (review r15 finding 3).
-      val train = graft.operators.MediaQueries.deconTrainDocs(spark, sfDir)
-      def hashedD(part: org.apache.spark.sql.DataFrame) = {
-        import spark.implicits._
-        graft.multimodal.MediaDedup.hashImages(
-          part.as[(Long, String)]
-            .map { case (id, t) => (id, graft.multimodal.MediaDedup.renderImage(t)) }
-            .toDF("media_id", "content"))
-      }
-      val dirMd = s"$scratch/mediadeconidx"
-      graft.sources.MediaHashStore.buildSourced(train, hashedD(train), dirMd)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xmd") {
-        spark.conf.set(graft.sources.MediaHashStore.DirKey, dirMd)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.MediaQueries.q197MediaDecon(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.MediaHashStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] media-decon store probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // Tokenizer store reuse (train-once/serve-many): build the
-    // TokenizerStore ONCE (untimed — train-weekly economics), then time
-    // the q166 bake-off WITH the store configured. The timed run pays
-    // ONE digest freshness scan (r12: the verdict caches per corpus
-    // plan, so four artifact opens no longer digest four times) +
-    // artifact reads + the four encode passes — what a store-riding
-    // daily encode actually costs. The delta vs the q166 entry (same
-    // query, inline training) is the materialization payoff.
-    val tokReuse = if (!extraOn("xts")) 0.0 else try {
-      val d = graft.core.Tables(spark, sfDir, "documents")
-      val dirT = s"$scratch/tokstore"
-      graft.sources.TokenizerStore.build(d, dirT)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xts") {
-        spark.conf.set(graft.sources.TokenizerStore.DirKey, dirT)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.TokenizerCompare.q166TokenizerCompare(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.TokenizerStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] tokenizer-store reuse failed: ${e.getMessage}")
-      -1.0
-    }
-    // Winnow-store reuse (pricing the store the r11 maintenance face
-    // feeds — it previously had specs but no bench number): build the
-    // history half's WinnowStore ONCE (untimed — per-day maintenance is
-    // advanceDay), then time q168's hashed-key probe WITH the store
-    // configured. The timed run pays the digest freshness scan + the
-    // stored-index read instead of re-winnowing history; the delta vs
-    // the q168 entry (same query, inline winnow) is the store's payoff.
-    lazy val winnowStoreDir: String = {
-      import org.apache.spark.sql.functions._
-      val hist = graft.core.Tables(spark, sfDir, "documents")
-        .filter(col("doc_id") % 2 === 0)
-      val dirW = s"$scratch/winnowstore"
-      graft.sources.WinnowStore.build(hist, dirW)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      dirW
-    }
-    def timeWithWinnowStore(code: String)(fn: => Long): Double = {
-      medianExtra(code) {
-        spark.conf.set(graft.sources.WinnowStore.DirKey, winnowStoreDir)
-        try {
-          val t0 = System.nanoTime()
-          fn: Unit
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.WinnowStore.DirKey)
-      }
-    }
-    val winnowReuse = if (!extraOn("xws")) 0.0 else try {
-      timeWithWinnowStore("xws")(
-        graft.operators.SubstringDedup.q168SubstringProbeFast(spark, sfDir).forceRows())
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] winnow-store probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // Arm picker through the same prebuilt store — the full daily
-    // production shape (maintained index + per-batch probe-vs-recompute
-    // dispatch). q169's suite entry times the inline-winnow picker;
-    // this prices it as deployed. On this fixture the picker dispatches
-    // to the recompute arm (char-mass ratio ~0.77 at the 50/50 split) —
-    // the measured-correct choice (see SubstringDedup.ProbeCharRatio).
-    val armPick = if (!extraOn("xsp")) 0.0 else try {
-      timeWithWinnowStore("xsp")(
-        graft.operators.SubstringDedup.q169SubstringAuto(spark, sfDir).forceRows())
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] arm picker failed: ${e.getMessage}")
-      -1.0
-    }
-    // Decon-store probe (q175's production path): index the benchmark
-    // ONCE (untimed — build-per-eval-suite-change economics), then
-    // time the daily batch probe THROUGH the store: the timed run pays
-    // the digest freshness scan + the stored fps/grams reads + one
-    // winnow and one sliver gram-explode of the batch. The delta vs
-    // the q175 entry (same query, no store → inline eval recompute) is
-    // the store's payoff.
-    val deconProbe = if (!extraOn("xdc")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val ev = graft.core.Tables(spark, sfDir, "documents")
-        .filter(col("doc_id") % 10 === 0)
-      val dirD = s"$scratch/deconstore"
-      graft.sources.DeconStore.build(ev, dirD)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xdc") {
-        spark.conf.set(graft.sources.DeconStore.DirKey, dirD)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.SubstringDedup.q175DeconProbe(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.DeconStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] decon-store probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // Decon arm picker through the same prebuilt DeconStore — q189's
-    // production shape: the picker prices the matched eval sliver from
-    // the store's doc-level fps and dispatches between the stored-gram
-    // probe and the inline sliver recompute. The delta vs xdc (q175
-    // blindly probing the store) is the dispatch's value on this
-    // fixture.
-    val deconArm = if (!extraOn("xda")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val ev = graft.core.Tables(spark, sfDir, "documents")
-        .filter(col("doc_id") % 10 === 0)
-      val dirA = s"$scratch/deconstore_arm"
-      graft.sources.DeconStore.build(ev, dirA)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xda") {
-        spark.conf.set(graft.sources.DeconStore.DirKey, dirA)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.SubstringDedup.q189DeconAuto(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.DeconStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] decon arm picker failed: ${e.getMessage}")
-      -1.0
-    }
-    // Video segment index through a prebuilt VideoSegStore: q155's
-    // daily path — the corpus's segment fingerprints decode ONCE at
-    // store build (untimed; per-day maintenance is advanceDay), then a
-    // day's pair query reads the stored 24-byte fingerprint rows. The
-    // delta vs the q155 entry (same pairs, render+encode+decode every
-    // run) is the store's payoff — the decode is the media tier's
-    // dominant cost.
-    val videoSeg = if (!extraOn("xvg")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val docs = graft.operators.MediaQueries.spread(
-        graft.core.Tables(spark, sfDir, "documents").select("doc_id", "text"))
-      val dirG = s"$scratch/videosegstore"
-      graft.sources.VideoSegStore.build(
-        graft.multimodal.VideoSegDedup.segmentFingerprints(
-          graft.multimodal.VideoSegDedup.renderVideos(docs)), dirG)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xvg") {
-        val t0 = System.nanoTime()
-        graft.multimodal.VideoSegDedup.sharedSegmentPairs(
-          graft.sources.VideoSegStore.open(spark, dirG)).forceRows()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-        dt
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] video segment store failed: ${e.getMessage}")
-      -1.0
-    }
-    // q139 through a prebuilt VectorIndexStore: the IVF probe reading
-    // persisted bucket assignments + frozen codebook instead of
-    // re-assigning the corpus per run (build cost paid once, amortized
-    // over every daily probe).
-    val vecProbe = if (!extraOn("xvs")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val e = graft.core.Tables(spark, sfDir, "embeddings")
-      val dirV = s"$scratch/vectorstore"
-      graft.sources.VectorIndexStore.build(
-        e, e.where(pmod(col("vec_id"), lit(5)) =!= 0), dirV)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xvs") {
-        spark.conf.set(graft.sources.VectorIndexStore.DirKey, dirV)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.SimilarityQueries.q139IvfProbe(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.VectorIndexStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] vector-store probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // q188 through the prebuilt SCALED-K index face: the √N-dot
-    // assignment pass (the probe's corpus-sided term) is paid once at
-    // build and the probe reads (vec_id, nv, bkt). The delta vs the
-    // q188 entry (same probe, inline assignment) is where the vector
-    // store's economics flip positive on this fixture — the base
-    // face's K=16 honest negative (xvs) predicted exactly this.
-    val scaledProbe = if (!extraOn("xsk")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val e = graft.core.Tables(spark, sfDir, "embeddings")
-      val dirK = s"$scratch/scaledstore"
-      // trained = true is now the buildScaled DEFAULT (r16): the bench
-      // store is the production artifact, so the published xsk row
-      // prices the serve against a trained codebook — which the r15
-      // xpk pair measured as provenance-independent for the probe.
-      // SPARK_GRAFT_XSK_TRAINED=0 rebuilds first-K: the knob the
-      // serve-invariance pair is measured with (same day, same code).
-      graft.sources.VectorIndexStore.buildScaled(
-        e, e.where(pmod(col("vec_id"), lit(5)) =!= 0), dirK,
-        trained = sys.env.getOrElse("SPARK_GRAFT_XSK_TRAINED", "1") != "0")
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xsk") {
-        spark.conf.set(graft.sources.VectorIndexStore.DirKey, dirK)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.SimilarityQueries.q188IvfScaled(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.VectorIndexStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] scaled-index probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // q195 through the prebuilt SCALED-PQ face: the N·√N coarse
-    // assignment + PQ training + full encode are paid once at build;
-    // the serve reads codes and pays only the probe + ADC + refine.
-    // The delta vs the q195 suite entry is the xsk amortization curve
-    // carried to the compressed serving shape — the actual 100 TB
-    // deployment's store payoff.
-    val pqScaledProbe = if (!extraOn("xpk")) 0.0 else try {
-      val e = graft.core.Tables(spark, sfDir, "embeddings")
-      val dirPk = s"$scratch/pqstore_scaled"
-      // trained = true (r15): the bench store now runs the spherical
-      // k-means job a production build would, so the published xpk row
-      // IS the serve-invariance measurement — the probe reads (codes,
-      // codebooks) whose derivation it never re-runs, so serve cost is
-      // codebook-provenance-independent by construction; the measured
-      // pair (SCALE.md r15: first-K vs trained serve) pins it. First-K
-      // stays the oracle/fixture convention elsewhere.
-      // SPARK_GRAFT_XPK_TRAINED=0 rebuilds first-K — the knob the
-      // serve-invariance pair is measured with (same day, same code).
-      graft.sources.VectorIndexStore.buildPqScaled(e, e, dirPk,
-        trained = sys.env.getOrElse("SPARK_GRAFT_XPK_TRAINED", "1") != "0")
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xpk") {
-        spark.conf.set(graft.sources.VectorIndexStore.DirKey, dirPk)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.SimilarityQueries.q195IvfPqScaled(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.VectorIndexStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] scaled-PQ store probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // The semantic decon gate through a prebuilt SemanticDeconStore:
-    // the eval suite's assignments are read pre-derived (frozen
-    // codebook, per-benchmark partitions) instead of re-deriving the
-    // union codebook + eval assignment per batch. The delta vs the
-    // q185-family inline kernel prices what the store buys every
-    // micro-batch — and the store path is ALSO the batch-independence
-    // guarantee, so this is the gate's deployed shape.
-    val semDeconGate = if (!extraOn("xsd")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val e = graft.core.Tables(spark, sfDir, "embeddings")
-      val ev = e.filter(col("vec_id") % 10 === 0)
-      val train = e.filter(col("vec_id") % 10 =!= 0)
-      val dirS = s"$scratch/semdeconstore"
-      // trained = true is now the build DEFAULT (r16) — the gate's
-      // deployed shape trains its frozen codebook; the serve path
-      // reads (codebook, assignments) either way.
-      // SPARK_GRAFT_XSD_TRAINED=0 rebuilds first-K for the pair.
-      graft.sources.SemanticDeconStore.build(ev, dirS,
-        codebookFrom = Some(e),
-        trained = sys.env.getOrElse("SPARK_GRAFT_XSD_TRAINED", "1") != "0")
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xsd") {
-        spark.conf.set(graft.sources.SemanticDeconStore.DirKey, dirS)
-        try {
-          val t0 = System.nanoTime()
-          graft.streaming.DeconGate.flagSemantic(train, ev).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.SemanticDeconStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] semantic decon gate failed: ${e.getMessage}")
-      -1.0
-    }
-    // q198 through a prebuilt VerdictStore: the three-eye suite-wide
-    // report served from per-(benchmark, day) EVIDENCE partitions —
-    // two digest scans + match-sized rollups — instead of the
-    // three-kernel corpus sweep the q198 suite entry prices. The delta
-    // vs that entry is the verdict tier's store payoff: the one
-    // operation that still rescanned history per report (VERDICT r15
-    // next-1) now reads what the maintainers keep current.
-    val verdictServe = if (!extraOn("xvd")) 0.0 else try {
-      import org.apache.spark.sql.functions._
-      val d = graft.core.Tables(spark, sfDir, "documents")
-      val e = graft.core.Tables(spark, sfDir, "embeddings")
-      // The EXPOSED split relations, not re-derived predicate copies —
-      // a drifted copy would digest-mismatch and silently demote every
-      // timed open to inline (the xmd argument, both sides).
-      def hashedOf(part: org.apache.spark.sql.DataFrame) = {
-        import spark.implicits._
-        graft.multimodal.MediaDedup.hashImages(
-          part.as[(Long, String)]
-            .map { case (id, t) => (id, graft.multimodal.MediaDedup.renderImage(t)) }
-            .toDF("media_id", "content"))
-      }
-      val train = graft.sources.VerdictStore.Corpus(
-        d.filter(col("doc_id") % 10 =!= 0),
-        e.filter(col("vec_id") % 10 =!= 0),
-        hashedOf(graft.operators.MediaQueries.deconTrainDocs(spark, sfDir)))
-      val suite = graft.sources.VerdictStore.Corpus(
-        d.filter(col("doc_id") % 10 === 0),
-        e.filter(col("vec_id") % 10 === 0),
-        hashedOf(graft.operators.MediaQueries.deconEvalDocs(spark, sfDir)))
-      val dirVd = s"$scratch/verdictstore"
-      graft.sources.VerdictStore.build(train, Seq("all" -> suite), dirVd)
-      // The deployed shape configures the MEDIA hash store too: q198's
-      // dispatch digests the offered train hashes, and only a fresh
-      // MediaHashStore makes that digest decode-free (one caption
-      // xxhash scan) — unstored, every timed run would re-render the
-      // train corpus just to CHECK freshness, pricing the codec, not
-      // the serve.
-      val dirVdM = s"$scratch/verdictstore_media"
-      graft.sources.MediaHashStore.buildSourced(
-        graft.operators.MediaQueries.deconTrainDocs(spark, sfDir),
-        train.img, dirVdM)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xvd") {
-        spark.conf.set(graft.sources.VerdictStore.DirKey, dirVd)
-        spark.conf.set(graft.sources.MediaHashStore.DirKey, dirVdM)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.MediaQueries.q198ThreeEyeDecon(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally {
-          spark.conf.unset(graft.sources.VerdictStore.DirKey)
-          spark.conf.unset(graft.sources.MediaHashStore.DirKey)
-        }
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] verdict-store serve failed: ${e.getMessage}")
-      -1.0
-    }
-    // q82 through a prebuilt compressed (IVF-PQ) index: the k-means
-    // training pass + full corpus encode are paid once at build and the
-    // query reads codes — the artifact whose derivation dominates at
-    // production K'·m·D shapes.
-    val pqProbe = if (!extraOn("xpq")) 0.0 else try {
-      val e = graft.core.Tables(spark, sfDir, "embeddings")
-      val dirP = s"$scratch/pqstore"
-      graft.sources.VectorIndexStore.buildPq(e, dirP)
-      graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-      medianExtra("xpq") {
-        spark.conf.set(graft.sources.VectorIndexStore.DirKey, dirP)
-        try {
-          val t0 = System.nanoTime()
-          graft.operators.SimilarityQueries.ivfPqTopK(spark, sfDir).forceRows()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-          dt
-        } finally spark.conf.unset(graft.sources.VectorIndexStore.DirKey)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] pq-store probe failed: ${e.getMessage}")
-      -1.0
-    }
-    // Tolerance-driven PageRank (the production loop behind q107's
-    // fixed-round oracle face): data-dependent round count to L1 < 1e-7
-    // with a per-round checkpoint + eager previous-round release — the
-    // cost profile that matters for any long iterative job. Rows-only
-    // (no oracle can unroll a data-dependent iteration count). Single
-    // shot, not median-of-repeats: the ~50-round loop already averages
-    // per-round noise internally (measured 51.9 s at sf0.1), and two
-    // more repeats would add ~100 s of wall for no extra signal.
-    val prTol = if (!extraOn("xprt")) 0.0 else try {
-      import org.apache.spark.sql.functions.col
-      singleExtra("xprt") {
-        val t0 = System.nanoTime()
-        val pairs = spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .select(col("l_orderkey"), col("l_partkey"))
-        graft.operators.GraphQueries.pageRankUntil(pairs, tol = 1e-7).forceRows()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.core.Caches.releaseAll(); spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        dt
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] pagerank tolerance loop failed: ${e.getMessage}")
-      -1.0
     }
     // Compact numbers keep the whole JSON line well under the driver's
     // 2000-char stdout tail (full nanosecond precision overflowed it in
@@ -932,7 +410,7 @@ object Bench {
     // a 2-array ("111":[482,55] = suite median, quiet re-run) so
     // bench_diff.py and the judge see the adjudicated value without a
     // human re-running the suite on a clean machine.
-    val prevRef: Map[String, Double] = if (only.nonEmpty) Map.empty else try {
+    val prevRef: Map[String, Double] = if (partial) Map.empty else try {
       def readFile(f: java.io.File): String = {
         val src = scala.io.Source.fromFile(f)("UTF-8")
         try src.mkString finally src.close()
@@ -980,7 +458,7 @@ object Bench {
       System.err.println(s"[bench] ${suspect.size} queries flagged >=2x prev round; adjudicating first 24")
     val adjudicatedRaw: Map[String, Double] = suspect.take(24).map { case (name, _) =>
       System.gc(); Thread.sleep(2000) // let ContextCleaner + the OS quiesce
-      name -> timeOnce(name, SparkEntry.queries(name))
+      name -> Measure.time(spark, name, queryShot(name))
     }.toMap
     // A FAILED re-run (negative) must ship the original scalar, not a
     // 2-array: parsePrevRefFull trusts an array's last element as the
@@ -998,44 +476,20 @@ object Bench {
     if (adjudicated.nonEmpty)
       System.err.println(s"[bench] self-adjudicated ${adjudicated.size} queries: " +
         adjudicated.map { case (k, v) => f"$k ${results.toMap.apply(k)}%.2f->$v%.2f" }.mkString(", "))
-    val xSeq = Seq(
-      "xt" -> ingest._2,      // x_transform (3M-row enrichment write)
-      "xip" -> probe,         // x_incr_probe
-      "xss" -> storeReuse,    // x_sigstore_lsh (q40 with the store)
-      "xcp" -> containProbe,  // x_containment_probe
-      "xmp" -> mediaProbe,    // x_media_probe (image dhash)
-      "xmd" -> mediaDecon,    // x_media_decon (q197 via MediaHashStore)
-      "xts" -> tokReuse,      // x_tokstore_bakeoff (q166 via store)
-      "xws" -> winnowReuse,   // x_winnowstore_probe (q168 via store)
-      "xsp" -> armPick,       // x_arm_picker (q169 via store)
-      "xdc" -> deconProbe,    // x_deconstore_probe (q175 via store)
-      "xda" -> deconArm,      // x_decon_arm (q189 via store)
-      "xvg" -> videoSeg,      // x_videoseg_store (q155 pairs via store)
-      "xvs" -> vecProbe,      // x_vectorstore_probe (q139 via store)
-      "xsk" -> scaledProbe,   // x_scaled_index_probe (q188 via store)
-      "xpq" -> pqProbe,       // x_pqstore_topk (q82 via store)
-      "xpk" -> pqScaledProbe, // x_pqstore_scaled (q195 via store)
-      "xsd" -> semDeconGate,  // x_semdecon_gate (flagSemantic via store)
-      "xvd" -> verdictServe,  // x_verdict_serve (q198 via VerdictStore)
-      "xprt" -> prTol)        // x_pagerank_tol
-    // The extras join the same ≥2× net (VERDICT r18 next-2): their
-    // registered thunks re-run the exact timed shot (store conf + probe)
-    // against the still-on-disk scratch stores, under the shared 24-
-    // re-run cap (suite suspects first — they feed the headline total).
-    val suspectX = xSeq.filter { case (c, v) =>
-      v >= 0.5 && extraRerun.contains(c) &&
-        prevRef.get(c).exists(p => p > 0 && v >= 2 * p)
+    // The extras join the same ≥2× net (VERDICT r18 next-2): each re-runs
+    // its prepared shot (store conf + probe) against the still-on-disk
+    // scratch stores, under the shared 24-re-run cap (suite suspects
+    // first — they feed the headline total).
+    val suspectX = extras.collect { case (c, Some(shot), v)
+      if v >= 0.5 && prevRef.get(c).exists(p => p > 0 && v >= 2 * p) => c -> shot
     }
     // Quota from the POST-filter adjudicated suite count (ADVICE r18):
     // a suite re-run that failed (and ships un-adjudicated anyway)
     // must not consume a slot an extra could have used.
     val adjudicatedX: Map[String, Double] =
-      suspectX.take(math.max(0, 24 - adjudicated.size)).map { case (c, _) =>
+      suspectX.take(math.max(0, 24 - adjudicated.size)).map { case (c, shot) =>
         System.gc(); Thread.sleep(2000)
-        c -> (try extraRerun(c)() catch { case e: Throwable =>
-          System.err.println(s"[bench] extra $c adjudication re-run failed: ${e.getMessage}")
-          -1.0
-        })
+        c -> Measure.time(spark, c, shot)
       }.toMap
         // same rule as the suite map: a failed re-run ships the
         // original scalar, never a trusted-as-quiet negative
@@ -1043,7 +497,7 @@ object Bench {
     if (adjudicatedX.nonEmpty)
       System.err.println(s"[bench] self-adjudicated ${adjudicatedX.size} extras: " +
         adjudicatedX.map { case (k, v) =>
-          f"$k ${xSeq.toMap.apply(k)}%.2f->$v%.2f" }.mkString(", "))
+          f"$k ${extras.find(_._1 == k).get._3}%.2f->$v%.2f" }.mkString(", "))
     def queriesBlock(unit: Double => Long, floor: Long): String =
       (results.flatMap { case (k, v) =>
         val head = "\"" + short(k) + "\":"
@@ -1053,7 +507,7 @@ object Bench {
             val u = unit(v)
             if (v < 0 || math.abs(u) >= floor) Some(head + u) else None
         }
-      } ++ xSeq.map { case (c, v) =>
+      } ++ extras.map { case (c, _, v) =>
         adjudicatedX.get(c) match {
           case Some(a) => s""""$c":[${unit(v)},${unit(a)}]"""
           case None => s""""$c":${unit(v)}"""
@@ -1068,11 +522,8 @@ object Bench {
     // values): ds + the 0.2 s floor lands ~1150 chars ≈ 60% of the
     // ~1900-char usable tail (the r11 cs format was at 1638 = 86%).
     // Warn early, at 80% of budget, not at the edge.
-    val laPost = osBean.getSystemLoadAverage
-    def cl(v: Double): Long = if (v < 0) -1 else math.round(v * 100) // centi-load
-    val wallCs = cs((System.nanoTime() - tWall0) / 1e9)
-    val sentinel = s""""la":[${cl(laPre)},${cl(laPost)}],"lak":"$laKind","nc":${Runtime.getRuntime.availableProcessors},"w":$wallCs"""
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","qunit":"ds","qmin":$QMinDs,"nq":${results.size},"queries":${queriesBlock(ds, QMinDs)},"sf":"$sfName",$sentinel}"""
+    val sent = sentinel.json
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","qunit":"ds","qmin":$QMinDs,"nq":${results.size},"queries":${queriesBlock(ds, QMinDs)},"sf":"$sfName",$sent}"""
     if (line.length > 1520)
       System.err.println(s"[bench] WARNING: JSON line ${line.length} chars is past 80% of the driver's ~1900-char tail budget")
     println(line)
@@ -1081,20 +532,12 @@ object Bench {
     // another scale factor can't overwrite a round's detail; the next
     // round's self-adjudication loader overlays it back over the ds
     // line (sf-gated there too).
-    if (only.isEmpty) try {
-      val detailLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","qunit":"cs","nq":${results.size},"queries":${queriesBlock(cs, 0L)},"sf":"$sfName",$sentinel}"""
+    if (!partial) try {
+      val detailLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","qunit":"cs","nq":${results.size},"queries":${queriesBlock(cs, 0L)},"sf":"$sfName",$sent}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(DetailFile),
         detailLine.getBytes("UTF-8")): Unit
     } catch { case e: Throwable =>
       System.err.println(s"[bench] detail sidecar write failed: ${e.getMessage}")
     }
-    try { // reclaim the per-run scratch root (probe indexes, ingest output)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(scratch))
-    } catch { case _: Throwable => () }
-    spark.stop()
   }
 }

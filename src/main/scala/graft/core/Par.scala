@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (a hash chain per character), codebook scoring (K dots per vector).
   * On a small-file corpus those scans pack into one or two partitions
   * and the whole derivation serializes on as many cores (measured,
-  * r19 ProfileQuery at sf0.1/32 cores: q149's winnow pass 3.4 s on ONE
+  * r19 job profile at sf0.1/32 cores (now `graft.Measure profile`): q149's winnow pass 3.4 s on ONE
   * task, q188's √N-codebook assignment 9.2 s on ONE task, q192's gram
   * distinct 4.2+4.7 s on one task — while 31 cores idled).
   *

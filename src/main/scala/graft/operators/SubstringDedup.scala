@@ -326,7 +326,7 @@ object SubstringDedup {
         posexplode(graft.plans.GramExpressions.gramHashes(col("text"), K)))
       .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("g"))
 
-  private[operators] def substringSpansFastOn(docRel: DataFrame): DataFrame =
+  private[graft] def substringSpansFastOn(docRel: DataFrame): DataFrame =
     spansFromGrams(hashedGramsOf(candidatesOnly(docRel)))
 
   // --------------------------------------- q152 incremental daily probe
@@ -741,7 +741,7 @@ object SubstringDedup {
         sum(col("e1") - col("s")).cast("long").as("contam_chars"))
   }
 
-  private[operators] def deconMatrixOn(train: DataFrame,
+  private[graft] def deconMatrixOn(train: DataFrame,
       evalRel: DataFrame): DataFrame = {
     val (tCand, eCand) = matrixCandidates(train, evalRel)
     val pos = gramsOf(tCand)
@@ -757,7 +757,7 @@ object SubstringDedup {
     * for replication-saturated regimes, where a gram held by hundreds
     * of eval docs multiplies every matching train position by hundreds
     * (the sf10 fixture's q179 was killed at >600 s on exactly that). */
-  private[operators] val MatrixEvalFanoutCap = 8
+  private[graft] val MatrixEvalFanoutCap = 8
 
   /** (gram, eval_doc) attributions the last q187 call dropped — the
     * LOGGED truncation count (the repo's no-silent-caps rule), also
@@ -783,7 +783,7 @@ object SubstringDedup {
       d.filter(col("doc_id") % 10 === 0), MatrixEvalFanoutCap)
   }
 
-  private[operators] def deconMatrixCappedOn(train: DataFrame,
+  private[graft] def deconMatrixCappedOn(train: DataFrame,
       evalRel: DataFrame, cap: Int): DataFrame = {
     val (tCand, eCand) = matrixCandidates(train, evalRel)
     // Rank BEFORE the position join: the cap must bound the join's
@@ -1131,7 +1131,7 @@ object SubstringDedup {
     *  - **recompute arm**: gram-explode + distinct only the MATCHED
     *    eval sliver — pays the explode, but the join side shrinks to
     *    the sliver.
-    * Measured (DeconMeasure's arm table, sf1 = the 10×-replicated
+    * Measured (`graft.Measure decon`'s arm table, sf1 = the 10×-replicated
     * fixture, whose replication cross-saturates the deciles): the
     * recompute arm wins every regime where ANY meaningful fraction of
     * the suite goes unmatched — daily split ratio 0.642: 5.7 s vs

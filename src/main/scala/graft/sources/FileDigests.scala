@@ -137,7 +137,7 @@ object FileDigests {
   private[sources] val filesScanned = new java.util.concurrent.atomic.LongAdder
   private[sources] val fullScans = new java.util.concurrent.atomic.LongAdder
   private[sources] val pinnedScans = new java.util.concurrent.atomic.LongAdder
-  /** Observability snapshot for benches (ColdServeBench): how digests
+  /** Observability snapshot for benches (`graft.Measure cold-serve`): how digests
     * were served since JVM start. */
   def counters: Map[String, Long] = Map(
     "scanned" -> filesScanned.sum(), "composed" -> composedServes.sum(),
@@ -295,7 +295,7 @@ object FileDigests {
     }
   }
 
-  /** Bench hook (SidecarBench, VERDICT r18 next-3): pay exactly the
+  /** Bench hook (`graft.Measure sidecar`, VERDICT r18 next-3): pay exactly the
     * first-load path for `dir` — what a fresh JVM's first digest call
     * pays before composing — so the load can be timed and its heap
     * priced without a corpus in the loop. */
